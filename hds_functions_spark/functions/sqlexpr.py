@@ -39,8 +39,6 @@ __all__ = [
     "sq_dist_fold_sql",
     "quote_ident",
     "stable_hash64_sql",
-    "char_ngrams_sql",
-    "minhash_signature_sql",
     "band_hash_sql",
 ]
 
@@ -95,47 +93,6 @@ def stable_hash64_sql(s: str) -> str:
     ``conv(substring(md5(s), 1, 15), 16, 10)`` cast to bigint. (The
     DuckDB spelling lives in ``functions.hashing.stable_hash_sql``.)"""
     return f"cast(conv(substring(md5({s}), 1, 15), 16, 10) as bigint)"
-
-
-def char_ngrams_sql(c: str, n: int) -> str:
-    """Spark-SQL text of :func:`functions.text.char_ngrams`: the same
-    zip_with fold over ``n`` shifted slices of ``split(c, '')``, with
-    the same short-text empty-array guard. ``c`` is evaluated in as
-    many places as the Column builder evaluated it — identical
-    evaluation-count discipline, identical results."""
-    chars = f"split({c}, '')"
-    m = f"(size({chars}) - {n - 1})"
-    grams = f"slice({chars}, 1, {m})"
-    for k in range(1, n):
-        part = f"slice({chars}, {k + 1}, {m})"
-        grams = f"zip_with({grams}, {part}, (a, b) -> concat(a, b))"
-    return (
-        f"case when length({c}) < {n} "
-        f"then cast(array() as array<string>) else {grams} end"
-    )
-
-
-def minhash_signature_sql(
-    text_sql: str, shingle_size: int, constants, prime: int
-) -> str:
-    """Spark-SQL text of the full MinHash signature expression
-    (``operators.dedup.minhash_signatures``): distinct lowercased
-    char-shingle hashes reduced mod ``prime``, let_-bound via the same
-    ``get(transform(array(v), hs -> body), 0)`` single-evaluation
-    trick, one ``array_min`` per (a, b) permutation. Pure integer and
-    string arithmetic — results are exactly those of the Column-API
-    builder; the rendering exists because that builder cost
-    O(num_hashes) py4j round trips per call."""
-    grams = char_ngrams_sql(f"lower({text_sql})", shingle_size)
-    hashes = (
-        f"transform(array_distinct({grams}), "
-        f"s -> {stable_hash64_sql('s')} % {prime})"
-    )
-    perms = ",".join(
-        f"array_min(transform(hs, h -> ((h * {a}) + {b}) % {prime}))"
-        for a, b in constants
-    )
-    return f"get(transform(array({hashes}), hs -> array({perms})), 0)"
 
 
 def band_hash_sql(sig_sql: str, lo: int, hi: int) -> str:

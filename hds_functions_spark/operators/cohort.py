@@ -290,7 +290,9 @@ def apply_inclusion_criteria(
     Improvements over the reference (semantics unchanged): when a flowchart
     is requested the flagged plan is consumed twice (flowchart aggregation +
     final filter) — ``cache_flags=True`` caches it across the two actions
-    instead of recomputing; ``table_directory`` is forwarded to
+    instead of recomputing (a tracked persist, so
+    :func:`~hds_functions_spark.caching.release_operator_caches` frees
+    it once the result is written); ``table_directory`` is forwarded to
     :func:`~hds_functions_spark.sources.tables.save_table`.
     """
     validate_inclusion_criteria(cohort, inclusion_criteria)
@@ -302,7 +304,15 @@ def apply_inclusion_criteria(
         from ..sources.tables import save_table
 
         if cache_flags:
-            cohort_flagged = cohort_flagged.cache()
+            # tracked (released by release_operator_caches) at the
+            # level .cache() uses
+            from pyspark.storagelevel import StorageLevel
+
+            from ..caching import tracked_persist
+
+            cohort_flagged = tracked_persist(
+                cohort_flagged, StorageLevel.MEMORY_AND_DISK_DESER
+            )
         flowchart = create_inclusion_flowchart(
             cohort_flagged, inclusion_criteria, row_id_col, person_id_col
         )

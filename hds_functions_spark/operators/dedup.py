@@ -11,10 +11,11 @@ Scale notes (100 TB design):
 - exact dedup is a window ``row_number()==1`` keyed by the dedup key —
   one hash-partition exchange; Catalyst compiles the filter to
   ``WindowGroupLimit`` so each map task pre-prunes to one row per key.
-- MinHash signatures are computed in a single projection (array
-  expressions over shingles, no shuffle); LSH banding explodes to
-  ``bands`` rows per doc (bounded, controlled) and groups by band hash —
-  candidate pairs never require the quadratic cross join.
+- MinHash signatures explode each doc into shingle rows and take one
+  ``min`` per permutation in a group-by: one hash exchange, fed by
+  partial aggregates of one row per doc per map task. LSH banding
+  explodes to ``bands`` rows per doc (bounded, controlled) and groups by
+  band hash — candidate pairs never require the quadratic cross join.
 - n-gram Jaccard is exact and quadratic in *candidate* pairs only: it
   joins on shared shingles, so disjoint documents never pair up.
 """
@@ -30,7 +31,7 @@ from ..functions.hashing import (
     stable_hash64,
 )
 from ..functions.partitioning import ensure_min_partitions
-from ..functions.text import char_ngrams, tokens, word_ngrams
+from ..functions.text import tokens, word_ngrams
 
 __all__ = [
     "exact_dedup",
@@ -92,12 +93,6 @@ def duplicate_groups(df: DataFrame, subset: list[str], id_col: str) -> DataFrame
 
 # --- MinHash -------------------------------------------------------------
 
-def _shingle_hashes(text_col: Column, shingle_size: int) -> Column:
-    """Distinct char-shingle hashes of lowercased text, reduced mod p."""
-    shingles = F.array_distinct(char_ngrams(F.lower(text_col), shingle_size))
-    return F.transform(shingles, lambda s: stable_hash64(s) % MERSENNE_PRIME_31)
-
-
 #: Skew guard for the LSH band joins (guide §2.5): a bucket with n rows
 #: emits ~n^2/2 candidate pairs from ONE join key — skew that AQE cannot
 #: fix, because both its skew-join splitter and its partition coalescing
@@ -115,18 +110,23 @@ def _shingle_hashes(text_col: Column, shingle_size: int) -> Column:
 _LSH_BUCKET_CHUNK = 1024
 
 
-#: Deterministic sampling rate for hot-bucket detection: counting every
-#: bucket exactly would re-run the full signature pass for the count
-#: branch (a third concurrent consumer racing the sigs persist —
-#: profiled r17: task time +28%/+84% on dedup_minhash_pairs /
-#: dedup_incremental). The id-hash predicate pushes BELOW the signature
-#: projection to the scan, so the detection branch reads 1/R of the
-#: corpus. Estimation noise is harmless by construction: the grid is
+#: Deterministic sampling rate for hot-bucket detection. Detection reads
+#: the PERSISTED signature frame, so its one eager job materialises the
+#: full signature cache (which the pair join then reads); the id-hash
+#: sample only thins the bucket-count shuffle to 1/R of the banded rows.
+#: Estimation noise is harmless by construction: the grid is
 #: pair-set-identical for ANY consistent per-bucket S >= 1 — S only
 #: shapes parallelism. A bucket must be ~R rows past the chunk before
 #: detection is even statistically visible, exactly the regime where
 #: splitting matters.
 _LSH_HOT_SAMPLE = 64
+
+
+#: Salt of the grid home-cell hash, so home cells are independent of the
+#: ``xxhash64(id) % _LSH_HOT_SAMPLE`` detection sample (unsalted, the
+#: sampled rows would all land in cell 0 whenever S shares a factor
+#: with the sampling rate).
+_LSH_HOME_SALT = 1
 
 
 def _hot_buckets(banded, id_col: str, chunk: "int | None" = None):
@@ -172,8 +172,11 @@ def _detect_hot_buckets(banded, id_col: str):
     concurrent consumer of the signature persist), a steep tax on the
     common path for a defense that almost never fires. With the literal
     frame the no-hot-bucket path keeps the exact pre-grid join shape
-    and pays ONE sampled detection job; the hot path joins a
-    LocalRelation the planner broadcasts without extra jobs."""
+    and pays ONE detection job; the hot path joins a LocalRelation the
+    planner broadcasts without extra jobs. Callers pass the banded
+    PERSISTED signature frame: the cache manager substitutes its
+    in-memory relation anyway, so this job is the one that fills the
+    signature cache."""
     hot = _hot_buckets(banded, id_col)
     rows = (
         hot.orderBy(F.col("_s").desc(), "band", "band_hash")
@@ -193,7 +196,9 @@ def _attach_grid(banded, hot, id_col: str):
     return banded.join(hot, on=["band", "band_hash"], how="left").select(
         *[c for c in banded.columns],
         s.alias("_s"),
-        F.pmod(F.xxhash64(F.col(id_col)), s).cast("int").alias("_home"),
+        F.pmod(F.xxhash64(F.col(id_col), F.lit(_LSH_HOME_SALT)), s)
+        .cast("int")
+        .alias("_home"),
     )
 
 
@@ -210,31 +215,78 @@ def minhash_signatures(
     num_hashes: int = 32,
     shingle_size: int = 5,
 ) -> DataFrame:
-    """(id, signature array<long>) — one min per universal-hash permutation.
+    """(id, signature array<long>) — one min per universal-hash permutation
+    over the lowercased char-shingle hashes of each document.
 
-    Single narrow projection: shingle -> hash -> H permutation minima, all
-    array expressions. Documents shorter than the shingle size get an
-    all-null signature (no shingles). The shingle-hash array is
-    ``let_``-bound so the md5 shingle pass runs ONCE per document, not
-    once per permutation (the projected-alias spelling re-evaluated it
-    ``num_hashes`` times — measured 2.05x end-to-end at sf0.1; see
-    functions/exprs.py).
+    Plan: split the lowercased text into code points once per document,
+    ``explode_outer`` the shingle start positions, hash each shingle
+    (``concat`` of ``shingle_size`` ``element_at`` lookups, then
+    ``stable_hash64 % p``), and take one ``min((h*a + b) % p)`` per
+    permutation in a group-by. Every step is a plain expression that
+    whole-stage codegen compiles; no lambda higher-order function runs
+    per shingle. The group-by is ONE hash exchange fed by partial
+    aggregates, which is one row per document per map task (a document's
+    shingle rows never leave the task that read it). A min over the
+    shingle multiset equals the min over its set, so no
+    ``array_distinct`` is needed.
+
+    One output row per INPUT row: the group key is a per-row id
+    (``monotonically_increasing_id``) plus ``id_col``, so duplicate and
+    null ids keep a row each, as a per-row projection would. Documents
+    shorter than the shingle size (and null texts) get an all-null
+    signature of ``num_hashes`` elements.
     """
-    from ..functions.sqlexpr import minhash_signature_sql, quote_ident
+    from ..functions.sqlexpr import stable_hash64_sql
 
     constants = minhash_permutation_constants(num_hashes)
-    # SQL-text rendering (one F.expr parse) of the let_-bound
-    # shingle-hash + per-permutation array_min tree the Column API used
-    # to build in O(num_hashes) py4j round trips — ~0.7 s of driver
-    # time per call at num_hashes=32. Same expressions, same results;
-    # identity pinned by tests/test_sqlexpr.py.
-    sig = F.expr(
-        minhash_signature_sql(
-            quote_ident(text_col), shingle_size, constants,
-            MERSENNE_PRIME_31,
-        )
+    p, k = MERSENNE_PRIME_31, shingle_size
+    lowered = df.select(
+        F.monotonically_increasing_id().alias("_mh_row"),
+        F.col(id_col),
+        F.lower(F.col(text_col)).alias("_mh_t"),
     )
-    return df.select(F.col(id_col), sig.alias("signature"))
+    # split BELOW the generator: in the generator's own select the
+    # split would be projected above it and re-run once per shingle
+    chars = lowered.select(
+        "_mh_row",
+        F.col(id_col),
+        F.split(F.col("_mh_t"), "").alias("_mh_c"),
+        F.length(F.col("_mh_t")).alias("_mh_n"),
+    )
+    # positions 1..n-k+1; null when the text is shorter than a shingle
+    # (sequence(1, 0) would count DOWN), so explode_outer emits one
+    # null-shingle row and every min comes out null
+    positions = F.expr(
+        f"case when _mh_n >= {k} then sequence(1, _mh_n - {k - 1}) end"
+    )
+    # element_at on the code-point array, never substring(text, pos, k):
+    # UTF8String substring walks code points from the start, O(n^2) per doc
+    shingle = "concat(" + ", ".join(
+        "element_at(_mh_c, _mh_p" + (f" + {j})" if j else ")")
+        for j in range(k)
+    ) + ")"
+    hashed = chars.select(
+        "_mh_row",
+        F.col(id_col),
+        "_mh_c",
+        F.explode_outer(positions).alias("_mh_p"),
+    ).select(
+        "_mh_row",
+        F.col(id_col),
+        F.expr(f"{stable_hash64_sql(shingle)} % {p}").alias("_mh_h"),
+    )
+    # one F.expr parse for the whole signature (a Column-API tree costs
+    # O(num_hashes) py4j round trips of driver time)
+    sig = F.expr(
+        "array("
+        + ", ".join(f"min(((_mh_h * {a}) + {b}) % {p})" for a, b in constants)
+        + ")"
+    )
+    return (
+        hashed.groupBy("_mh_row", id_col)
+        .agg(sig.alias("signature"))
+        .select(F.col(id_col), "signature")
+    )
 
 
 def minhash_pairs(
@@ -254,6 +306,11 @@ def minhash_pairs(
     band-content hash — no cross join). Output: ``id_a < id_b``,
     ``est_jaccard`` = fraction of agreeing signature positions, filtered to
     ``>= min_jaccard``.
+
+    EAGER: construction runs one Spark job, the hot-bucket detection
+    (``_detect_hot_buckets``). It reads the signature frame, so with
+    ``persist_signatures=True`` (the default) that job computes every
+    signature and fills the signature cache the returned plan reads.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     rows_per_band = num_hashes // bands
@@ -266,10 +323,9 @@ def minhash_pairs(
     # widen thin inputs: the md5 shingle hashing below is the expensive part
     # and must not run on one input split (ensure_min_partitions is a no-op
     # on already-parallel inputs)
-    sigs_raw = minhash_signatures(
+    sigs = minhash_signatures(
         ensure_min_partitions(df), id_col, text_col, num_hashes, shingle_size
     )
-    sigs = sigs_raw
     if persist_signatures:
         # the signature table is consumed four times (two band-join branches
         # + two re-attach joins); persisting computes the md5 shingle
@@ -278,7 +334,7 @@ def minhash_pairs(
         # Tracked: release_operator_caches() reclaims it post-materialise.
         from ..caching import tracked_persist
 
-        sigs = tracked_persist(sigs_raw)
+        sigs = tracked_persist(sigs)
 
     # band hash via concat_ws over element_at — plain (codegen-able)
     # expressions, unlike a slice/transform/array_join HOF chain which
@@ -324,12 +380,7 @@ def minhash_pairs(
     # so the pair SET is identical to the ungridded join; with no hot
     # bucket detected (every realistic corpus) the join shape below is
     # byte-identical to the ungridded one
-    # detection reads the UNPERSISTED signature frame: through the
-    # persisted one the cache barrier blocks the 1/64 sample pushdown
-    # (adjudicated r17: all three spellings — baseline, detection via
-    # persisted sigs, detection via raw sigs — profile within +-0.3 s
-    # cold at sf0.1; raw-sigs detection has the lowest task time)
-    hot = _detect_hot_buckets(_banded(sigs_raw), id_col)
+    hot = _detect_hot_buckets(banded, id_col)
     if hot is None:
         left = banded.select(
             F.col(id_col).alias("id_a"), "band", "band_hash"
@@ -1276,6 +1327,10 @@ def minhash_pairs_incremental(
     needs only its banded bucket table (in practice persisted/bucketed
     once and reused per batch), and each ingest pays work proportional
     to its own size.
+
+    EAGER: construction runs one Spark job, the hot-bucket detection
+    over both persisted signature frames; that job computes every
+    signature of the batch AND the corpus and fills both caches.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     rows_per_band = num_hashes // bands
@@ -1289,10 +1344,8 @@ def minhash_pairs_incremental(
 
     from ..caching import tracked_persist
 
-    new_sigs_raw = prep(new_docs)
-    corpus_sigs_raw = prep(corpus)
-    new_sigs = tracked_persist(new_sigs_raw)
-    corpus_sigs = tracked_persist(corpus_sigs_raw)
+    new_sigs = tracked_persist(prep(new_docs))
+    corpus_sigs = tracked_persist(prep(corpus))
 
     from ..functions.sqlexpr import band_hash_sql
 
@@ -1334,10 +1387,8 @@ def minhash_pairs_incremental(
     # per-bucket S via the shared literal frame, so pair (a, b) meets
     # once at (home(a), home(b)). A standing-corpus hot bucket is THE
     # skew case for continuous ingest — every nightly batch re-joins it.
-    # detection reads the UNPERSISTED signature frames (cache-barrier
-    # pushdown note in minhash_pairs)
     hot = _detect_hot_buckets(
-        banded(corpus_sigs_raw).unionByName(banded(new_sigs_raw)), id_col
+        banded(corpus_sigs).unionByName(banded(new_sigs)), id_col
     )
     if hot is None:
         probe = banded(new_sigs).select(

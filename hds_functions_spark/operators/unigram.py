@@ -237,8 +237,15 @@ def _smoothed_probs_py(cnts: "dict[str, int]") -> "dict[str, float]":
     former Spark ``cast("double")`` division (CPython's int/int true
     division is correctly rounded). Smoothing keeps every kept piece
     strictly positive, so no zero-probability path can make the DP
-    degenerate."""
+    degenerate. Raises ``ValueError`` when ``total + |vocab|`` reaches
+    2**53, where the bit-identity no longer holds (every ``cnt + 1`` is
+    at most that denominator, so one check covers both operands)."""
     total, nv = sum(cnts.values()), len(cnts)
+    if total + nv >= 2**53:
+        raise ValueError(
+            f"piece count total + |vocab| = {total + nv} is not below "
+            "2**53: the double division would not be exact"
+        )
     return {p: (c + 1) / (total + nv) for p, c in cnts.items()}
 
 

@@ -94,6 +94,28 @@ def test_flowchart_saved_via_table_directory(cohort, tmp_path):
     assert saved.count() == 3
 
 
+def test_flowchart_cache_released(cohort, tmp_path):
+    """The flagged frame cached for the flowchart is tracked: once the
+    result is written, release_operator_caches() leaves no persisted
+    RDD behind."""
+    from hds_functions_spark.caching import release_operator_caches
+
+    jsc = cohort.sparkSession.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    directory = {"fc": {"path": str(tmp_path / "fc"), "format": "parquet"}}
+    out = apply_inclusion_criteria(
+        cohort, CRITERIA, flowchart_table="fc", table_directory=directory
+    )
+    out.write.parquet(str(tmp_path / "out"))
+    assert persisted() - before  # the flowchart pass filled the cache
+    release_operator_caches()
+    assert not persisted() - before
+
+
 def test_validate_inclusion_criteria_errors(cohort):
     with pytest.raises(TypeError, match="must be a dictionary"):
         validate_inclusion_criteria(cohort, [("a", "b")])

@@ -59,6 +59,95 @@ def test_minhash_signature_properties(docs):
     assert all(v is None for v in sigs[5])  # too short for shingles
 
 
+# texts where the shingle plan could diverge from a per-row spelling:
+# empty/null/short/exactly-k, non-BMP code points, combining marks, and
+# case maps that change the length (İ) or are context-dependent (Σ)
+EDGE_TEXTS = [
+    (1, ""),
+    (2, None),
+    (3, "abc"),
+    (4, "abcde"),
+    (5, "hi 😀 there 😀😀 emoji 🧑‍🚀"),
+    (6, "cafe\u0301 combining e\u0301\u0301 marks"),
+    (7, "İSTANBUL ΣΟΦΊΑ ΟΔΌΣ İİİ"),
+    (8, "ﬃ ligature ß STRASSE ﬃﬃ"),
+    (9, "aaaaaaa"),
+    (10, BASE),
+    (11, "x"),
+]
+
+
+def _reference_signatures(text, num_hashes, shingle_size=5):
+    """The former per-row spelling of minhash_signatures: let_-bound
+    distinct shingle hashes, one array_min per permutation (lambda
+    higher-order functions throughout)."""
+    from hds_functions_spark.functions.exprs import let_
+    from hds_functions_spark.functions.hashing import (
+        MERSENNE_PRIME_31,
+        minhash_permutation_constants,
+        stable_hash64,
+    )
+    from hds_functions_spark.functions.text import char_ngrams
+
+    def permute(a, b):
+        return lambda h: (h * a + b) % MERSENNE_PRIME_31
+
+    shingles = F.array_distinct(char_ngrams(F.lower(text), shingle_size))
+    hashes = F.transform(
+        shingles, lambda s: stable_hash64(s) % MERSENNE_PRIME_31
+    )
+    return let_(
+        hashes,
+        lambda hs: F.array(
+            *[
+                F.array_min(F.transform(hs, permute(a, b)))
+                for a, b in minhash_permutation_constants(num_hashes)
+            ]
+        ),
+    )
+
+
+@pytest.mark.parametrize("num_hashes", [16, 32, 128])
+def test_minhash_signatures_match_reference(spark, num_hashes):
+    """Bit-identical to the per-row spelling. 128 permutations exceed
+    spark.sql.codegen.maxFields, so the aggregate runs without
+    whole-stage codegen there: same results, only slower."""
+    df = spark.createDataFrame(EDGE_TEXTS, "doc_id: long, text: string")
+    ref = {
+        r["doc_id"]: r["s"]
+        for r in df.select(
+            "doc_id", _reference_signatures(F.col("text"), num_hashes).alias("s")
+        ).collect()
+    }
+    got = minhash_signatures(df, num_hashes=num_hashes).collect()
+    assert len(got) == len(EDGE_TEXTS)
+    assert {r["doc_id"]: r["signature"] for r in got} == ref
+    assert all(len(sig) == num_hashes for sig in ref.values())
+
+
+def test_minhash_signatures_one_row_per_input_row(spark):
+    """Duplicate and null ids keep one row per input row (the group-by
+    key is a per-row id, not the document id)."""
+    df = spark.createDataFrame(
+        [(1, BASE), (1, "another text for the same id"), (None, BASE),
+         (None, "xy"), (None, None)],
+        "doc_id: long, text: string",
+    )
+    from collections import Counter
+
+    ref = Counter(
+        (r["doc_id"], tuple(r["s"]))
+        for r in df.select(
+            "doc_id", _reference_signatures(F.col("text"), 16).alias("s")
+        ).collect()
+    )
+    got = Counter(
+        (r["doc_id"], tuple(r["signature"]))
+        for r in minhash_signatures(df, num_hashes=16).collect()
+    )
+    assert got == ref and sum(got.values()) == 5
+
+
 def test_minhash_pairs_finds_duplicates(docs):
     pairs = minhash_pairs(docs.filter("doc_id < 5"), num_hashes=16, bands=4)
     got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in pairs.collect()}

@@ -63,6 +63,22 @@ def test_quantized_topk_broadcasts_queries(emb):
     assert "WindowGroupLimit" in plan
 
 
+def test_minhash_signatures_no_lambda(docs):
+    """The signature plan is plain expressions that whole-stage codegen
+    compiles: no interpreted lambda higher-order function may appear."""
+    from hds_functions_spark.operators.dedup import minhash_signatures
+
+    sigs = minhash_signatures(docs.select("doc_id", "text"))
+    plan = _plan(sigs)
+    assert "lambdafunction" not in plan.lower(), plan
+    # after execution the final plan shows the shingle generator and the
+    # partial min aggregate inside one whole-stage codegen stage (*(n))
+    sigs.collect()
+    final = _plan(sigs).splitlines()
+    for op in ("Generate explode", "partial_min"):
+        assert any(op in line and "*(" in line for line in final), (op, final)
+
+
 def test_substring_signal_no_gram_text_in_shuffle(docs):
     """Grams hash to longs BEFORE the exchange: no string gram column may
     appear in any Exchange's output schema."""

@@ -261,89 +261,15 @@ TEXTS = [
 ]
 
 
-def test_char_ngrams_sql_identity(spark):
-    from hds_functions_spark.functions.sqlexpr import char_ngrams_sql
-    from hds_functions_spark.functions.text import char_ngrams
-
-    df = spark.createDataFrame(TEXTS, "id int, text string")
-    for n in (2, 5):
-        ref = char_ngrams(F.lower(F.col("text")), n)
-        got = F.expr(char_ngrams_sql("lower(`text`)", n))
-        bad = (
-            df.select(ref.alias("r"), got.alias("g"))
-            .filter(~((F.col("r").isNull() & F.col("g").isNull()) | (F.col("r") == F.col("g"))))
-            .count()
-        )
-        assert bad == 0, f"n={n}"
-
-
-def test_minhash_signature_sql_identity(spark):
-    """The SQL-rendered signature must equal the let_-bound Column-API
-    tree it replaced, element for element, including null/short rows."""
-    from hds_functions_spark.functions.exprs import let_
-    from hds_functions_spark.functions.hashing import (
-        MERSENNE_PRIME_31,
-        minhash_permutation_constants,
-        stable_hash64,
-    )
-    from hds_functions_spark.functions.sqlexpr import (
-        minhash_signature_sql,
-        quote_ident,
-    )
-    from hds_functions_spark.functions.text import char_ngrams
-
-    num_hashes, shingle = 16, 5
-    constants = minhash_permutation_constants(num_hashes)
-
-    def permute(a, b):
-        return lambda h: (h * a + b) % MERSENNE_PRIME_31
-
-    shingles = F.array_distinct(char_ngrams(F.lower(F.col("text")), shingle))
-    hashes = F.transform(
-        shingles, lambda s: stable_hash64(s) % MERSENNE_PRIME_31
-    )
-    ref = let_(
-        hashes,
-        lambda hs: F.array(
-            *[F.array_min(F.transform(hs, permute(a, b))) for a, b in constants]
-        ),
-    )
-    got = F.expr(
-        minhash_signature_sql(
-            quote_ident("text"), shingle, constants, MERSENNE_PRIME_31
-        )
-    )
-    df = spark.createDataFrame(TEXTS, "id int, text string")
-    rows = df.select("id", ref.alias("r"), got.alias("g")).collect()
-    assert len(rows) == len(TEXTS)
-    for r in rows:
-        assert r.r == r.g, (r.id, r.r, r.g)
-
-
 def test_band_hash_sql_identity(spark):
-    from hds_functions_spark.functions.hashing import (
-        MERSENNE_PRIME_31,
-        minhash_permutation_constants,
-        stable_hash64,
-    )
-    from hds_functions_spark.functions.sqlexpr import (
-        band_hash_sql,
-        minhash_signature_sql,
-        quote_ident,
-    )
+    from hds_functions_spark.functions.hashing import stable_hash64
+    from hds_functions_spark.functions.sqlexpr import band_hash_sql
+    from hds_functions_spark.operators.dedup import minhash_signatures
 
     num_hashes, bands = 16, 4
     rpb = num_hashes // bands
-    constants = minhash_permutation_constants(num_hashes)
     df = spark.createDataFrame(TEXTS, "id int, text string")
-    sigs = df.select(
-        "id",
-        F.expr(
-            minhash_signature_sql(
-                quote_ident("text"), 5, constants, MERSENNE_PRIME_31
-            )
-        ).alias("signature"),
-    )
+    sigs = minhash_signatures(df, "id", num_hashes=num_hashes)
     for b in range(bands):
         lo, hi = b * rpb + 1, (b + 1) * rpb
         elems = [

@@ -198,6 +198,17 @@ def test_validation_errors(spark):
         unigram_train(docs, n_iterations=0)
 
 
+def test_smoothed_probs_exactness_bound():
+    """The driver-side M-step is bit-identical to a Spark double division
+    only while total + |vocab| < 2**53; at the bound it refuses."""
+    from hds_functions_spark.operators.unigram import _smoothed_probs_py
+
+    assert _smoothed_probs_py({"a": 1, "b": 2}) == {"a": 2 / 5, "b": 3 / 5}
+    assert _smoothed_probs_py({"a": 2**53 - 3, "b": 0})["b"] == 1 / (2**53 - 1)
+    with pytest.raises(ValueError, match="2\\*\\*53"):
+        _smoothed_probs_py({"a": 2**53 - 2, "b": 0})
+
+
 def test_single_chars_always_survive_prune(spark):
     # max_vocab=1 starves multi-char pieces; single chars must remain
     # so every word stays segmentable
