@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .caching import scratch_path, shared_artifact
 from .functions.dates import parse_date_instruction
 from .operators.cohort import apply_inclusion_criteria, create_inclusion_columns, create_inclusion_flowchart
 from .operators.privacy import redact_low_counts, round_counts_to_multiple
@@ -28,14 +29,6 @@ from .sources.tables import standardise_table
 
 QUERIES: dict = {}
 ORACLES: dict[str, str] = {}
-
-
-def _stable_dir_tag(sf_dir: str) -> str:
-    """Process-stable tag for per-sf temp dirs (``hash()`` is salted per
-    interpreter, which would leak one dir per run)."""
-    import hashlib
-
-    return hashlib.md5(sf_dir.encode()).hexdigest()[:10]
 
 
 def _register(name: str, oracle: str | None = None):
@@ -58,19 +51,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     is resolved once per (session, path) and the resulting *unexecuted
     logical plan* is reused, exactly as a catalog temp view would be. No
     data or results are cached: every action still scans the parquet
-    files. The memo lives on the session object so a new session (or a
-    different sf_dir) resolves fresh.
+    files. The memo is the session's shared-artifact store
+    (``caching.shared_artifact``), so a new session (or a different
+    sf_dir) resolves fresh.
     """
-    memo = spark.__dict__.setdefault("_hds_table_memo", {})
-    key = (sf_dir, name)
-    df = memo.get(key)
-    if df is None:
-        if name == "events":
-            df = _load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        memo[key] = df
-    elif name == "events":
+    df = shared_artifact(
+        spark, sf_dir, f"table:{name}",
+        lambda: _load_events(spark, sf_dir) if name == "events"
+        else spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+    )
+    if name == "events":
         # the events plan is conf-sensitive at EXECUTION time: the
         # ntz->timestamp cast reads the session zone, and the
         # TIMESTAMP(NANOS) layout's footer conversion reads
@@ -516,15 +506,10 @@ def table_archive_roundtrip(spark, sf_dir):
     table_management.py:74-82). Each snapshot holds a disjoint slice of
     orders so only correct 'latest' semantics reproduces the oracle."""
     import os
-    import shutil
-    import tempfile
 
     from .sources.tables import load_table, save_archive_snapshot
 
-    base = os.path.join(
-        tempfile.gettempdir(), "hds_archive_rt_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(base, ignore_errors=True)  # append-mode: never accumulate
+    base = scratch_path(spark, sf_dir, "archive_rt")
     td = {"arch": {"path": os.path.join(base, "arch"), "format": "parquet"}}
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     for i, day in enumerate(("2024-01-01", "2024-02-01", "2024-03-01")):
@@ -563,15 +548,10 @@ def table_upsert_incremental(spark, sf_dir):
     Only correct upsert key semantics AND the exclusive lower bound
     reproduce the oracle."""
     import os
-    import shutil
-    import tempfile
 
     from .sources.tables import load_table, save_archive_snapshot, upsert_table
 
-    base = os.path.join(
-        tempfile.gettempdir(), "hds_upsert_inc_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(base, ignore_errors=True)  # stateful dirs: never accumulate
+    base = scratch_path(spark, sf_dir, "upsert_inc")
     td = {
         "ups": {"path": os.path.join(base, "ups"), "format": "parquet"},
         "arch": {"path": os.path.join(base, "arch"), "format": "parquet"},
@@ -612,9 +592,6 @@ def config_csv_roundtrip(spark, sf_dir):
     csv_utils.py:51-105) then read back with read_csv_file (pandas ->
     createDataFrame, csv_utils.py:18-48). Only a faithful round-trip of
     values AND inferred types reproduces the oracle."""
-    import os
-    import tempfile
-
     from .sources.config_io import read_csv_file, write_csv_file
 
     agg = (
@@ -627,9 +604,7 @@ def config_csv_roundtrip(spark, sf_dir):
             ),
         )
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"hds_csv_roundtrip_{_stable_dir_tag(sf_dir)}.csv"
-    )
+    path = scratch_path(spark, sf_dir, "csv_roundtrip")
     write_csv_file(agg, path)
     return read_csv_file(path)
 
@@ -658,17 +633,12 @@ def config_dict_map(spark, sf_dir):
     dict via create_dict_from_csv (duplicate-key guard, reference
     csv_utils.py:108-177), applied with map_column_values (literal
     create_map lookup), aggregated per mapped value."""
-    import os
-    import tempfile
-
     from .sources.config_io import create_dict_from_csv, write_csv_file
 
     mapping_df = spark.createDataFrame(
         sorted(_TIER_MAP.items()), "priority: string, tier: string"
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"hds_dict_map_{_stable_dir_tag(sf_dir)}.csv"
-    )
+    path = scratch_path(spark, sf_dir, "dict_map")
     write_csv_file(mapping_df, path)
     mapping = create_dict_from_csv(path, "priority", "tier")
     mapped = map_column_values(
@@ -691,14 +661,9 @@ def config_json_map(spark, sf_dir):
     """§2.6 JSON config lifecycle: the mapping written with write_json_file,
     re-read with the duplicate-key-rejecting read_json_file (reference
     json_utils.py:10-99), then applied and aggregated."""
-    import os
-    import tempfile
-
     from .sources.config_io import read_json_file, write_json_file
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"hds_json_map_{_stable_dir_tag(sf_dir)}.json"
-    )
+    path = scratch_path(spark, sf_dir, "json_map")
     write_json_file(_TIER_MAP, path)
     mapping = read_json_file(path)
     mapped = map_column_values(
@@ -726,16 +691,9 @@ def source_csv_distributed(spark, sf_dir):
     read_csv_distributed (executor-side scan + schema inference, the path
     the reference's 1000-row driver-side pandas helper cannot take).
     Shortest-round-trip double formatting makes the cents sum exact."""
-    import os
-    import shutil
-    import tempfile
-
     from .sources.config_io import read_csv_distributed
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hds_csv_dist_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_path(spark, sf_dir, "csv_dist")
     (
         _t(spark, sf_dir, "orders")
         .select("o_orderkey", "o_orderstatus", "o_totalprice")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import release_shared_artifact, scratch_path, shared_artifact
 from .functions.hashing import (
     MERSENNE_PRIME_31 as P,
     minhash_permutation_constants,
@@ -52,7 +53,6 @@ from .registry import (
     ORACLES,
     QUERIES,
     _register,
-    _stable_dir_tag,
     _t,
     normalise_event_ts,
 )
@@ -369,37 +369,24 @@ def dedup_minhash_pairs(spark, sf_dir):
 
 _CC_MIN_JACCARD = 0.5
 
-#: Session-scoped cache of the clusters table: (applicationId, sf_dir) ->
-#: persisted DataFrame. Mirrors the production shape — clustering runs once
-#: and every downstream consumer (canonical-doc query, best-of-cluster
-#: curation) reads the persisted table instead of re-running MinHash + CC.
-_CLUSTERS_CACHE: dict[tuple[str, str], object] = {}
-
 
 def _shared_clusters(spark, sf_dir):
+    """The session-shared ``clusters`` artifact: clustering runs once and
+    every downstream consumer (canonical-doc query, best-of-cluster
+    curation) reads the persisted table instead of re-running MinHash +
+    CC."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CLUSTERS_CACHE.get(key)
-    if df is None:
-        df = dedup_clusters(
+    return shared_artifact(
+        spark, sf_dir, "clusters",
+        lambda: dedup_clusters(
             _t(spark, sf_dir, "documents"),
             num_hashes=_MH_NUM_HASHES,
             shingle_size=_MH_SHINGLE,
             bands=_MH_BANDS,
             min_jaccard=_CC_MIN_JACCARD,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _CLUSTERS_CACHE[key] = df
-    return df
-
-
-def reset_shared_clusters(spark, sf_dir) -> None:
-    """Drop the session-scoped persisted clusters table so the next
-    consumer rebuilds it from scratch (the cold path)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CLUSTERS_CACHE.pop(key, None)
-    if df is not None:
-        df.unpersist()
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 @_register(
@@ -454,15 +441,17 @@ FROM reach GROUP BY src
 """,
 )
 def dedup_clusters_build(spark, sf_dir):
-    """COLD-path clustering: drops the session-scoped persisted clusters
-    table and rebuilds it end-to-end (MinHash signatures -> banded LSH
-    pairs -> alternating large-star/small-star connected components).
+    """COLD-path clustering: releases the session's ``clusters`` artifact
+    (``caching.release_shared_artifact``, which unpersists the table) and
+    rebuilds it end-to-end (MinHash signatures -> banded LSH pairs ->
+    alternating large-star/small-star connected components).
 
     Exists so the bench suite always times the real clustering cost under
-    its own name — ``dedup_clusters_cc`` and ``pipeline_best_of_cluster``
-    read the shared persisted table (the production shape) and therefore
-    time a cache read whenever clustering already ran this session."""
-    reset_shared_clusters(spark, sf_dir)
+    its own name — the other ``clusters`` group members (see
+    ``bench_groups.SHARED_CACHE_GROUPS``) read the shared persisted table
+    (the production shape) and therefore time a cache read whenever
+    clustering already ran this session."""
+    release_shared_artifact(spark, sf_dir, "clusters")
     return _shared_clusters(spark, sf_dir)
 
 
@@ -3303,10 +3292,6 @@ def source_jsonl_corpus(spark, sf_dir):
     handling, assert zero corrupt rows, and aggregate. The oracle runs
     the same aggregate on the parquet source — any writer/reader drift
     (type mangling, encoding, lost rows) breaks the match."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -3317,10 +3302,7 @@ def source_jsonl_corpus(spark, sf_dir):
 
     from .sources.config_io import read_jsonl_corpus
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hds_jsonl_corpus_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_path(spark, sf_dir, "jsonl_corpus")
     (
         _t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 3 != 0)

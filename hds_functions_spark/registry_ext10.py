@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import scratch_path
 from .functions.hashing import (
     MERSENNE_PRIME_31,
     minhash_permutation_constants,
@@ -681,21 +682,15 @@ def streaming_bloom_decontam(spark, sf_dir):
     when the eval set itself grows, the standing bitmap absorbs the
     delta and the stream keeps probing the merged artifact. See
     streaming/stream_ops.py + operators/bloom.py."""
-    import shutil
-    import tempfile
-
     from .caching import tracked_persist
     from .operators.bloom import bloom_build, bloom_decontam, _doc_grams
     from .operators.sampling import split_bucket
-    from .registry import _stable_dir_tag
     from .streaming.stream_ops import (
         read_parquet_stream,
         stream_score_batches,
     )
 
-    tag = _stable_dir_tag(sf_dir)
-    base = f"{tempfile.gettempdir()}/hds_bloom_stream_{tag}"
-    shutil.rmtree(base, ignore_errors=True)  # deterministic replay
+    base = scratch_path(spark, sf_dir, "bloom_stream")  # deterministic replay
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     bucket = split_bucket("doc_id", _BLOOM_SALT)

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F  # noqa: F401  (used by later queries)
 
+from .caching import scratch_path
 from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 
 # Direct `import hds_functions_spark.registry_extN` must see every
@@ -365,8 +366,6 @@ def pipeline_web_curation(spark, sf_dir):
     Catalyst plan. Oracle: the registered component oracles composed
     over the same bases (see _duck_web_curation_sql)."""
     import os
-    import shutil
-    import tempfile
 
     from .functions.layout import bucket_by_quantiles_desc
     from .operators.bloom import bloom_decontam
@@ -374,7 +373,6 @@ def pipeline_web_curation(spark, sf_dir):
     from .operators.profiling import kn_trigram_logprob_scores
     from .operators.sampling import split_bucket
     from .functions.text import add_language_id, add_quality_score
-    from .registry import _stable_dir_tag
     from .registry_ext6 import _KN_D, _KN_TRAIN_MOD
     from .registry_ext10 import (
 
@@ -385,10 +383,7 @@ def pipeline_web_curation(spark, sf_dir):
     )
     from .sources.warc import read_warc_corpus
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hds_warc_cur_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_path(spark, sf_dir, "warc_cur")
     os.makedirs(path, exist_ok=True)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     wrapped = docs.filter(F.col("doc_id") % _WC_MOD != 1).select(

@@ -33,11 +33,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import scratch_path
 from .registry import (  # noqa: F401
     ORACLES,
     QUERIES,
     _register,
-    _stable_dir_tag,
     _t,
 )
 
@@ -875,9 +875,6 @@ def streaming_image_ingest(spark, sf_dir):
     once; each micro-batch's work is its own decode plus two key-sized
     hash joins — no state store at all (the index is a static frame,
     not streaming state)."""
-    import shutil
-    import tempfile
-
     from .caching import tracked_persist
     from .operators.multimodal import image_signatures
     from .streaming.stream_ops import (
@@ -918,11 +915,9 @@ def streaming_image_ingest(spark, sf_dir):
         .withColumn("_hit_ph", F.lit(True))
     )
 
-    tag = _stable_dir_tag(sf_dir)
-    base = f"{tempfile.gettempdir()}/hds_media_stream_{tag}"
-    # deterministic replay: wipe sink + checkpoint so every invocation
+    # deterministic replay: empty sink + checkpoint so every invocation
     # reprocesses the full (finite) stream from scratch
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_path(spark, sf_dir, "media_stream")
 
     stream = read_parquet_stream(
         spark, f"{sf_dir}/documents.parquet"

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .caching import scratch_path, shared_artifact
 from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 
 # Direct `import hds_functions_spark.registry_extN` must see every
@@ -110,27 +111,21 @@ c{it} AS (
 
 _KM_FINAL = f"asn{_KM_ITER + 1}"
 
-#: Session-scoped fitted-centroid cache, keyed by (applicationId, sf_dir)
-#: — same lifecycle idea as ``registry_ext._shared_clusters``, but the
-#: fit result is k*dim driver-side floats, so there is nothing to persist
-#: or unpersist: both cluster_* queries share one fit (4 Spark jobs) and
-#: re-assignment is a single codegen projection.
-_KMEANS_CACHE: dict[tuple[str, str], list[list[float]]] = {}
-
 
 def _shared_kmeans_centroids(spark, sf_dir) -> list[list[float]]:
+    """The session-shared ``kmeans_centroids`` artifact: k*dim
+    driver-side floats, so there is nothing to persist or unpersist;
+    every consumer shares one fit (4 Spark jobs) and re-assignment is a
+    single codegen projection."""
     from .operators.clustering import kmeans_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _KMEANS_CACHE.get(key)
-    if cents is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        cents = kmeans_fit(
-            emb, k=_KM_K, n_iter=_KM_ITER, dim=_KM_DIM,
-            round_digits=_KM_RD,
-        )
-        _KMEANS_CACHE[key] = cents
-    return cents
+    return shared_artifact(
+        spark, sf_dir, "kmeans_centroids",
+        lambda: kmeans_fit(
+            _t(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+            k=_KM_K, n_iter=_KM_ITER, dim=_KM_DIM, round_digits=_KM_RD,
+        ),
+    )
 
 
 @_register(
@@ -1428,16 +1423,7 @@ def source_orc_roundtrip(spark, sf_dir):
     load_table's format plumbing; the grouped integer-cent aggregate
     over the roundtripped data must equal the oracle computed from the
     original parquet — the roundtrip is exact or the hash breaks."""
-    import os
-    import shutil
-    import tempfile
-
-    from .registry import _stable_dir_tag
-
-    base = os.path.join(
-        tempfile.gettempdir(), "hds_orc_rt_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_path(spark, sf_dir, "orc_rt")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_linestatus", "l_extendedprice"
     )

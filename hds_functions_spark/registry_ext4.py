@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import shared_artifact
 from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 
 # Direct `import hds_functions_spark.registry_extN` must see every
@@ -96,27 +97,21 @@ FROM corners GROUP BY 1
 """
 
 
-#: Session-scoped cache of the thresholded similarity-edge table —
-#: the production shape: the similarity graph is built ONCE and every
-#: graph consumer (CC dedup, triangles, degree audits) reads the
-#: persisted table instead of re-running MinHash + banding. Same
-#: pattern (and lifecycle) as registry_ext._CLUSTERS_CACHE.
-_SIM_EDGES_CACHE: dict = {}
-
-
 def _shared_sim_edges(spark, sf_dir):
+    """The session-shared ``sim_edges`` artifact: the thresholded
+    similarity-edge table is built ONCE and every graph consumer
+    (triangles, weighted PageRank) reads the persisted table instead of
+    re-running MinHash + banding."""
     from pyspark import StorageLevel
 
     from .operators.dedup import minhash_pairs
     from .registry_ext import _MH_BANDS, _MH_NUM_HASHES, _MH_SHINGLE
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIM_EDGES_CACHE.get(key)
-    if df is None:
+    def build():
         docs = _t(spark, sf_dir, "documents").filter(
             F.length("text") >= _MH_SHINGLE
         )
-        df = minhash_pairs(
+        return minhash_pairs(
             docs,
             num_hashes=_MH_NUM_HASHES,
             shingle_size=_MH_SHINGLE,
@@ -124,16 +119,8 @@ def _shared_sim_edges(spark, sf_dir):
         ).filter(
             F.col("est_jaccard") >= _TRI_MIN_JACCARD
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        _SIM_EDGES_CACHE[key] = df
-    return df
 
-
-def reset_shared_sim_edges(spark, sf_dir) -> None:
-    """Drop the session-scoped edge table (the cold path)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIM_EDGES_CACHE.pop(key, None)
-    if df is not None:
-        df.unpersist()
+    return shared_artifact(spark, sf_dir, "sim_edges", build)
 
 
 @_register("graph_triangles", None)  # oracle attached below
@@ -446,35 +433,22 @@ GROUP BY 1, 2 HAVING count(*) >= {_WN_MIN_SHARED}
 """
 
 
-#: Session-scoped cache of the df-capped-input winnowing fingerprint
-#: table (doc_id, fingerprint) — built once, consumed by the full pair
-#: build AND the incremental probe.
-_WINNOW_FP_CACHE: dict = {}
-
-
 def _shared_winnow_fps(spark, sf_dir):
+    """The session-shared ``winnow_fps`` artifact: the df-capped-input
+    winnowing fingerprint table (doc_id, fingerprint), built once and
+    consumed by the full pair build AND the incremental probe."""
     from pyspark import StorageLevel
 
     from .operators.dedup import winnowing_fingerprints
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WINNOW_FP_CACHE.get(key)
-    if df is None:
-        df = winnowing_fingerprints(
+    return shared_artifact(
+        spark, sf_dir, "winnow_fps",
+        lambda: winnowing_fingerprints(
             _t(spark, sf_dir, "documents").select("doc_id", "text"),
             gram_size=_WN_GRAM,
             window=_WN_WINDOW,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        _WINNOW_FP_CACHE[key] = df
-    return df
-
-
-def reset_shared_winnow_fps(spark, sf_dir) -> None:
-    """Drop the session-scoped fingerprint table (the cold path)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _WINNOW_FP_CACHE.pop(key, None)
-    if df is not None:
-        df.unpersist()
+        ).persist(StorageLevel.MEMORY_AND_DISK),
+    )
 
 
 @_register("dedup_winnowing", None)  # oracle attached below

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import shared_artifact
 from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 
 # Direct `import hds_functions_spark.registry_extN` must see every
@@ -345,24 +346,19 @@ codes AS (
     return "WITH " + "".join(parts)
 
 
-#: session-scoped PQ codebook cache (driver-side floats; nothing to
-#: unpersist), keyed like registry_ext2's _KMEANS_CACHE
-_PQ_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _shared_pq_codebooks(spark, sf_dir):
+    """The session-shared ``pq_codebooks`` artifact (driver-side floats;
+    nothing to unpersist)."""
     from .operators.similarity import pq_train
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CACHE.get(key)
-    if books is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        books = pq_train(
-            emb, m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITER, dim=_PQ_DIM,
+    return shared_artifact(
+        spark, sf_dir, "pq_codebooks",
+        lambda: pq_train(
+            _t(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+            m=_PQ_M, k=_PQ_K, n_iter=_PQ_ITER, dim=_PQ_DIM,
             round_digits=_PQ_RD,
-        )
-        _PQ_CACHE[key] = books
-    return books
+        ),
+    )
 
 
 @_register(
@@ -440,6 +436,7 @@ def similarity_pq_adc_knn(spark, sf_dir):
 
 
 # --- PQ recall audit + DSIR curation pipeline -------------------------------
+
 
 def _duck_pq_recall_sql() -> str:
     """Recall@k of the ADC path vs the exact brute-force oracle, composed
@@ -805,23 +802,19 @@ FROM embeddings e CROSS JOIN mean m CROSS JOIN v1f p CROSS JOIN v2f q
 """
 
 
-#: session-scoped fitted-PCA cache (driver floats), the _PQ_CACHE pattern
-_PCA_CACHE: dict[tuple[str, str], tuple] = {}
-
-
 def _shared_pca(spark, sf_dir):
+    """The session-shared ``pca`` artifact: the fitted mean and
+    components (driver-side floats; nothing to unpersist)."""
     from .operators.similarity import pca_power_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    fit = _PCA_CACHE.get(key)
-    if fit is None:
-        emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        fit = pca_power_components(
-            emb, n_components=_PCA_C, n_iter=_PCA_ITER, dim=_PCA_DIM,
+    return shared_artifact(
+        spark, sf_dir, "pca",
+        lambda: pca_power_components(
+            _t(spark, sf_dir, "embeddings").select("vec_id", "embedding"),
+            n_components=_PCA_C, n_iter=_PCA_ITER, dim=_PCA_DIM,
             round_digits=_PCA_RD,
-        )
-        _PCA_CACHE[key] = fit
-    return fit
+        ),
+    )
 
 
 @_register("embedding_pca_projection", _duck_pca_projection_sql())

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import scratch_path
 from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 
 # Direct `import hds_functions_spark.registry_extN` must see every
@@ -935,18 +936,12 @@ def streaming_nb_router(spark, sf_dir):
     is static, scoring is per-row), so the drained result equals the
     batch predictions — which is exactly what the oracle asserts.
     See streaming/stream_ops.py:stream_score_batches."""
-    import shutil
-    import tempfile
-
     from .operators.classify import nb_class_stats, nb_predict, nb_token_loglik
-    from .registry import _stable_dir_tag
     from .streaming.stream_ops import read_parquet_stream, stream_score_batches
 
-    tag = _stable_dir_tag(sf_dir)
-    base = f"{tempfile.gettempdir()}/hds_nb_router_{tag}"
-    # deterministic replay: wipe sink + checkpoint so every invocation
+    # deterministic replay: empty sink + checkpoint so every invocation
     # reprocesses the full (finite) stream from scratch
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_path(spark, sf_dir, "nb_router")
 
     train, _ = _nb_slices(spark, sf_dir)
     from .caching import tracked_persist
@@ -1586,16 +1581,10 @@ def table_tombstone_delete(spark, sf_dir):
     all four counts; only a correct anti-join AND a correct swap
     reproduce n_after (sources/tables.py:tombstone_delete)."""
     import os
-    import shutil
-    import tempfile
 
-    from .registry import _stable_dir_tag
     from .sources.tables import save_table, tombstone_delete
 
-    base = os.path.join(
-        tempfile.gettempdir(), "hds_tombstone_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(base, ignore_errors=True)  # stateful dir: never accumulate
+    base = scratch_path(spark, sf_dir, "tombstone")
     td = {"tbl": {"path": os.path.join(base, "tbl"), "format": "parquet"}}
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     save_table(o, "tbl", table_directory=td)

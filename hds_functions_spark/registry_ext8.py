@@ -23,12 +23,11 @@ round-9 verdict ranked highest:
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
-from .registry import ORACLES, QUERIES, _register, _stable_dir_tag, _t  # noqa: F401
+from .caching import scratch_path, shared_artifact
+from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 from .registry_ext import (
     _DUCK_COS,
     _ND_BANDS,
@@ -76,12 +75,6 @@ newb AS (
   SELECT vec_id, embedding FROM embeddings
   WHERE vec_id % {_ANN_MOD} = {_ANN_REM})"""
 
-#: session-scoped loaded-index caches, keyed like registry_ext2's
-#: _KMEANS_CACHE — build+save+load happens once per (app, sf_dir);
-#: every query then reads the PERSISTED index, which is the point.
-_IVF_IDX_CACHE: dict[tuple[str, str], object] = {}
-_PQ_IDX_CACHE: dict[tuple[str, str], tuple] = {}
-
 
 def _ann_corpus_batch(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -94,18 +87,14 @@ def _ivf_persisted_index(spark, sf_dir):
     """Build the IVF inverted lists from the standing corpus, save them
     partitioned by centroid_id (one directory per inverted list — the
     layout that lets a probe read only its probed lists), and return
-    the RELOADED table. Cached per session so every incremental query
-    exercises the persisted artifact, never the in-memory lineage."""
+    the RELOADED table as the session-shared ``ivf_index`` artifact, so
+    every incremental query exercises the persisted index, never the
+    in-memory lineage."""
     from .operators.similarity import ivf_index_build
     from .sources.tables import load_table, save_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    loaded = _IVF_IDX_CACHE.get(key)
-    if loaded is None:
-        base = os.path.join(
-            tempfile.gettempdir(), "hds_ann_ivf_" + _stable_dir_tag(sf_dir)
-        )
-        shutil.rmtree(base, ignore_errors=True)  # stateful dir: never accumulate
+    def build():
+        base = scratch_path(spark, sf_dir, "ann_ivf")
         td = {
             "ivf_index": {
                 "path": os.path.join(base, "ivf_index"),
@@ -115,17 +104,18 @@ def _ivf_persisted_index(spark, sf_dir):
         corpus, _ = _ann_corpus_batch(spark, sf_dir)
         index = ivf_index_build(corpus, n_centroids=_ANN_CENTROIDS)
         save_table(index, "ivf_index", td, partition_by="centroid_id")
-        loaded = load_table("ivf_index", td)
-        _IVF_IDX_CACHE[key] = loaded
-    return loaded
+        return load_table("ivf_index", td)
+
+    return shared_artifact(spark, sf_dir, "ivf_index", build)
 
 
 def _pq_persisted_index(spark, sf_dir):
     """Train the PQ codebooks on the standing corpus only, encode the
     corpus, save BOTH artifacts (codes + codebook rows) as tables, and
-    return the reloaded pair ``(codes_df, codebooks)``. The codebook
-    collect on reload is the family's documented scalar boundary
-    (m*k sub-centroids — kilobytes at any corpus scale)."""
+    return the reloaded pair ``(codes_df, codebooks)`` as the
+    session-shared ``pq_index`` artifact. The codebook collect on reload
+    is the family's documented scalar boundary (m*k sub-centroids —
+    kilobytes at any corpus scale)."""
     from .operators.similarity import (
         pq_codebooks_from_rows,
         pq_codebooks_to_rows,
@@ -134,13 +124,8 @@ def _pq_persisted_index(spark, sf_dir):
     )
     from .sources.tables import load_table, save_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PQ_IDX_CACHE.get(key)
-    if got is None:
-        base = os.path.join(
-            tempfile.gettempdir(), "hds_ann_pq_" + _stable_dir_tag(sf_dir)
-        )
-        shutil.rmtree(base, ignore_errors=True)  # stateful dir: never accumulate
+    def build():
+        base = scratch_path(spark, sf_dir, "ann_pq")
         td = {
             "pq_codes": {
                 "path": os.path.join(base, "pq_codes"),
@@ -158,12 +143,12 @@ def _pq_persisted_index(spark, sf_dir):
         )
         save_table(pq_encode(corpus, books), "pq_codes", td)
         save_table(pq_codebooks_to_rows(spark, books), "pq_books", td)
-        got = (
+        return (
             load_table("pq_codes", td),
             pq_codebooks_from_rows(load_table("pq_books", td)),
         )
-        _PQ_IDX_CACHE[key] = got
-    return got
+
+    return shared_artifact(spark, sf_dir, "pq_index", build)
 
 
 def _duck_ivf_inc_sql() -> str:
@@ -316,17 +301,13 @@ _EDC_THRESHOLD = 0.3
 _EDC_NGRAM = 4
 _EDC_MAX_EVAL_DF = 100
 
-#: session-scoped loaded-index cache for the decontam corpus split
-#: (the EDC bucket split, NOT the ANN % 50 split — different standing
-#: corpus, so it cannot share _IVF_IDX_CACHE)
-_EDC_IDX_CACHE: dict[tuple[str, str], object] = {}
-
 
 def _edc_persisted_index(spark, sf_dir):
     """Build the IVF inverted lists from the DECONTAM standing corpus
-    (the bucket >= cut side of the EDC split), save them partitioned by
-    centroid_id, and return the RELOADED table — shared by all three
-    queries that run the embedding decontamination leg
+    (the bucket >= cut side of the EDC split, NOT the ANN % 50 split
+    behind ``ivf_index``), save them partitioned by centroid_id, and
+    return the RELOADED table as the session-shared ``edc_index``
+    artifact — shared by all three queries that run the embedding decontamination leg
     (``decontam_embedding``, ``decontam_agreement``,
     ``pipeline_decontam_purge``; bench-gated as the ``edc_index``
     group). At 100 TB this is the point of the operator: the standing
@@ -337,13 +318,8 @@ def _edc_persisted_index(spark, sf_dir):
     from .operators.similarity import ivf_index_build
     from .sources.tables import load_table, save_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    loaded = _EDC_IDX_CACHE.get(key)
-    if loaded is None:
-        base = os.path.join(
-            tempfile.gettempdir(), "hds_edc_ivf_" + _stable_dir_tag(sf_dir)
-        )
-        shutil.rmtree(base, ignore_errors=True)  # stateful dir: never accumulate
+    def build():
+        base = scratch_path(spark, sf_dir, "edc_ivf")
         td = {
             "edc_index": {
                 "path": os.path.join(base, "edc_index"),
@@ -358,9 +334,9 @@ def _edc_persisted_index(spark, sf_dir):
             td,
             partition_by="centroid_id",
         )
-        loaded = load_table("edc_index", td)
-        _EDC_IDX_CACHE[key] = loaded
-    return loaded
+        return load_table("edc_index", td)
+
+    return shared_artifact(spark, sf_dir, "edc_index", build)
 
 
 def _duck_edc_sql() -> str:
@@ -741,17 +717,12 @@ def streaming_pq_ingest(spark, sf_dir):
     exactly what the (shared) oracle asserts. The streaming shape every
     continuous-ingest index maintenance job runs; the sink IS the codes
     table extension."""
-    import shutil
-    import tempfile
-
     from .operators.similarity import pq_encode
     from .streaming.stream_ops import read_parquet_stream, stream_score_batches
 
-    tag = _stable_dir_tag(sf_dir)
-    base = f"{tempfile.gettempdir()}/hds_pq_stream_{tag}"
-    # deterministic replay: wipe sink + checkpoint so every invocation
+    # deterministic replay: empty sink + checkpoint so every invocation
     # reprocesses the full (finite) stream from scratch
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_path(spark, sf_dir, "pq_stream")
 
     _, books = _pq_persisted_index(spark, sf_dir)
     stream = read_parquet_stream(
@@ -832,16 +803,11 @@ def table_version_drift(spark, sf_dir):
     scan-pruned profile passes joined at len(columns) rows. See
     operators/profiling.py:profile_version_drift."""
     import os
-    import shutil
-    import tempfile
 
     from .operators.profiling import profile_version_drift
     from .sources.tables import load_table, save_archive_snapshot
 
-    base = os.path.join(
-        tempfile.gettempdir(), "hds_vdrift_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(base, ignore_errors=True)  # append-mode: never accumulate
+    base = scratch_path(spark, sf_dir, "vdrift")
     td = {"arch": {"path": os.path.join(base, "arch"), "format": "parquet"}}
     o = _t(spark, sf_dir, "orders")
     for i, day in enumerate(("2024-01-01", "2024-02-01")):
@@ -1151,16 +1117,11 @@ def pipeline_card_trend(spark, sf_dir):
     leg is one scan-pruned aggregate to |sources| rows; the trend join
     is report-sized."""
     import os
-    import shutil
-    import tempfile
 
     from .functions.text import add_quality_score, token_count
     from .sources.tables import load_table, save_archive_snapshot
 
-    base = os.path.join(
-        tempfile.gettempdir(), "hds_cardtrend_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(base, ignore_errors=True)  # append-mode: never accumulate
+    base = scratch_path(spark, sf_dir, "cardtrend")
     td = {"arch": {"path": os.path.join(base, "arch"), "format": "parquet"}}
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "lang"

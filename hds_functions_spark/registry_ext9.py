@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import scratch_path
 from .registry import ORACLES, QUERIES, _register, _t  # noqa: F401
 
 # Direct `import hds_functions_spark.registry_extN` must see every
@@ -353,16 +354,10 @@ def source_warc_corpus(spark, sf_dir):
     records, header mangling, payload truncation) breaks the match.
     See sources/warc.py for the quarantine contract."""
     import os
-    import shutil
-    import tempfile
 
-    from .registry import _stable_dir_tag
     from .sources.warc import read_warc_corpus
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hds_warc_corpus_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_path(spark, sf_dir, "warc_corpus")
     os.makedirs(path, exist_ok=True)
     docs = (
         _t(spark, sf_dir, "documents")
@@ -469,16 +464,10 @@ def source_warc_quarantine(spark, sf_dir):
     intact, and the clean payload volume must match the parquet
     closed form. See sources/warc.py parse_warc_stream."""
     import os
-    import shutil
-    import tempfile
 
-    from .registry import _stable_dir_tag
     from .sources.warc import read_warc_corpus
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hds_warc_quar_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_path(spark, sf_dir, "warc_quar")
     os.makedirs(path, exist_ok=True)
     docs = (
         _t(spark, sf_dir, "documents")

@@ -26,11 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .caching import scratch_path
 from .registry import (  # noqa: F401
     ORACLES,
     QUERIES,
     _register,
-    _stable_dir_tag,
     _t,
 )
 
@@ -521,8 +521,6 @@ def pipeline_url_curation(spark, sf_dir):
     ``WindowGroupLimit``-pruned, and the card is one combinable
     groupBy on tld."""
     import os
-    import shutil
-    import tempfile
 
     from .operators.urls import (
         cap_per_domain,
@@ -531,10 +529,7 @@ def pipeline_url_curation(spark, sf_dir):
     )
     from .sources.warc import read_warc_corpus
 
-    path = os.path.join(
-        tempfile.gettempdir(), "hds_url_cur_" + _stable_dir_tag(sf_dir)
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_path(spark, sf_dir, "url_cur")
     os.makedirs(path, exist_ok=True)
 
     d = F.col("doc_id")

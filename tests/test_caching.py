@@ -1,28 +1,46 @@
 """Cache hygiene: operator-internal persists are tracked and releasable,
 so a long-lived session (bench suite, notebook, driver loop) does not
-accumulate dead cached tables."""
+accumulate dead cached tables; session-shared artifacts rebuild
+identically after release; scratch paths are per application."""
+
+import os
 
 import pytest
+from pyspark import SparkFiles, StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+import hds_functions_spark.registry_ext  # noqa: F401  (registers every query)
+from hds_functions_spark.bench_groups import SHARED_CACHE_GROUPS
 from hds_functions_spark.caching import (
     release_operator_caches,
+    release_shared_artifact,
+    scratch_path,
+    shared_artifact,
     tracked_count,
     tracked_persist,
 )
+from hds_functions_spark.registry import QUERIES
+
+_SF = "/root/testdata/sf0.001"
 
 
-def _persistent_ids(spark) -> set:
+def _persistent_ids(spark, checkpoints: bool = True) -> set:
     """Ids of currently-persistent RDDs. localCheckpoint-based loops
     (connected components, BPE training) leave checkpoint RDDs here
     until the async ContextCleaner runs, so tests must compare SETS
     (no net-new ids survive a release) rather than exact counts — a
     stale entry from a previous test vanishing mid-test would shift a
-    count-based baseline."""
-    it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
+    count-based baseline. ``checkpoints=False`` leaves out materialised
+    local checkpoints: they are lineage cuts, not caches, and no release
+    may free them while a plan built on them is alive."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    it = rdds.keySet().iterator()
     ids = set()
     while it.hasNext():
-        ids.add(it.next())
+        rid = it.next()
+        if checkpoints or not rdds.get(rid).isCheckpointed():
+            ids.add(rid)
     return ids
 
 
@@ -95,48 +113,78 @@ def test_observe_metrics_single_pass(spark):
         observe_metrics(df, "t2", {})
 
 
-def test_shared_winnow_fps_cold_and_cached_agree(spark):
-    """The session-scoped winnowing fingerprint cache returns the same
-    table cold (post-reset rebuild) and cached, and both consumers
-    (full pairs + incremental) read one build."""
-    import hds_functions_spark.registry_ext  # noqa: F401  (chain order)
-    from hds_functions_spark.registry_ext4 import (
-        _WINNOW_FP_CACHE,
-        _shared_winnow_fps,
-        reset_shared_winnow_fps,
-    )
+def _unreachable():
+    raise AssertionError("artifact was not cached")
 
-    sf = "/root/testdata/sf0.001"
-    cached = sorted(
-        tuple(r) for r in _shared_winnow_fps(spark, sf).collect()
-    )
-    assert (spark.sparkContext.applicationId, sf) in _WINNOW_FP_CACHE
-    reset_shared_winnow_fps(spark, sf)
-    assert (spark.sparkContext.applicationId, sf) not in _WINNOW_FP_CACHE
-    cold = sorted(
-        tuple(r) for r in _shared_winnow_fps(spark, sf).collect()
-    )
+
+def _materialise(art):
+    """Comparable value of an artifact: a DataFrame's rows, recursively
+    through tuples; driver-side floats as they are."""
+    if isinstance(art, DataFrame):
+        return sorted((tuple(r) for r in art.collect()), key=repr)
+    if isinstance(art, tuple):
+        return tuple(_materialise(a) for a in art)
+    return art
+
+
+@pytest.mark.parametrize("name", sorted(SHARED_CACHE_GROUPS))
+def test_shared_artifact_cold_and_cached_agree(spark, name):
+    """Every session-shared artifact is the same built cold (after
+    release) as cached, and its release leaves no net-new persisted
+    table behind (the ``clusters`` build's connected-components loop
+    leaves its last local checkpoint, which is not a cache)."""
+    query = QUERIES[SHARED_CACHE_GROUPS[name][0]]
+    release_shared_artifact(spark, _SF, name)
+    release_operator_caches()
+    base_ids = _persistent_ids(spark, checkpoints=False)
+    query(spark, _SF)
+    cached = _materialise(shared_artifact(spark, _SF, name, _unreachable))
+    release_shared_artifact(spark, _SF, name)
+    release_operator_caches()
+    assert _persistent_ids(spark, checkpoints=False) <= base_ids
+    assert shared_artifact(spark, _SF, name, lambda: None) is None
+    release_shared_artifact(spark, _SF, name)
+    query(spark, _SF)
+    cold = _materialise(shared_artifact(spark, _SF, name, _unreachable))
     assert cold == cached
-    reset_shared_winnow_fps(spark, sf)
+    release_shared_artifact(spark, _SF, name)
+    release_operator_caches()
 
 
-def test_shared_sim_edges_cold_and_cached_agree(spark):
-    import hds_functions_spark.registry_ext  # noqa: F401  (chain order)
-    from hds_functions_spark.registry_ext4 import (
-        _shared_sim_edges,
-        reset_shared_sim_edges,
-    )
+def test_shared_artifact_builds_once_per_key(spark):
+    built = []
 
-    sf = "/root/testdata/sf0.001"
-    cached = sorted(
-        tuple(r) for r in _shared_sim_edges(spark, sf).collect()
-    )
-    reset_shared_sim_edges(spark, sf)
-    cold = sorted(
-        tuple(r) for r in _shared_sim_edges(spark, sf).collect()
-    )
-    assert cold == cached
-    reset_shared_sim_edges(spark, sf)
+    def build():
+        built.append(1)
+        return spark.range(10).persist()
+
+    art = shared_artifact(spark, _SF, "probe", build)
+    assert shared_artifact(spark, _SF, "probe", build) is art
+    assert shared_artifact(spark, "other_sf", "probe", build) is not art
+    assert len(built) == 2
+    release_shared_artifact(spark, _SF, "probe")
+    release_shared_artifact(spark, "other_sf", "probe")
+    assert art.storageLevel == StorageLevel.NONE
+    assert shared_artifact(spark, _SF, "probe", build) is not art
+    assert len(built) == 3
+    release_shared_artifact(spark, _SF, "probe")
+
+
+def test_scratch_path_is_per_application_and_empty(spark):
+    """scratch_path lives under the application's SparkFiles root (unique
+    per application, deleted on stop), comes back empty on every call,
+    and separates sf_dirs."""
+    path = scratch_path(spark, _SF, "probe")
+    assert os.path.dirname(path) == SparkFiles.getRootDirectory()
+    assert not os.path.exists(path)
+    os.makedirs(os.path.join(path, "sub"))
+    assert scratch_path(spark, _SF, "probe") == path
+    assert not os.path.exists(path)
+    with open(path, "w") as fh:  # a file left there goes too
+        fh.write("x")
+    assert scratch_path(spark, _SF, "probe") == path
+    assert not os.path.exists(path)
+    assert scratch_path(spark, "other_sf", "probe") != path
 
 
 def test_tracked_persist_does_not_adopt_foreign_persist(spark):

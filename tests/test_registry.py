@@ -161,56 +161,76 @@ def test_normalise_event_ts_rejects_bad_layouts(spark):
         normalise_event_ts(stringy)
 
 
+def _shared_artifact_consumers() -> dict:
+    """group -> sorted registered queries whose function reaches a
+    ``shared_artifact(spark, sf_dir, "<group>", build)`` call, directly or
+    through module-level functions of the ``registry*`` modules (a
+    call-graph closure over the parsed source)."""
+    import ast
+    import glob
+
+    import hds_functions_spark
+
+    pkg = os.path.dirname(hds_functions_spark.__file__)
+    defs, imported, registered = {}, {}, {}
+    files = glob.glob(os.path.join(pkg, "registry*.py"))
+    assert files
+    for path in files:
+        mod = os.path.basename(path)[:-3]
+        tree = ast.parse(open(path).read())
+        imported[mod] = {
+            a.asname or a.name: (node.module, a.name)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and node.level == 1
+            for a in node.names
+        }
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef):
+                defs[(mod, fn.name)] = fn
+                for d in fn.decorator_list:
+                    if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "_register":
+                        registered[d.args[0].value] = (mod, fn.name)
+
+    def direct(key):
+        calls, groups = set(), set()
+        for n in ast.walk(defs[key]):
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)):
+                continue
+            if n.func.id == "shared_artifact":
+                # a computed name is _t's per-table plan memo, not a build
+                if isinstance(n.args[2], ast.Constant):
+                    groups.add(n.args[2].value)
+            elif (key[0], n.func.id) in defs:
+                calls.add((key[0], n.func.id))
+            elif imported[key[0]].get(n.func.id) in defs:
+                calls.add(imported[key[0]][n.func.id])
+        return calls, groups
+
+    edges = {k: direct(k) for k in defs}
+    derived: dict[str, set] = {}
+    for query, key in registered.items():
+        seen, todo = set(), [key]
+        while todo:
+            k = todo.pop()
+            if k not in seen:
+                seen.add(k)
+                calls, groups = edges[k]
+                todo.extend(calls)
+                for g in groups:
+                    derived.setdefault(g, set()).add(query)
+    return {g: sorted(m) for g, m in derived.items()}
+
+
 def test_shared_cache_groups_match_source():
     """bench_groups.SHARED_CACHE_GROUPS is the bench-gating unit for
-    session-shared-cache consumers; re-derive the map from the registry
-    SOURCE (call-site pattern match) so a new consumer, a renamed
-    query, or a dropped cache cannot silently escape its group."""
-    import glob
-    import re
-
+    session-shared-artifact consumers; re-derive the map from the
+    registry SOURCE so a new consumer (direct or transitive), a renamed
+    query, or a dropped artifact cannot silently escape its group."""
     from hds_functions_spark.bench_groups import SHARED_CACHE_GROUPS
     from hds_functions_spark.registry import QUERIES
     import hds_functions_spark.registry_ext  # noqa: F401
 
-    pats = {
-        "winnow_fps": r"_shared_winnow_fps\(spark",
-        "clusters": r"_shared_clusters\(spark",
-        "sim_edges": r"_shared_sim_edges\(spark",
-        "kmeans_centroids": r"_shared_kmeans_centroids\(spark",
-        "ivf_index": r"_ivf_persisted_index\(spark",
-        "pq_index": r"_pq_persisted_index\(spark",
-        # decontam_embedding consumes the persisted EDC index directly;
-        # the agreement audit and the purge pipeline consume it
-        # TRANSITIVELY by calling decontam_embedding for their ed leg
-        "edc_index": r"_edc_persisted_index\(spark|decontam_embedding\(spark",
-    }
-    derived: dict[str, set] = {g: set() for g in pats}
-    files = glob.glob(
-        "/root/repo/hds_functions_spark/registry*.py"
-    )
-    assert files
-    for path in files:
-        lines = open(path).read().splitlines()
-        for g, p in pats.items():
-            for i, ln in enumerate(lines):
-                if not re.search(p, ln) or re.search(
-                    r"def (_shared|_ivf|_pq|_edc|reset|decontam_embedding)",
-                    ln,
-                ):
-                    continue
-                for j in range(i, -1, -1):
-                    m = re.search(r'@_register\(\s*"?([a-z0-9_]*)"?', lines[j])
-                    if m:
-                        name = m.group(1)
-                        if not name:
-                            m2 = re.search(r'"([a-z0-9_]+)"', lines[j + 1])
-                            name = m2.group(1) if m2 else "?"
-                        derived[g].add(name)
-                        break
-    assert {g: sorted(m) for g, m in derived.items()} == {
-        g: sorted(m) for g, m in SHARED_CACHE_GROUPS.items()
-    }
+    assert _shared_artifact_consumers() == SHARED_CACHE_GROUPS
     for members in SHARED_CACHE_GROUPS.values():
         for q in members:
             assert q in QUERIES, q
