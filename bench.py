@@ -132,7 +132,8 @@ def main() -> None:
     # The bench_compare gate only flags REGRESSIONS (>2x), which the
     # pre-warm cannot manufacture, so the gate stays sound; when a
     # head query's improvement matters for a claim, either cite a
-    # fresh-session A/B (tools/drift_ab_r12.py) or re-freeze its
+    # fresh-session A/B (protocol in BASELINE.md "Round 12: bench-drift
+    # adjudications") or re-freeze its
     # baseline under the current protocol (tools/freeze_baselines.py).
     prewarm_head = int(os.environ.get("BENCH_PREWARM_HEAD", "16"))
     from hds_functions_spark.caching import release_operator_caches

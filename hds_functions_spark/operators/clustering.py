@@ -126,7 +126,8 @@ def _best_centroid(vec_col: str, centroids: list[list[float]]) -> Column:
 #: centroids stop being free: plan analysis + janino codegen time grow
 #: with k*dim for both the unrolled and the folded-literal trees
 #: (measured: ~13s/51s/102s codegen, ~7s/27s/51s bulk plan overhead at
-#: k=256/1024/4096, dim 64 — tools/scaleup_r12.py). The broadcast path
+#: k=256/1024/4096, dim 64 — BASELINE.md "Round 12: large-k centroid
+#: assignment"). The broadcast path
 #: keeps the PLAN O(1) and ships the matrix as data. Crossover notes in
 #: SCALE.md ("large-k assignment").
 BULK_ASSIGN_SCALARS = 16_384
@@ -200,7 +201,8 @@ def _with_broadcast_centroids(
     a 1-row frame holding array<array<double>> crossJoin'd in. The
     matrix never enters the query plan (a k*dim literal tree costs
     O(k*dim) driver-side analysis — measured at ~51 s for k=4096,
-    dim=64, tools/scaleup_r12.py), it ships once per executor as a
+    dim=64, BASELINE.md "Round 12: large-k centroid assignment"), it
+    ships once per executor as a
     broadcast relation, and the plan stays O(1) nodes at any k."""
     spark = df.sparkSession
     cmat = spark.createDataFrame(
@@ -729,7 +731,7 @@ def choose_assign_method(
         return "codegen", None
     # >= — the measured tree-win regime (k=16384 x dim 64, SCALE.md) is
     # EXACTLY 2^20 scalars; a strict > silently skipped the probe there
-    # (caught by tools/scaleup_r14.py part C)
+    # (caught by the round-14 scale rows, SCALE.md part C)
     if id_col is not None and scalars >= TREE_CANDIDATE_SCALARS:
         codebook = build_tree_codebook(centroids, tree_fanout)
         frac = _sampled_fanout_frac(df, codebook[0], vec_col, dim)

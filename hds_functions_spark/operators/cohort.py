@@ -16,18 +16,15 @@ names to Spark SQL boolean expressions. Applying it:
 Scale design: the reference computes the flowchart by unpivoting the flagged
 table to ``(N_criteria+1) x n_rows`` rows and running
 ``countDistinct(when(...))`` — at 100 TB that explodes the shuffle by the
-number of criteria. This implementation's default strategy aggregates in two
-levels instead: one shuffle keyed by ``person_id`` computing per-person
-pass-counts for every criterion (map-side partial aggregation applies), then
-a single-row global reduce — shuffle volume is O(#persons * #criteria) tiny
-ints, independent of row count, with no row explosion. Both strategies are
-implemented and tested equivalent; ``strategy='unpivot'`` keeps the
-reference's literal plan shape.
+number of criteria. This implementation aggregates in two levels instead:
+one shuffle keyed by ``person_id`` computing per-person pass-counts for every
+criterion (map-side partial aggregation applies), then a single-row global
+reduce — shuffle volume is O(#persons * #criteria) tiny ints, independent of
+row count, with no row explosion. The tests keep the reference's unpivot
+plan as the oracle the two-level counts are compared against.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -142,32 +139,6 @@ def _criteria_description_df(spark, inclusion_criteria: dict[str, str]) -> DataF
     return spark.createDataFrame(rows, ["criteria", "description", "expression"])
 
 
-def _flowchart_counts_unpivot(
-    cohort_flagged: DataFrame,
-    criteria_columns: list[str],
-    row_id_col: str,
-    person_id_col: str,
-) -> DataFrame:
-    """Reference plan shape: unpivot -> conditional aggregate.
-
-    Row count multiplies by len(criteria_columns) before the shuffle;
-    kept for parity testing and small cohorts.
-    (reference ``cohort_construction.py:163-180``)
-    """
-    unpivoted = cohort_flagged.select([row_id_col, person_id_col] + criteria_columns).unpivot(
-        ids=[row_id_col, person_id_col],
-        values=criteria_columns,
-        variableColumnName="criteria",
-        valueColumnName="passed",
-    )
-    return unpivoted.groupBy("criteria").agg(
-        F.count(F.when(F.col("passed"), 1)).alias("n_row"),
-        F.count_distinct(
-            F.when(F.col("passed"), F.col(person_id_col))
-        ).alias("n_distinct_id"),
-    )
-
-
 def _flowchart_counts_two_level(
     cohort_flagged: DataFrame,
     criteria_columns: list[str],
@@ -221,7 +192,6 @@ def create_inclusion_flowchart(
     inclusion_criteria: dict[str, str],
     row_id_col: str = "row_id",
     person_id_col: str = "person_id",
-    strategy: str = "two_level",
 ) -> DataFrame:
     """Attrition table: one row per criteria step with survival counts.
 
@@ -229,25 +199,16 @@ def create_inclusion_flowchart(
     ``criteria``/``description``/``expression`` strings, ``n_row`` /
     ``n_distinct_id`` long, ``excluded_rows`` / ``excluded_ids`` int (null on
     the ``criteria_0`` row — no lag predecessor). Parity: reference
-    ``cohort_construction.py:131-217``; ``strategy`` picks the physical
-    counting plan ('two_level' scalable default | 'unpivot' reference shape),
-    both semantically identical (cross-tested).
+    ``cohort_construction.py:131-217``, counted with the two-level plan
+    (module docstring). ``row_id_col`` is accepted for signature parity;
+    the counts need only ``person_id_col``.
     """
     spark = cohort_flagged.sparkSession
     criteria_columns = [f"criteria_{i}" for i in range(len(inclusion_criteria) + 1)]
 
-    if strategy == "unpivot":
-        counts = _flowchart_counts_unpivot(
-            cohort_flagged, criteria_columns, row_id_col, person_id_col
-        )
-    elif strategy == "two_level":
-        counts = _flowchart_counts_two_level(
-            cohort_flagged, criteria_columns, person_id_col
-        )
-    else:
-        raise ValueError(
-            f"Unknown flowchart strategy '{strategy}'; use 'two_level' or 'unpivot'."
-        )
+    counts = _flowchart_counts_two_level(
+        cohort_flagged, criteria_columns, person_id_col
+    )
 
     described = counts.join(
         F.broadcast(_criteria_description_df(spark, inclusion_criteria)),
@@ -278,7 +239,6 @@ def apply_inclusion_criteria(
     person_id_col: str = "person_id",
     drop_inclusion_flags: bool = True,
     table_directory=None,
-    cache_flags: bool = True,
 ) -> DataFrame:
     """Filter ``cohort`` to rows passing every criterion; optionally persist
     an attrition flowchart table.
@@ -289,8 +249,8 @@ def apply_inclusion_criteria(
 
     Improvements over the reference (semantics unchanged): when a flowchart
     is requested the flagged plan is consumed twice (flowchart aggregation +
-    final filter) — ``cache_flags=True`` caches it across the two actions
-    instead of recomputing (a tracked persist, so
+    final filter), so it is cached across the two actions instead of
+    recomputed (a tracked persist, so
     :func:`~hds_functions_spark.caching.release_operator_caches` frees
     it once the result is written); ``table_directory`` is forwarded to
     :func:`~hds_functions_spark.sources.tables.save_table`.
@@ -303,16 +263,15 @@ def apply_inclusion_criteria(
     if flowchart_table:
         from ..sources.tables import save_table
 
-        if cache_flags:
-            # tracked (released by release_operator_caches) at the
-            # level .cache() uses
-            from pyspark.storagelevel import StorageLevel
+        # tracked (released by release_operator_caches) at the level
+        # .cache() uses
+        from pyspark.storagelevel import StorageLevel
 
-            from ..caching import tracked_persist
+        from ..caching import tracked_persist
 
-            cohort_flagged = tracked_persist(
-                cohort_flagged, StorageLevel.MEMORY_AND_DISK_DESER
-            )
+        cohort_flagged = tracked_persist(
+            cohort_flagged, StorageLevel.MEMORY_AND_DISK_DESER
+        )
         flowchart = create_inclusion_flowchart(
             cohort_flagged, inclusion_criteria, row_id_col, person_id_col
         )

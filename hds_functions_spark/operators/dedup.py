@@ -18,6 +18,20 @@ Scale notes (100 TB design):
   band hash — candidate pairs never require the quadratic cross join.
 - n-gram Jaccard is exact and quadratic in *candidate* pairs only: it
   joins on shared shingles, so disjoint documents never pair up.
+
+MinHash bands, embedding plane bands and winnowing fingerprints share
+one candidate-pair engine, ``_pair_candidates(new, corpus)``. Each
+batch operator is its self case, ``corpus=None``: one keyed frame is
+joined with itself and a pair is kept once, as ``id_a < id_b``. Each
+``*_incremental`` twin passes the standing corpus: only the new batch
+probes, the build side is the corpus plus the batch itself, and the
+corpus is never joined with itself. The orientation rule is
+``(cross_batch & id_a != id_b) | (~cross_batch & id_a < id_b)``: a
+new-corpus pair keeps the new id as ``id_a``, a new-new pair is kept
+once. It relies on the twins' contract that ids are disjoint across
+the two frames. The hot-bucket grid (``_LSH_BUCKET_CHUNK``) also lives
+in the engine; it runs only when the caller passes a detected hot
+bucket frame, which only the MinHash family does.
 """
 
 from __future__ import annotations
@@ -208,6 +222,85 @@ def _grid_cells():
     return F.explode(F.sequence(F.lit(0), F.col("_s") - F.lit(1)))
 
 
+def _pair_candidates(
+    new: DataFrame,
+    corpus: "DataFrame | None",
+    key: list[str],
+    id_col: str,
+    hot: "DataFrame | None" = None,
+    partitions: "int | None" = None,
+) -> DataFrame:
+    """Candidate rows ``(id_a, id_b[, cross_batch])`` of the keyed
+    equi-join every pair family here runs (module docstring): rows of
+    ``(id_col, *key)`` that share a ``key`` value meet, and ``id_a``
+    always comes from ``new``.
+
+    ``corpus=None`` is the self case: ``new`` joins itself under
+    ``id_a < id_b``, with no ``cross_batch`` column. Otherwise the build
+    side is the corpus (``cross_batch`` true) plus ``new`` (false) under
+    the orientation rule. ``hot`` (from :func:`_detect_hot_buckets`)
+    turns the hot-bucket grid on: pair (a, b) meets in exactly one cell
+    (home(a), home(b)), so the pair SET is the ungridded one. With
+    ``hot=None`` the join has exactly the ungridded shape.
+    ``partitions`` hash-partitions the probe side on ``key`` first.
+
+    One row per join match: callers take ``distinct`` or count the
+    matches of a pair."""
+    probe = new if partitions is None else new.repartition(partitions, *key)
+    if corpus is None:
+        build, flag = probe, []
+        keep = F.col("id_a") < F.col("id_b")
+    else:
+        build = corpus.select(
+            id_col, *key, F.lit(True).alias("cross_batch")
+        ).unionByName(
+            new.select(id_col, *key, F.lit(False).alias("cross_batch"))
+        )
+        flag = ["cross_batch"]
+        cross = F.col("cross_batch")
+        keep = (cross & (F.col("id_a") != F.col("id_b"))) | (
+            ~cross & (F.col("id_a") < F.col("id_b"))
+        )
+    if hot is None:
+        a = probe.select(F.col(id_col).alias("id_a"), *key)
+        b = build.select(F.col(id_col).alias("id_b"), *key, *flag)
+        on = key
+    else:
+        a = _attach_grid(probe, hot, id_col).select(
+            F.col(id_col).alias("id_a"),
+            *key,
+            F.col("_home").alias("_x"),
+            _grid_cells().alias("_y"),
+        )
+        b = _attach_grid(build, hot, id_col).select(
+            F.col(id_col).alias("id_b"),
+            *key,
+            *flag,
+            _grid_cells().alias("_x"),
+            F.col("_home").alias("_y"),
+        )
+        on = [*key, "_x", "_y"]
+    return a.join(b, on=on).filter(keep).select("id_a", "id_b", *flag)
+
+
+def _reattach(
+    pairs: DataFrame,
+    new: DataFrame,
+    corpus: "DataFrame | None",
+    id_col: str,
+    payload: str,
+    names: tuple[str, str],
+) -> DataFrame:
+    """Join each pair's ``payload`` back as ``names``: ``id_a`` from
+    ``new``, ``id_b`` from ``new`` plus ``corpus``. No broadcast hint:
+    the payload table grows with the corpus, so the planner/AQE picks
+    broadcast or shuffle join from real stats."""
+    both = new if corpus is None else corpus.unionByName(new)
+    a = new.select(F.col(id_col).alias("id_a"), F.col(payload).alias(names[0]))
+    b = both.select(F.col(id_col).alias("id_b"), F.col(payload).alias(names[1]))
+    return pairs.join(a, on="id_a").join(b, on="id_b")
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -289,59 +382,49 @@ def minhash_signatures(
     )
 
 
-def minhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_size: int = 5,
-    bands: int = 8,
-    min_jaccard: float = 0.0,
-    persist_signatures: bool = True,
+def _minhash_pairs(
+    new_docs: DataFrame,
+    corpus: "DataFrame | None",
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    shingle_size: int,
+    bands: int,
+    min_jaccard: float,
 ) -> DataFrame:
-    """LSH candidate pairs with estimated Jaccard similarity.
-
-    Signature split into ``bands`` bands of ``num_hashes // bands`` rows;
-    documents agreeing on any full band become candidates (grouped by a
-    band-content hash — no cross join). Output: ``id_a < id_b``,
-    ``est_jaccard`` = fraction of agreeing signature positions, filtered to
-    ``>= min_jaccard``.
-
-    EAGER: construction runs one Spark job, the hot-bucket detection
-    (``_detect_hot_buckets``). It reads the signature frame, so with
-    ``persist_signatures=True`` (the default) that job computes every
-    signature and fills the signature cache the returned plan reads.
-    """
+    """Core of :func:`minhash_pairs` (``corpus=None``) and
+    :func:`minhash_pairs_incremental`: signatures, band explode,
+    hot-bucket detection, candidate pairs, ``est_jaccard`` verify."""
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     rows_per_band = num_hashes // bands
-    # Documents shorter than the shingle size have no shingles: their
-    # signature is all-null, every band hash collapses to hash('') and ALL
-    # such docs land in one LSH bucket — a quadratic blowup of spurious
-    # candidates (est_jaccard 0). Exclude them up front; they simply cannot
-    # be near-duplicates under this measure.
-    df = df.filter(F.length(F.col(text_col)) >= shingle_size)
-    # widen thin inputs: the md5 shingle hashing below is the expensive part
-    # and must not run on one input split (ensure_min_partitions is a no-op
-    # on already-parallel inputs)
-    sigs = minhash_signatures(
-        ensure_min_partitions(df), id_col, text_col, num_hashes, shingle_size
-    )
-    if persist_signatures:
-        # the signature table is consumed four times (two band-join branches
-        # + two re-attach joins); persisting computes the md5 shingle
-        # work once. MEMORY_AND_DISK: signatures are ~num_hashes longs per
-        # doc — tiny next to the corpus — and spill rather than OOM.
-        # Tracked: release_operator_caches() reclaims it post-materialise.
-        from ..caching import tracked_persist
+    from ..caching import tracked_persist
+    from ..functions.sqlexpr import band_hash_sql
 
-        sigs = tracked_persist(sigs)
+    def signatures(df):
+        # Documents shorter than the shingle size have no shingles: their
+        # signature is all-null, every band hash collapses to hash('') and
+        # ALL such docs land in one LSH bucket — a quadratic blowup of
+        # spurious candidates (est_jaccard 0). Exclude them up front; they
+        # simply cannot be near-duplicates under this measure.
+        df = df.filter(F.length(F.col(text_col)) >= shingle_size)
+        # widen thin inputs: the shingle hashing is the expensive part and
+        # must not run on one input split (ensure_min_partitions is a
+        # no-op on already-parallel inputs). Persisted: the band join and
+        # the re-attach joins all read it, so the shingle work runs once.
+        # MEMORY_AND_DISK: ~num_hashes longs per doc, tiny next to the
+        # corpus, and spills rather than OOM. Tracked:
+        # release_operator_caches() reclaims it post-materialise.
+        return tracked_persist(
+            minhash_signatures(
+                ensure_min_partitions(df), id_col, text_col,
+                num_hashes, shingle_size,
+            )
+        )
 
     # band hash via concat_ws over element_at — plain (codegen-able)
     # expressions, unlike a slice/transform/array_join HOF chain which
     # falls back to interpreted evaluation; SQL-text rendered (one
     # F.expr parse per band instead of ~3 py4j round trips per element)
-    from ..functions.sqlexpr import band_hash_sql
-
     def band_hash(b: int):
         return F.expr(
             band_hash_sql(
@@ -351,8 +434,8 @@ def minhash_pairs(
             )
         )
 
-    def _banded(src):
-        return src.select(
+    def banded(sigs):
+        return sigs.select(
             F.col(id_col),
             F.explode(
                 F.array(
@@ -367,53 +450,25 @@ def minhash_pairs(
             ).alias("bh"),
         ).select(id_col, "bh.band", "bh.band_hash")
 
-    banded = _banded(sigs)
-
-    # join on ids only — signatures would bloat the shuffle; they are
-    # re-attached afterwards from the signature table. The re-attach join
-    # carries NO broadcast hint: the signature table grows with the corpus
-    # (broadcast is impossible at billions of docs), so the planner/AQE
-    # size-gates the strategy from real stats — broadcast below
-    # autoBroadcastJoinThreshold, shuffle join on id above it.
-    # hot-bucket salt grid (_LSH_BUCKET_CHUNK / _detect_hot_buckets
-    # docs): pair (a, b) meets in exactly one cell (home(a), home(b)),
-    # so the pair SET is identical to the ungridded join; with no hot
-    # bucket detected (every realistic corpus) the join shape below is
-    # byte-identical to the ungridded one
-    hot = _detect_hot_buckets(banded, id_col)
-    if hot is None:
-        left = banded.select(
-            F.col(id_col).alias("id_a"), "band", "band_hash"
-        )
-        right = banded.select(
-            F.col(id_col).alias("id_b"), "band", "band_hash"
-        )
-        join_key = ["band", "band_hash"]
+    new_sigs = signatures(new_docs)
+    new_bands = banded(new_sigs)
+    if corpus is None:
+        corpus_sigs = corpus_bands = None
+        build_bands = new_bands
     else:
-        gridded = _attach_grid(banded, hot, id_col)
-        left = gridded.select(
-            F.col(id_col).alias("id_a"),
-            "band",
-            "band_hash",
-            F.col("_home").alias("_x"),
-            _grid_cells().alias("_y"),
-        )
-        right = gridded.select(
-            F.col(id_col).alias("id_b"),
-            "band",
-            "band_hash",
-            _grid_cells().alias("_x"),
-            F.col("_home").alias("_y"),
-        )
-        join_key = ["band", "band_hash", "_x", "_y"]
-    pairs = (
-        left.join(right, on=join_key)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sig_a = sigs.select(F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a"))
-    sig_b = sigs.select(F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b"))
+        corpus_sigs = signatures(corpus)
+        corpus_bands = banded(corpus_sigs)
+        build_bands = corpus_bands.unionByName(new_bands)
+    # grid size from the BUILD side (everything a probe row can match);
+    # both sides take the same per-bucket S from the literal frame. A
+    # standing-corpus hot bucket is THE skew case for continuous ingest:
+    # every nightly batch re-joins it.
+    hot = _detect_hot_buckets(build_bands, id_col)
+    # join on ids only — signatures would bloat the shuffle; they are
+    # re-attached afterwards from the signature tables
+    pairs = _pair_candidates(
+        new_bands, corpus_bands, ["band", "band_hash"], id_col, hot=hot
+    ).distinct()
     agree = F.size(
         F.filter(
             F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
@@ -421,11 +476,79 @@ def minhash_pairs(
         )
     )
     est = (agree.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard")
+    flag = [] if corpus is None else ["cross_batch"]
     return (
-        pairs.join(sig_a, on="id_a")
-        .join(sig_b, on="id_b")
-        .select("id_a", "id_b", est)
+        _reattach(pairs, new_sigs, corpus_sigs, id_col, "signature",
+                  ("sig_a", "sig_b"))
+        .select("id_a", "id_b", *flag, est)
         .filter(F.col("est_jaccard") >= min_jaccard)
+    )
+
+
+def minhash_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 32,
+    shingle_size: int = 5,
+    bands: int = 8,
+    min_jaccard: float = 0.0,
+) -> DataFrame:
+    """LSH candidate pairs with estimated Jaccard similarity.
+
+    Signature split into ``bands`` bands of ``num_hashes // bands`` rows;
+    documents agreeing on any full band become candidates (grouped by a
+    band-content hash — no cross join). Output: ``id_a < id_b``,
+    ``est_jaccard`` = fraction of agreeing signature positions, filtered to
+    ``>= min_jaccard``.
+
+    EAGER: construction runs one Spark job, the hot-bucket detection
+    (``_detect_hot_buckets``). It reads the persisted signature frame, so
+    that job computes every signature and fills the signature cache the
+    returned plan reads.
+    """
+    return _minhash_pairs(
+        df, None, id_col, text_col, num_hashes, shingle_size, bands,
+        min_jaccard,
+    )
+
+
+def minhash_pairs_incremental(
+    new_docs: DataFrame,
+    corpus: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 32,
+    shingle_size: int = 5,
+    bands: int = 8,
+    min_jaccard: float = 0.0,
+) -> DataFrame:
+    """Incremental near-dup detection: MinHash-LSH candidate pairs where
+    at least one side comes from ``new_docs`` — the continuous-ingest
+    shape. A nightly batch must be checked against itself AND the
+    standing corpus, but the corpus x corpus work (already done when
+    those docs arrived) must NOT be repeated: the banded join here puts
+    ONLY the new batch on the probe side, so candidate generation costs
+    |new| x bucket-density instead of |corpus|^2. Output: ``(id_a,
+    id_b, cross_batch, est_jaccard)`` with ``id_a < id_b`` for
+    new-new pairs and ``id_a`` = the new doc for new-corpus pairs
+    (``cross_batch`` distinguishes them). Ids must be disjoint across
+    the two frames. Restricted to pairs touching the batch,
+    :func:`minhash_pairs` on the union gives the same pairs and
+    estimates (pinned by test).
+
+    At 100 TB this is THE dedup shape that matters: the corpus side
+    needs only its banded bucket table (in practice persisted/bucketed
+    once and reused per batch), and each ingest pays work proportional
+    to its own size.
+
+    EAGER: construction runs one Spark job, the hot-bucket detection
+    over both persisted signature frames; that job computes every
+    signature of the batch AND the corpus and fills both caches.
+    """
+    return _minhash_pairs(
+        new_docs, corpus, id_col, text_col, num_hashes, shingle_size, bands,
+        min_jaccard,
     )
 
 
@@ -1079,6 +1202,93 @@ def simhash_pairs(
 
 # --- embedding-cosine near-dup ------------------------------------------
 
+def _embedding_pairs(
+    new: DataFrame,
+    corpus: "DataFrame | None",
+    id_col: str,
+    vec_col: str,
+    threshold: float,
+    n_planes: int,
+    bands: int,
+    dim: int,
+    round_digits: int,
+) -> DataFrame:
+    """Core of :func:`embedding_near_dup_pairs` (``corpus=None``) and
+    its incremental twin: plane signatures, union banding, candidate
+    pairs, exact-cosine verify."""
+    assert n_planes % bands == 0, "n_planes must divide evenly into bands"
+    from ..caching import tracked_persist
+    from .similarity import cosine_similarity, hyperplanes, plane_signature
+
+    planes = hyperplanes(n_planes, dim)
+    rows_per_band = n_planes // bands
+
+    def signatures(df):
+        # widened: parallelise the per-plane dot products. Persisted: the
+        # band join and the vector re-attach both read it, so the dot
+        # products run once (tracked: release_operator_caches() reclaims
+        # it post-materialise)
+        return tracked_persist(
+            ensure_min_partitions(df).select(
+                F.col(id_col).alias("_id"),
+                F.col(vec_col).alias("_vec"),
+                *[
+                    plane_signature(
+                        vec_col,
+                        planes[b * rows_per_band : (b + 1) * rows_per_band],
+                    ).alias(f"_band_{b}")
+                    for b in range(bands)
+                ],
+            )
+        )
+
+    def banded(sig):
+        out = None
+        for b in range(bands):
+            part = sig.select(
+                "_id",
+                F.lit(b).alias("_band"),
+                F.col(f"_band_{b}").alias("_band_bits"),
+            )
+            out = part if out is None else out.unionByName(part)
+        return out
+
+    new_sig = signatures(new)
+    corpus_sig = None if corpus is None else signatures(corpus)
+    # candidate generation on ids only (vectors would bloat the band-join
+    # shuffle). The band join's inputs are byte-tiny but its within-bucket
+    # pair expansion is the quadratic part — pin an explicit hash
+    # partitioning so AQE's byte-based coalescing can't serialise it onto
+    # two tasks.
+    par = new.sparkSession.sparkContext.defaultParallelism
+    pairs = (
+        _pair_candidates(
+            banded(new_sig),
+            None if corpus_sig is None else banded(corpus_sig),
+            ["_band", "_band_bits"],
+            "_id",
+            partitions=par,
+        )
+        .distinct()
+        # explicit repartition: candidate rows are two ids (tiny), so AQE
+        # coalesces them onto a couple of tasks — but each row still costs
+        # a dim-length dot product below. Spread the compute, not the bytes.
+        .repartition(par)
+    )
+    flag = [] if corpus is None else ["cross_batch"]
+    return (
+        _reattach(pairs, new_sig, corpus_sig, "_id", "_vec", ("_va", "_vb"))
+        .withColumn(
+            "cosine_sim",
+            F.round(
+                cosine_similarity(F.col("_va"), F.col("_vb")), round_digits
+            ),
+        )
+        .filter(F.col("cosine_sim") >= threshold)
+        .select("id_a", "id_b", *flag, "cosine_sim")
+    )
+
+
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -1103,71 +1313,9 @@ def embedding_near_dup_pairs(
     raise ``bands``/lower bits-per-band to trade cost for recall. The
     whole dataflow is built-in expressions (oracle-checkable).
     """
-    assert n_planes % bands == 0, "n_planes must divide evenly into bands"
-    from .similarity import cosine_similarity, hyperplanes, plane_signature
-
-    planes = hyperplanes(n_planes, dim)
-    rows_per_band = n_planes // bands
-    df = ensure_min_partitions(df)  # parallelise the per-plane dot products
-    sig = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        *[
-            plane_signature(
-                vec_col, planes[b * rows_per_band : (b + 1) * rows_per_band]
-            ).alias(f"_band_{b}")
-            for b in range(bands)
-        ],
-    )
-    # consumed by two band-join branches + two vector re-attach joins:
-    # persist so the per-plane dot products run once (tracked:
-    # release_operator_caches() reclaims it post-materialise)
-    from ..caching import tracked_persist
-
-    sig = tracked_persist(sig)
-
-    banded = None
-    for b in range(bands):
-        part = sig.select(
-            "_id",
-            F.lit(b).alias("_band"),
-            F.col(f"_band_{b}").alias("_band_bits"),
-        )
-        banded = part if banded is None else banded.unionByName(part)
-
-    # candidate generation on ids only (vectors would bloat the band-join
-    # shuffle); vectors re-attached for the exact-cosine verify. The band
-    # join's inputs are byte-tiny but its within-bucket pair expansion is
-    # the quadratic part — pin an explicit hash partitioning so AQE's
-    # byte-based coalescing can't serialise it onto two tasks.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(par, "_band", "_band_bits")
-    a = banded.select(F.col("_id").alias("id_a"), "_band", "_band_bits")
-    b_side = banded.select(F.col("_id").alias("id_b"), "_band", "_band_bits")
-    pairs = (
-        a.join(b_side, on=["_band", "_band_bits"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        # explicit repartition: candidate rows are two ids (tiny), so AQE
-        # coalesces them onto a couple of tasks — but each row still costs a
-        # dim-length dot product below. Spread the compute, not the bytes.
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    )
-    # vector re-attach without a broadcast hint: the vector table grows with
-    # the corpus, so the planner/AQE size-gates broadcast vs shuffle join
-    # from real stats (broadcast only below autoBroadcastJoinThreshold).
-    va = sig.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_va"))
-    vb = sig.select(F.col("_id").alias("id_b"), F.col("_vec").alias("_vb"))
-    return (
-        pairs.join(va, on="id_a")
-        .join(vb, on="id_b")
-        .withColumn(
-            "cosine_sim",
-            F.round(cosine_similarity(F.col("_va"), F.col("_vb")), round_digits),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
+    return _embedding_pairs(
+        df, None, id_col, vec_col, threshold, n_planes, bands, dim,
+        round_digits,
     )
 
 
@@ -1202,80 +1350,9 @@ def embedding_near_dup_pairs_incremental(
     persisted/bucketed on (band, bits) and each batch pays its own
     probe only.
     """
-    assert n_planes % bands == 0, "n_planes must divide evenly into bands"
-    from .similarity import cosine_similarity, hyperplanes, plane_signature
-
-    planes = hyperplanes(n_planes, dim)
-    rows_per_band = n_planes // bands
-
-    def sig_of(df):
-        return ensure_min_partitions(df).select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).alias("_vec"),
-            *[
-                plane_signature(
-                    vec_col,
-                    planes[b * rows_per_band : (b + 1) * rows_per_band],
-                ).alias(f"_band_{b}")
-                for b in range(bands)
-            ],
-        )
-
-    from ..caching import tracked_persist
-
-    new_sig = tracked_persist(sig_of(new_batch))
-    corpus_sig = tracked_persist(sig_of(corpus))
-
-    def banded(sig):
-        out = None
-        for b in range(bands):
-            part = sig.select(
-                "_id",
-                F.lit(b).alias("_band"),
-                F.col(f"_band_{b}").alias("_band_bits"),
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
-
-    probe = banded(new_sig).select(
-        F.col("_id").alias("id_a"), "_band", "_band_bits"
-    )
-    # build side = corpus buckets + the batch's own buckets (so the batch
-    # dedups against itself); the corpus is never self-joined
-    build = (
-        banded(corpus_sig)
-        .withColumn("_new", F.lit(False))
-        .unionByName(banded(new_sig).withColumn("_new", F.lit(True)))
-        .select(F.col("_id").alias("id_b"), "_band", "_band_bits", "_new")
-    )
-    par = new_batch.sparkSession.sparkContext.defaultParallelism
-    pairs = (
-        probe.repartition(par, "_band", "_band_bits")
-        .join(build, on=["_band", "_band_bits"])
-        # new-new pairs appear in both orientations: keep id_a < id_b;
-        # new-corpus pairs keep the new vector as id_a unconditionally
-        .filter(
-            (~F.col("_new") & (F.col("id_a") != F.col("id_b")))
-            | (F.col("_new") & (F.col("id_a") < F.col("id_b")))
-        )
-        .select("id_a", "id_b", (~F.col("_new")).alias("cross_batch"))
-        .distinct()
-        .repartition(par)
-    )
-    va = new_sig.select(F.col("_id").alias("id_a"), F.col("_vec").alias("_va"))
-    all_sig = corpus_sig.unionByName(new_sig)
-    vb = all_sig.select(F.col("_id").alias("id_b"), F.col("_vec").alias("_vb"))
-    return (
-        pairs.join(va, on="id_a")
-        .join(vb, on="id_b")
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                cosine_similarity(F.col("_va"), F.col("_vb")), round_digits
-            ),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cross_batch", "cosine_sim")
+    return _embedding_pairs(
+        new_batch, corpus, id_col, vec_col, threshold, n_planes, bands, dim,
+        round_digits,
     )
 
 
@@ -1298,155 +1375,6 @@ def degree_distribution(
     degrees = sym.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     return degrees.groupBy("degree").agg(
         F.count(F.lit(1)).alias("n_nodes")
-    )
-
-
-def minhash_pairs_incremental(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_size: int = 5,
-    bands: int = 8,
-    min_jaccard: float = 0.0,
-) -> DataFrame:
-    """Incremental near-dup detection: MinHash-LSH candidate pairs where
-    at least one side comes from ``new_docs`` — the continuous-ingest
-    shape. A nightly batch must be checked against itself AND the
-    standing corpus, but the corpus x corpus work (already done when
-    those docs arrived) must NOT be repeated: the banded join here puts
-    ONLY the new batch on the probe side, so candidate generation costs
-    |new| x bucket-density instead of |corpus|^2. Output: ``(id_a,
-    id_b, est_jaccard, cross_batch)`` with ``id_a < id_b`` for
-    new-new pairs and ``id_a`` = the new doc for new-corpus pairs
-    (``cross_batch`` distinguishes them). Ids must be disjoint across
-    the two frames.
-
-    At 100 TB this is THE dedup shape that matters: the corpus side
-    needs only its banded bucket table (in practice persisted/bucketed
-    once and reused per batch), and each ingest pays work proportional
-    to its own size.
-
-    EAGER: construction runs one Spark job, the hot-bucket detection
-    over both persisted signature frames; that job computes every
-    signature of the batch AND the corpus and fills both caches.
-    """
-    assert num_hashes % bands == 0, "bands must divide num_hashes"
-    rows_per_band = num_hashes // bands
-
-    def prep(df):
-        filtered = df.filter(F.length(F.col(text_col)) >= shingle_size)
-        return minhash_signatures(
-            ensure_min_partitions(filtered), id_col, text_col,
-            num_hashes, shingle_size,
-        )
-
-    from ..caching import tracked_persist
-
-    new_sigs = tracked_persist(prep(new_docs))
-    corpus_sigs = tracked_persist(prep(corpus))
-
-    from ..functions.sqlexpr import band_hash_sql
-
-    def band_hash(b: int):
-        return F.expr(
-            band_hash_sql(
-                "`signature`",
-                b * rows_per_band + 1,
-                (b + 1) * rows_per_band,
-            )
-        )
-
-    def banded(sigs):
-        return sigs.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(b).alias("band"),
-                            band_hash(b).alias("band_hash"),
-                        )
-                        for b in range(bands)
-                    ]
-                )
-            ).alias("bh"),
-        ).select(id_col, "bh.band", "bh.band_hash")
-
-    # build side = corpus buckets + the new batch's own buckets (so the
-    # batch dedups against itself); the corpus is never self-joined
-    build_all = (
-        banded(corpus_sigs)
-        .withColumn("_new", F.lit(False))
-        .unionByName(banded(new_sigs).withColumn("_new", F.lit(True)))
-    )
-    # eager-literal hot-bucket detection exactly as in minhash_pairs
-    # (see _detect_hot_buckets): grid size from the BUILD side
-    # (everything a probe row can match); both sides take the same
-    # per-bucket S via the shared literal frame, so pair (a, b) meets
-    # once at (home(a), home(b)). A standing-corpus hot bucket is THE
-    # skew case for continuous ingest — every nightly batch re-joins it.
-    hot = _detect_hot_buckets(
-        banded(corpus_sigs).unionByName(banded(new_sigs)), id_col
-    )
-    if hot is None:
-        probe = banded(new_sigs).select(
-            F.col(id_col).alias("id_a"), "band", "band_hash"
-        )
-        build = build_all.select(
-            F.col(id_col).alias("id_b"), "band", "band_hash", "_new"
-        )
-        join_key = ["band", "band_hash"]
-    else:
-        probe = _attach_grid(banded(new_sigs), hot, id_col).select(
-            F.col(id_col).alias("id_a"),
-            "band",
-            "band_hash",
-            F.col("_home").alias("_x"),
-            _grid_cells().alias("_y"),
-        )
-        build = _attach_grid(build_all, hot, id_col).select(
-            F.col(id_col).alias("id_b"),
-            "band",
-            "band_hash",
-            "_new",
-            _grid_cells().alias("_x"),
-            F.col("_home").alias("_y"),
-        )
-        join_key = ["band", "band_hash", "_x", "_y"]
-    pairs = (
-        probe.join(build, on=join_key)
-        # new-new pairs would appear in both orientations: keep id_a<id_b;
-        # new-corpus pairs keep the new doc as id_a unconditionally
-        .filter(
-            (~F.col("_new") & (F.col("id_a") != F.col("id_b")))
-            | (F.col("_new") & (F.col("id_a") < F.col("id_b")))
-        )
-        .select("id_a", "id_b", (~F.col("_new")).alias("cross_batch"))
-        .distinct()
-    )
-    sig_a = new_sigs.select(
-        F.col(id_col).alias("id_a"), F.col("signature").alias("sig_a")
-    )
-    all_sigs = corpus_sigs.unionByName(new_sigs)
-    sig_b = all_sigs.select(
-        F.col(id_col).alias("id_b"), F.col("signature").alias("sig_b")
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    est = (agree.cast("double") / F.lit(float(num_hashes))).alias(
-        "est_jaccard"
-    )
-    return (
-        pairs.join(sig_a, on="id_a")
-        .join(sig_b, on="id_b")
-        .select("id_a", "id_b", "cross_batch", est)
-        .filter(F.col("est_jaccard") >= min_jaccard)
     )
 
 
@@ -1541,6 +1469,47 @@ def winnowing_fingerprints(
     )
 
 
+def _winnowing_pairs(
+    new_fps: DataFrame,
+    corpus_fps: "DataFrame | None",
+    min_shared: int,
+    max_doc_freq: "int | None",
+) -> DataFrame:
+    """Core of :func:`winnowing_overlap_pairs` (``corpus_fps=None``) and
+    :func:`winnowing_overlap_incremental`: df cap, fingerprint-keyed
+    candidate rows, ``n_shared`` count per pair."""
+    if min_shared < 1:
+        raise ValueError(f"min_shared must be >= 1 (got {min_shared})")
+    from ..caching import tracked_persist
+
+    # three consumers (df counts + both join sides) — without the persist
+    # each re-runs the whole fingerprint extraction upstream (measured 3x
+    # the query's wall clock)
+    new_p = tracked_persist(new_fps)
+    corp_p = None if corpus_fps is None else tracked_persist(corpus_fps)
+    if max_doc_freq is not None:
+        every = new_p.select("fingerprint")
+        if corp_p is not None:
+            every = every.unionByName(corp_p.select("fingerprint"))
+        kept = (
+            every.groupBy("fingerprint")
+            .agg(F.count(F.lit(1)).alias("_df"))
+            .filter(F.col("_df") <= max_doc_freq)
+            .select("fingerprint")
+        )
+        new_p = new_p.join(kept, on="fingerprint")
+        if corp_p is not None:
+            corp_p = corp_p.join(kept, on="fingerprint")
+    flag = [] if corpus_fps is None else ["cross_batch"]
+    return (
+        _pair_candidates(new_p, corp_p, ["fingerprint"], "doc_id")
+        .groupBy("id_a", "id_b", *flag)
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= min_shared)
+        .select("id_a", "id_b", "n_shared", *flag)
+    )
+
+
 def winnowing_overlap_pairs(
     fingerprints: DataFrame,
     min_shared: int = 2,
@@ -1561,32 +1530,7 @@ def winnowing_overlap_pairs(
     17.5x at 16x scale). Input is :func:`winnowing_fingerprints`
     output; result: ``(id_a, id_b, n_shared)`` with ``id_a < id_b``.
     """
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1 (got {min_shared})")
-    from ..caching import tracked_persist
-
-    # three consumers (df counts + both self-join sides) — without the
-    # persist each re-runs the whole fingerprint extraction upstream
-    # (measured 3x the query's wall clock)
-    fps = tracked_persist(fingerprints)
-    if max_doc_freq is not None:
-        dfreq = fps.groupBy("fingerprint").agg(
-            F.count(F.lit(1)).alias("_df")
-        )
-        fps = (
-            fps.join(dfreq, on="fingerprint")
-            .filter(F.col("_df") <= max_doc_freq)
-            .drop("_df")
-        )
-    a = fps.select(F.col("fingerprint"), F.col("doc_id").alias("id_a"))
-    b = fps.select(F.col("fingerprint"), F.col("doc_id").alias("id_b"))
-    return (
-        a.join(b, on="fingerprint")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
+    return _winnowing_pairs(fingerprints, None, min_shared, max_doc_freq)
 
 
 def winnowing_overlap_incremental(
@@ -1615,44 +1559,7 @@ def winnowing_overlap_incremental(
     cross_batch)`` — ``id_a < id_b`` for new-new pairs; ``id_a`` = the
     new doc for new-corpus pairs.
     """
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1 (got {min_shared})")
-    from ..caching import tracked_persist
-
-    new_p = tracked_persist(new_fps.select("doc_id", "fingerprint"))
-    corp_p = tracked_persist(corpus_fps.select("doc_id", "fingerprint"))
-    if max_doc_freq is not None:
-        dfreq = (
-            new_p.unionByName(corp_p)
-            .groupBy("fingerprint")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_doc_freq)
-            .select("fingerprint")
-        )
-        new_p = new_p.join(dfreq, on="fingerprint")
-        corp_p = corp_p.join(dfreq, on="fingerprint")
-    probe = new_p.select(
-        "fingerprint", F.col("doc_id").alias("id_a")
-    )
-    build = new_p.select(
-        "fingerprint",
-        F.col("doc_id").alias("id_b"),
-        F.lit(False).alias("cross_batch"),
-    ).unionByName(
-        corp_p.select(
-            "fingerprint",
-            F.col("doc_id").alias("id_b"),
-            F.lit(True).alias("cross_batch"),
-        )
-    )
-    return (
-        probe.join(build, on="fingerprint")
-        .filter(F.col("cross_batch") | (F.col("id_a") < F.col("id_b")))
-        .groupBy("id_a", "id_b", "cross_batch")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-        .select("id_a", "id_b", "n_shared", "cross_batch")
-    )
+    return _winnowing_pairs(new_fps, corpus_fps, min_shared, max_doc_freq)
 
 
 def exact_substring_spans(
@@ -1660,7 +1567,6 @@ def exact_substring_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = 30,
-    gram_persist: str = "memory_and_disk",
     widen_inputs: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring spans, the Lee et al. operator
@@ -1710,17 +1616,12 @@ def exact_substring_spans(
     the doc count. When sampled detection is acceptable, winnowing is
     the cheap alternative; this operator is for exact boundaries.
 
-    ``gram_persist`` controls the per-position grams cache, which two
-    plan branches consume (the frequency agg and the candidate
-    re-join) and whose size is ~20 B per corpus CHARACTER:
-    ``"memory_and_disk"`` (default — right in local/medium jobs where
-    the cache fits), ``"disk_only"`` (a corpus-scale cluster run,
-    where a corpus-sized cache must not evict executor storage
-    memory), or ``"none"`` (recompute the gram projection per branch —
-    trades one extra scan + hash pass for zero cache footprint; the
-    projection is cheap relative to the exchange, so this is the
-    honest choice when even local disk is tight). The 16x A/B backing
-    the default is in tools/scaleup_r8.py / BASELINE.md.
+    The per-position grams cache, which two plan branches consume (the
+    frequency agg and the candidate re-join), is a MEMORY_AND_DISK
+    tracked persist of ~20 B per corpus CHARACTER. The disk-only and
+    recompute alternatives were measured at 16x and 64x (BASELINE.md,
+    "Round 9: 16x scale-up, round-8 operators" and "Round 10: 64x scale
+    row, exact substring spans").
 
     Documents shorter than ``min_len`` have no grams and yield no spans
     (``F.sequence`` would count DOWN for them, hence the explicit
@@ -1731,19 +1632,6 @@ def exact_substring_spans(
     """
     if min_len < 2:
         raise ValueError(f"min_len must be >= 2 (got {min_len})")
-    from pyspark.storagelevel import StorageLevel
-
-    _LEVELS = {
-        "memory_and_disk": StorageLevel.MEMORY_AND_DISK,
-        "disk_only": StorageLevel.DISK_ONLY,
-        "none": None,
-    }
-    if gram_persist not in _LEVELS:
-        raise ValueError(
-            f"gram_persist must be one of {sorted(_LEVELS)} "
-            f"(got {gram_persist!r})"
-        )
-    _gram_level = _LEVELS[gram_persist]
     from ..caching import tracked_persist
 
     # widen before the per-position gram explode (THE expensive
@@ -1757,10 +1645,8 @@ def exact_substring_spans(
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     grams = _span_gram_explode(base, min_len)
     # two consumers (the frequency agg + the candidate re-join) — without
-    # the persist the per-position gram hashing runs twice; level per the
-    # gram_persist contract above
-    if _gram_level is not None:
-        grams = tracked_persist(grams, level=_gram_level)
+    # the persist the per-position gram hashing runs twice
+    grams = tracked_persist(grams)
     dup_hashes = (
         grams.groupBy("gh")
         .agg(F.count(F.lit(1)).alias("_n"))

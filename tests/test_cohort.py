@@ -1,8 +1,9 @@
 """Cohort-construction tests: criteria chain, null-as-fail, flowchart
-equivalence across physical strategies, validation errors."""
+counts against the reference's unpivot plan, validation errors."""
 
 import pytest
 from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
 from hds_functions_spark import (
     apply_inclusion_criteria,
@@ -11,6 +12,7 @@ from hds_functions_spark import (
     validate_cohort_columns,
     validate_inclusion_criteria,
 )
+from hds_functions_spark.operators import cohort as cohort_ops
 
 CRITERIA = {"valid_id": "person_id IS NOT NULL", "age_ok": "age < 65"}
 
@@ -56,10 +58,41 @@ def test_cumulative_chain_order(cohort):
     assert rows[3]["criteria_1"] is False and rows[3]["criteria_2"] is False
 
 
-@pytest.mark.parametrize("strategy", ["two_level", "unpivot"])
-def test_flowchart_counts(cohort, strategy):
+def _unpivot_counts(cohort_flagged, criteria_columns, person_id_col):
+    """The reference's counting plan (``cohort_construction.py:163-180``):
+    unpivot to one row per (row, criterion), then a conditional
+    aggregate. The oracle the library's two-level counts must match."""
+    ids = ["row_id", person_id_col]
+    unpivoted = cohort_flagged.select(ids + criteria_columns).unpivot(
+        ids=ids,
+        values=criteria_columns,
+        variableColumnName="criteria",
+        valueColumnName="passed",
+    )
+    return unpivoted.groupBy("criteria").agg(
+        F.count(F.when(F.col("passed"), 1)).alias("n_row"),
+        F.count_distinct(
+            F.when(F.col("passed"), F.col(person_id_col))
+        ).alias("n_distinct_id"),
+    )
+
+
+def _flowchart(flagged, counts, monkeypatch):
+    """The library flowchart, its counts from the two-level plan or, for
+    ``counts='unpivot'``, from the reference plan above."""
+    if counts == "unpivot":
+        monkeypatch.setattr(
+            cohort_ops, "_flowchart_counts_two_level", _unpivot_counts
+        )
+    fc = create_inclusion_flowchart(flagged, CRITERIA)
+    monkeypatch.undo()
+    return fc
+
+
+@pytest.mark.parametrize("counts", ["two_level", "unpivot"])
+def test_flowchart_counts(cohort, counts, monkeypatch):
     flagged = create_inclusion_columns(cohort, CRITERIA)
-    fc = create_inclusion_flowchart(flagged, CRITERIA, strategy=strategy)
+    fc = _flowchart(flagged, counts, monkeypatch)
     rows = fc.collect()
     assert [r["criteria"] for r in rows] == ["criteria_0", "criteria_1", "criteria_2"]
     assert [r["criteria_index"] for r in rows] == [0, 1, 2]
@@ -76,10 +109,10 @@ def test_flowchart_counts(cohort, strategy):
     assert [r["excluded_ids"] for r in rows[1:]] == [0, 2]
 
 
-def test_flowchart_strategies_equivalent(cohort):
+def test_flowchart_strategies_equivalent(cohort, monkeypatch):
     flagged = create_inclusion_columns(cohort, CRITERIA)
-    a = create_inclusion_flowchart(flagged, CRITERIA, strategy="two_level").collect()
-    b = create_inclusion_flowchart(flagged, CRITERIA, strategy="unpivot").collect()
+    a = _flowchart(flagged, "two_level", monkeypatch).collect()
+    b = _flowchart(flagged, "unpivot", monkeypatch).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 

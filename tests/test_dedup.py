@@ -367,28 +367,29 @@ class TestContainmentPairs:
         assert cont.count() == 1  # but the quote IS fully contained
 
 
-class TestIncrementalMinhash:
-    def _frames(self, spark):
-        base = "the quick brown fox jumps over the lazy dog and runs away"
-        rows_corpus = [
-            (1, base),
-            (2, base + " slightly changed tail here"),
-            (3, "completely different content about spark query engines"),
-        ]
-        rows_new = [
-            (100, base),  # near-dup of corpus docs 1 and 2
-            (101, base + " slightly changed tail here"),
-            (102, "nothing like anything else in any corpus at all zzz"),
-        ]
-        mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-        return mk(rows_new), mk(rows_corpus)
+def _minhash_frames(spark):
+    base = "the quick brown fox jumps over the lazy dog and runs away"
+    rows_corpus = [
+        (1, base),
+        (2, base + " slightly changed tail here"),
+        (3, "completely different content about spark query engines"),
+    ]
+    rows_new = [
+        (100, base),  # near-dup of corpus docs 1 and 2
+        (101, base + " slightly changed tail here"),
+        (102, "nothing like anything else in any corpus at all zzz"),
+    ]
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    return mk(rows_new), mk(rows_corpus)
 
+
+class TestIncrementalMinhash:
     def test_finds_cross_and_within_batch_pairs(self, spark):
         from hds_functions_spark.operators.dedup import (
             minhash_pairs_incremental,
         )
 
-        new, corpus = self._frames(spark)
+        new, corpus = _minhash_frames(spark)
         out = minhash_pairs_incremental(
             new, corpus, min_jaccard=0.5
         ).collect()
@@ -406,37 +407,11 @@ class TestIncrementalMinhash:
             minhash_pairs_incremental,
         )
 
-        new, corpus = self._frames(spark)
+        new, corpus = _minhash_frames(spark)
         out = minhash_pairs_incremental(new, corpus, min_jaccard=0.0).collect()
         # corpus docs 1 and 2 are near-dups of each other, but that pair
         # is old work — it must NOT reappear
         assert all(r["id_a"] >= 100 for r in out)
-
-    def test_matches_full_pairs_on_the_new_slice(self, spark):
-        from hds_functions_spark.operators.dedup import (
-            minhash_pairs,
-            minhash_pairs_incremental,
-        )
-
-        new, corpus = self._frames(spark)
-        full = {
-            (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"])): r[
-                "est_jaccard"
-            ]
-            for r in minhash_pairs(
-                new.unionByName(corpus), min_jaccard=0.5
-            ).collect()
-            if r["id_a"] >= 100 or r["id_b"] >= 100
-        }
-        inc = {
-            (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"])): r[
-                "est_jaccard"
-            ]
-            for r in minhash_pairs_incremental(
-                new, corpus, min_jaccard=0.5
-            ).collect()
-        }
-        assert inc == full  # identical pairs + identical estimates
 
 
 # --- robust winnowing fingerprints ---------------------------------------
@@ -540,55 +515,6 @@ def test_winnowing_validation(spark):
         winnowing_overlap_pairs(df.selectExpr("doc_id", "'x' AS fingerprint"), min_shared=0)
 
 
-def test_winnowing_incremental_slice_equals_full(spark):
-    """The incremental builder restricted to batch-touching pairs must
-    equal winnowing_overlap_pairs on the union corpus — the same
-    guarantee minhash_pairs_incremental pins (the df cap sees the same
-    totals either way)."""
-    from hds_functions_spark.operators.dedup import (
-        winnowing_fingerprints,
-        winnowing_overlap_incremental,
-        winnowing_overlap_pairs,
-    )
-
-    shared = "the same duplicated passage of shared text appears here"
-    rows = [
-        (1, shared + " corpus one"),
-        (2, shared + " corpus two"),
-        (3, "completely unrelated corpus document number three"),
-        (10, shared + " batch arrival"),
-        (11, "another unrelated batch document entirely"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    fps = winnowing_fingerprints(df, gram_size=8, window=8)
-    full = {
-        (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in winnowing_overlap_pairs(fps, min_shared=2).collect()
-    }
-    new_ids = {10, 11}
-    expected = {
-        pair: n
-        for pair, n in full.items()
-        if pair[0] in new_ids or pair[1] in new_ids
-    }
-    new_fps = fps.filter(F.col("doc_id") >= 10)
-    corp_fps = fps.filter(F.col("doc_id") < 10)
-    got = {}
-    for r in winnowing_overlap_incremental(
-        new_fps, corp_fps, min_shared=2
-    ).collect():
-        a, b = r["id_a"], r["id_b"]
-        key = (min(a, b), max(a, b))
-        got[key] = r["n_shared"]
-        # cross-batch pairs lead with the new doc
-        if r["cross_batch"]:
-            assert a in new_ids and b not in new_ids
-        else:
-            assert a in new_ids and b in new_ids and a < b
-    assert got == expected
-    assert any(k[1] >= 10 or k[0] >= 10 for k in got)
-
-
 def test_winnowing_incremental_df_cap_counts_both_sides(spark):
     from hds_functions_spark.operators.dedup import (
         winnowing_fingerprints,
@@ -686,65 +612,113 @@ def test_source_overlap_matrix_df_cap_drops_boilerplate(spark):
     assert capped == {("a", "b"): 1}  # only fp 200 survives
 
 
+def _embedding_frames(spark):
+    emb = spark.read.parquet(
+        "/root/testdata/sf0.001/embeddings.parquet"
+    ).select("vec_id", "embedding")
+    corpus = emb.filter(F.col("vec_id") % 10 != 7)
+    batch = emb.filter(F.col("vec_id") % 10 == 7)
+    return batch, corpus
+
+
 class TestIncrementalEmbeddingPairs:
-    def _frames(self, spark):
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).select("vec_id", "embedding")
-        from pyspark.sql import functions as F
-
-        corpus = emb.filter(F.col("vec_id") % 10 != 7)
-        batch = emb.filter(F.col("vec_id") % 10 == 7)
-        return batch, corpus, emb
-
-    def test_slice_identity_vs_full(self, spark):
-        """incremental(batch, corpus) == full(batch + corpus) restricted
-        to pairs touching the batch — the family's defining property."""
-        from pyspark.sql import functions as F
-
-        from hds_functions_spark.operators.dedup import (
-            embedding_near_dup_pairs,
-            embedding_near_dup_pairs_incremental,
-        )
-
-        batch, corpus, emb = self._frames(spark)
-        batch_ids = {r["vec_id"] for r in batch.collect()}
-        full = {
-            (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"])): r[
-                "cosine_sim"
-            ]
-            for r in embedding_near_dup_pairs(emb, threshold=0.2).collect()
-            if r["id_a"] in batch_ids or r["id_b"] in batch_ids
-        }
-        inc_rows = embedding_near_dup_pairs_incremental(
-            batch, corpus, threshold=0.2
-        ).collect()
-        inc = {
-            (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"])): r[
-                "cosine_sim"
-            ]
-            for r in inc_rows
-        }
-        assert inc == full
-        # orientation + flag rules
-        for r in inc_rows:
-            assert r["id_a"] in batch_ids  # a new vector leads every pair
-            if r["cross_batch"]:
-                assert r["id_b"] not in batch_ids
-            else:
-                assert r["id_b"] in batch_ids and r["id_a"] < r["id_b"]
-
     def test_corpus_pairs_never_emitted(self, spark):
         from hds_functions_spark.operators.dedup import (
             embedding_near_dup_pairs_incremental,
         )
 
-        batch, corpus, _ = self._frames(spark)
+        batch, corpus = _embedding_frames(spark)
         out = embedding_near_dup_pairs_incremental(
             batch, corpus, threshold=0.0
         ).collect()
         batch_ids = {r["vec_id"] for r in batch.collect()}
         assert out and all(r["id_a"] in batch_ids for r in out)
+
+
+# --- incremental twins: the slice identity of every pair family -------
+
+
+def _slice_case(spark, family):
+    """``(batch_op, incremental_op, new, corpus, id_col, score)`` of one
+    pair family, on a batch whose ids are disjoint from the corpus'."""
+    from hds_functions_spark.operators import dedup as D
+
+    if family == "minhash":
+        new, corpus = _minhash_frames(spark)
+        return (
+            lambda f: D.minhash_pairs(f, min_jaccard=0.5),
+            lambda n, c: D.minhash_pairs_incremental(n, c, min_jaccard=0.5),
+            new, corpus, "doc_id", "est_jaccard",
+        )
+    if family == "embedding":
+        new, corpus = _embedding_frames(spark)
+        return (
+            lambda f: D.embedding_near_dup_pairs(f, threshold=0.2),
+            lambda n, c: D.embedding_near_dup_pairs_incremental(
+                n, c, threshold=0.2
+            ),
+            new, corpus, "vec_id", "cosine_sim",
+        )
+    shared = "the same duplicated passage of shared text appears here"
+    rows = [
+        (1, shared + " corpus one"),
+        (2, shared + " corpus two"),
+        (3, "completely unrelated corpus document number three"),
+        (10, shared + " batch arrival"),
+        (11, "another unrelated batch document entirely"),
+        (12, shared + " second batch arrival"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id: long, text: string")
+    fps = D.winnowing_fingerprints(df, gram_size=8, window=8)
+    return (
+        lambda f: D.winnowing_overlap_pairs(f, min_shared=2),
+        lambda n, c: D.winnowing_overlap_incremental(n, c, min_shared=2),
+        fps.filter(F.col("doc_id") >= 10),
+        fps.filter(F.col("doc_id") < 10),
+        "doc_id", "n_shared",
+    )
+
+
+@pytest.mark.parametrize("ansi", [False, True], ids=["ansi_off", "ansi_on"])
+@pytest.mark.parametrize("family", ["minhash", "embedding", "winnowing"])
+def test_incremental_slice_identity(spark, family, ansi):
+    """incremental(new, corpus) == batch(new + corpus) restricted to the
+    pairs touching ``new`` — identical pairs and scores, a new id
+    leading every pair, ``cross_batch`` set exactly on new-corpus pairs.
+    With an empty corpus the incremental twin is the batch operator on
+    ``new``."""
+    batch_op, inc_op, new, corpus, id_col, score = _slice_case(spark, family)
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        new_ids = {r[0] for r in new.select(id_col).collect()}
+        full = {
+            (r["id_a"], r["id_b"]): r[score]
+            for r in batch_op(new.unionByName(corpus)).collect()
+            if r["id_a"] in new_ids or r["id_b"] in new_ids
+        }
+        rows = inc_op(new, corpus).collect()
+        got = {
+            (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"])): r[score]
+            for r in rows
+        }
+        assert got == full
+        assert any(r["cross_batch"] for r in rows)
+        assert any(not r["cross_batch"] for r in rows)
+        for r in rows:
+            assert r["id_a"] in new_ids
+            if r["cross_batch"]:
+                assert r["id_b"] not in new_ids
+            else:
+                assert r["id_b"] in new_ids and r["id_a"] < r["id_b"]
+
+        alone = {
+            (r["id_a"], r["id_b"]): r[score] for r in batch_op(new).collect()
+        }
+        empty = inc_op(new, corpus.limit(0)).collect()
+        assert {(r["id_a"], r["id_b"]): r[score] for r in empty} == alone
+        assert not any(r["cross_batch"] for r in empty)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
 
 
 # --- sub-document (paragraph) near-dedup, r16 ----------------------------
@@ -917,11 +891,16 @@ class TestHotBucketGrid:
         ]
         return spark.createDataFrame(rows, "doc_id: long, text: string")
 
-    def _pairs_set(self, df, **kw):
-        return {
-            (r["id_a"], r["id_b"], round(r["est_jaccard"], 9))
-            for r in minhash_pairs(df, **kw).collect()
-        }
+    def _pairs_set(self, df):
+        from hds_functions_spark.caching import release_operator_caches
+
+        try:
+            return {
+                (r["id_a"], r["id_b"], round(r["est_jaccard"], 9))
+                for r in minhash_pairs(df).collect()
+            }
+        finally:
+            release_operator_caches()
 
     def test_grid_identity_self_join(self, spark, monkeypatch):
         from hds_functions_spark.operators import dedup as D
@@ -931,9 +910,9 @@ class TestHotBucketGrid:
         # the tiny corpus is guaranteed to trip the lowered chunk
         monkeypatch.setattr(D, "_LSH_HOT_SAMPLE", 1)
         monkeypatch.setattr(D, "_LSH_BUCKET_CHUNK", 1 << 30)
-        off = self._pairs_set(docs, persist_signatures=False)
+        off = self._pairs_set(docs)
         monkeypatch.setattr(D, "_LSH_BUCKET_CHUNK", 3)  # force S >= 4
-        on = self._pairs_set(docs, persist_signatures=False)
+        on = self._pairs_set(docs)
         assert on == off
         # sanity: the hot bucket really produced quadratic pairs
         assert len(on) >= 12 * 11 // 2
@@ -953,11 +932,16 @@ class TestHotBucketGrid:
         )
 
         def run():
-            return {
-                (r["id_a"], r["id_b"], r["cross_batch"],
-                 round(r["est_jaccard"], 9))
-                for r in minhash_pairs_incremental(new, corpus).collect()
-            }
+            from hds_functions_spark.caching import release_operator_caches
+
+            try:
+                return {
+                    (r["id_a"], r["id_b"], r["cross_batch"],
+                     round(r["est_jaccard"], 9))
+                    for r in minhash_pairs_incremental(new, corpus).collect()
+                }
+            finally:
+                release_operator_caches()
 
         monkeypatch.setattr(D, "_LSH_BUCKET_CHUNK", 1 << 30)
         off = run()

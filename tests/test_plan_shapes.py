@@ -514,3 +514,47 @@ def test_image_pipelines_never_shuffle_pixels(spark, qname):
     for line in plan.splitlines():
         if "Exchange" in line:
             assert "payload#" not in line, line
+
+
+@pytest.mark.parametrize(
+    "family",
+    ["minhash_pairs", "embedding_near_dup_pairs", "winnowing_overlap_pairs"],
+)
+def test_batch_pair_operator_is_a_plain_self_join(docs, emb, family):
+    """Each batch pair operator is the self case of the shared
+    candidate-pair engine: one keyed frame joined with itself. Standing
+    in an empty corpus instead would put a Union and a ``cross_batch`` /
+    ``_new`` flag column into the plan, as its incremental twin has.
+    The embedding case uses one band, so its union banding adds no
+    Union either."""
+    import re
+
+    from hds_functions_spark.caching import release_operator_caches
+    from hds_functions_spark.operators import dedup as D
+
+    def split(df, id_col):
+        new = F.col(id_col) % 5 == 0
+        return df.filter(new), df.filter(~new)
+
+    if family == "minhash_pairs":
+        batch = D.minhash_pairs(docs)
+        twin = D.minhash_pairs_incremental(*split(docs, "doc_id"))
+    elif family == "embedding_near_dup_pairs":
+        batch = D.embedding_near_dup_pairs(emb, bands=1)
+        twin = D.embedding_near_dup_pairs_incremental(
+            *split(emb, "vec_id"), bands=1
+        )
+    else:
+        fps = D.winnowing_fingerprints(docs)
+        batch = D.winnowing_overlap_pairs(fps)
+        twin = D.winnowing_overlap_incremental(*split(fps, "doc_id"))
+    try:
+        plans = [
+            df._jdf.queryExecution().optimizedPlan().toString()
+            for df in (batch, twin)
+        ]
+    finally:
+        release_operator_caches()
+    flag = re.compile(r"\b(cross_batch|_new)#")
+    assert "Union" not in plans[0] and not flag.search(plans[0]), plans[0]
+    assert "Union" in plans[1] and flag.search(plans[1])

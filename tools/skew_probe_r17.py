@@ -113,6 +113,7 @@ def main() -> None:
     )
     docs = hot.unionByName(cold)
 
+    from hds_functions_spark.caching import release_operator_caches
     from hds_functions_spark.operators.dedup import minhash_pairs
 
     def _stage_watermark():
@@ -145,9 +146,7 @@ def main() -> None:
                 "spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2"
             )
         spark.sparkContext.setJobDescription(f"skew-probe pairs {tag}")
-        pairs = minhash_pairs(
-            docs, min_jaccard=0.99, persist_signatures=False
-        )
+        pairs = minhash_pairs(docs, min_jaccard=0.99)
         t0 = time.perf_counter()
         n = pairs.count()
         wall = round(time.perf_counter() - t0, 2)
@@ -162,6 +161,9 @@ def main() -> None:
             "aqe_skew_reader_fired": "skew=true" in plan,
             **(hist or {}),
         }
+        # every run recomputes its signatures instead of reading the
+        # previous run's cache
+        release_operator_caches()
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sparkContext.setJobDescription(None)
 
@@ -197,17 +199,14 @@ def main() -> None:
             )
             spark.sparkContext.setJobDescription(f"skew-probe grid {tag}")
             t0 = time.perf_counter()
-            n = (
-                minhash_pairs(docs, min_jaccard=0.99,
-                              persist_signatures=False)
-                .count()
-            )
+            n = minhash_pairs(docs, min_jaccard=0.99).count()
             wall = round(time.perf_counter() - t0, 2)
             hist = task_histogram(app, lambda s: s["stageId"] > wm)
             report[f"grid_{tag}"] = {
                 "wall_s": wall, "n_pairs": n, **(hist or {}),
             }
         finally:
+            release_operator_caches()
             _D._LSH_BUCKET_CHUNK = old
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
             spark.conf.unset(
