@@ -34,6 +34,7 @@ part of the LLM-data-pipeline extension bar.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -292,11 +293,6 @@ def build_tree_codebook(
         k_top = max(1, int(round(math.sqrt(k))))
     k_top = max(1, min(k_top, k))
 
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover - numpy ships with pyspark
-        np = None
-
     # hash-spread seed selection, the kmeans_fit discipline applied to
     # the codebook: evenly-spaced indices collapse when centroid order
     # is correlated with cluster structure (measured: an i-mod-C
@@ -311,87 +307,44 @@ def build_tree_codebook(
         ),
     )[:k_top]
 
-    if np is not None:
-        cmat = np.asarray(centroids, dtype=np.float64)
-        tops = cmat[seed_idx].copy()
-        c_sq = (cmat * cmat).sum(axis=1)
-        for _ in range(n_iter):
-            # ||a-b||^2 via the gemm trick: k x k_top stays memory-flat
-            # where a broadcasted (k, k_top, dim) cube would not
-            d2 = c_sq[:, None] + (tops * tops).sum(axis=1)[None, :]
-            d2 -= 2.0 * (cmat @ tops.T)
-            assign = d2.argmin(axis=1)  # first minimum: lowest cid
-            for j in range(k_top):
-                members = cmat[assign == j]
-                if len(members):
-                    tops[j] = members.mean(axis=0)
+    cmat = np.asarray(centroids, dtype=np.float64)
+    tops = cmat[seed_idx].copy()
+    c_sq = (cmat * cmat).sum(axis=1)
+    for _ in range(n_iter):
+        # ||a-b||^2 via the gemm trick: k x k_top stays memory-flat
+        # where a broadcasted (k, k_top, dim) cube would not
         d2 = c_sq[:, None] + (tops * tops).sum(axis=1)[None, :]
         d2 -= 2.0 * (cmat @ tops.T)
-        assign = d2.argmin(axis=1)
-        child_dist = np.sqrt(
-            np.maximum(((cmat - tops[assign]) ** 2).sum(axis=1), 0.0)
-        )
-        coarse, children = [], {}
+        assign = d2.argmin(axis=1)  # first minimum: lowest cid
         for j in range(k_top):
-            mask = assign == j
-            if not mask.any():
-                continue
-            dists = child_dist[mask]
-            up = 1.0 + _TREE_BOUND_SLACK
-            coarse.append(
-                {
-                    "cid": j,
-                    "c": [float(x) for x in tops[j]],
-                    "r": float(dists.max()) * up + _TREE_BOUND_SLACK,
-                    "m": float(dists.min()) * up + _TREE_BOUND_SLACK,
-                }
-            )
-            children[j] = [
-                (int(i), [float(x) for x in cmat[i]])
-                for i in np.nonzero(mask)[0]
-            ]
-        return coarse, children
-
-    # pure-python fallback (small k only — tests without numpy)
-    def sq(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
-    tops = [list(map(float, centroids[i])) for i in seed_idx]
-    d = len(centroids[0])
-    for _ in range(n_iter):
-        assign = [
-            min(range(k_top), key=lambda j: (sq(c, tops[j]), j))
-            for c in centroids
-        ]
-        members = {j: [] for j in range(k_top)}
-        for i, j in enumerate(assign):
-            members[j].append(i)
-        for j in range(k_top):
-            if members[j]:
-                tops[j] = [
-                    sum(centroids[i][x] for i in members[j]) / len(members[j])
-                    for x in range(d)
-                ]
-    assign = [
-        min(range(k_top), key=lambda j: (sq(c, tops[j]), j))
-        for c in centroids
-    ]
+            members = cmat[assign == j]
+            if len(members):
+                tops[j] = members.mean(axis=0)
+    d2 = c_sq[:, None] + (tops * tops).sum(axis=1)[None, :]
+    d2 -= 2.0 * (cmat @ tops.T)
+    assign = d2.argmin(axis=1)
+    child_dist = np.sqrt(
+        np.maximum(((cmat - tops[assign]) ** 2).sum(axis=1), 0.0)
+    )
     coarse, children = [], {}
     up = 1.0 + _TREE_BOUND_SLACK
     for j in range(k_top):
-        idxs = [i for i, a in enumerate(assign) if a == j]
-        if not idxs:
+        mask = assign == j
+        if not mask.any():
             continue
-        dists = [math.sqrt(sq(centroids[i], tops[j])) for i in idxs]
+        dists = child_dist[mask]
         coarse.append(
             {
                 "cid": j,
-                "c": tops[j],
-                "r": max(dists) * up + _TREE_BOUND_SLACK,
-                "m": min(dists) * up + _TREE_BOUND_SLACK,
+                "c": [float(x) for x in tops[j]],
+                "r": float(dists.max()) * up + _TREE_BOUND_SLACK,
+                "m": float(dists.min()) * up + _TREE_BOUND_SLACK,
             }
         )
-        children[j] = [(i, [float(x) for x in centroids[i]]) for i in idxs]
+        children[j] = [
+            (int(i), [float(x) for x in cmat[i]])
+            for i in np.nonzero(mask)[0]
+        ]
     return coarse, children
 
 
@@ -647,8 +600,6 @@ def _sampled_fanout_frac(
     with an early-stop limit, collecting <= ``n_sample`` vectors.
     Returns 1.0 (probe everything -> broadcast) when the sample comes
     back empty — the safe verdict."""
-    import math
-
     rows = (
         df.select(vec_col)
         .filter(F.size(F.col(vec_col)) == dim)
@@ -666,41 +617,23 @@ def _sampled_fanout_frac(
     if not rows or not coarse:
         return 1.0
 
-    centres = [c["c"] for c in coarse]
-    rs = [c["r"] for c in coarse]
-    ms = [c["m"] for c in coarse]
     up = 1.0 + _TREE_BOUND_SLACK
-    try:
-        import numpy as np
-
-        vecs = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
-        cmat = np.asarray(centres, dtype=np.float64)
-        r_arr = np.asarray(rs)
-        m_arr = np.asarray(ms)
-        d2 = (
-            (vecs * vecs).sum(axis=1)[:, None]
-            + (cmat * cmat).sum(axis=1)[None, :]
-            - 2.0 * (vecs @ cmat.T)
-        )
-        bd = np.sqrt(np.maximum(d2, 0.0))
-        best = bd.argmin(axis=1)
-        thresh = (
-            bd[np.arange(len(vecs)), best] + m_arr[best]
-        ) * up + _TREE_BOUND_SLACK
-        fan = (bd - r_arr[None, :] <= thresh[:, None]).sum(axis=1)
-        return float(fan.mean()) / len(coarse)
-    except ImportError:  # pragma: no cover - numpy ships with pyspark
-        total = 0
-        for r in rows:
-            v = list(r[0])
-            bd = [
-                math.sqrt(sum((x - y) * (x - y) for x, y in zip(v, c)))
-                for c in centres
-            ]
-            b = min(range(len(bd)), key=lambda j: (bd[j], j))
-            thresh = (bd[b] + ms[b]) * up + _TREE_BOUND_SLACK
-            total += sum(1 for j, d in enumerate(bd) if d - rs[j] <= thresh)
-        return total / (len(rows) * len(coarse))
+    vecs = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
+    cmat = np.asarray([c["c"] for c in coarse], dtype=np.float64)
+    r_arr = np.asarray([c["r"] for c in coarse])
+    m_arr = np.asarray([c["m"] for c in coarse])
+    d2 = (
+        (vecs * vecs).sum(axis=1)[:, None]
+        + (cmat * cmat).sum(axis=1)[None, :]
+        - 2.0 * (vecs @ cmat.T)
+    )
+    bd = np.sqrt(np.maximum(d2, 0.0))
+    best = bd.argmin(axis=1)
+    thresh = (
+        bd[np.arange(len(vecs)), best] + m_arr[best]
+    ) * up + _TREE_BOUND_SLACK
+    fan = (bd - r_arr[None, :] <= thresh[:, None]).sum(axis=1)
+    return float(fan.mean()) / len(coarse)
 
 
 def choose_assign_method(

@@ -26,13 +26,9 @@ plan as the oracle the two-level counts are compared against.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-try:  # Spark >= 3.3
-    from pyspark.errors import AnalysisException
-except ImportError:  # pragma: no cover
-    from pyspark.sql.utils import AnalysisException
 
 __all__ = [
     "apply_inclusion_criteria",

@@ -1,10 +1,9 @@
 """Media codecs: PPM/BMP image parse+encode, PCM WAV parse+encode.
 
 These back the ``decoder='real'`` paths in :mod:`multimodal`. The hot
-inner computations (pixel synthesis, nearest-neighbour gather, RMS) are
-numpy-vectorized; pure-stdlib loop fallbacks keep the module importable
-with zero non-stdlib dependencies, so the real codec path runs in any
-environment. Formats covered:
+inner computations (pixel synthesis, nearest-neighbour gather, RMS, DCT)
+are numpy-vectorized; numpy comes with the ``pyspark[sql]`` dependency
+(pandas/pyarrow), so there is one code path per codec. Formats covered:
 
 - **PPM** (netpbm): binary ``P6`` and ascii ``P3``, comment- and
   whitespace-tolerant header parsing; nearest-neighbour resize re-encoding
@@ -53,12 +52,8 @@ import hashlib
 import math
 import struct
 import zlib
-from array import array
 
-try:  # numpy ships with the Arrow/pandas stack; loops below are the fallback
-    import numpy as np
-except ImportError:  # pragma: no cover - numpy is present in any pyspark env
-    np = None
+import numpy as np
 
 __all__ = [
     "WAV_RATES",
@@ -111,10 +106,7 @@ def synthesize_ppm(seed: str) -> bytes:
     """Deterministic P6 image: dims and pixel pattern from md5(seed)."""
     w, h, d = _dims(seed)
     header = b"P6\n" + f"{w} {h}\n".encode() + b"255\n"
-    if np is not None:
-        pixels = ((d[3] + np.arange(w * h * 3)) % 256).astype(np.uint8).tobytes()
-    else:
-        pixels = bytes((d[3] + j) % 256 for j in range(w * h * 3))
+    pixels = ((d[3] + np.arange(w * h * 3)) % 256).astype(np.uint8).tobytes()
     return header + pixels
 
 
@@ -128,22 +120,11 @@ def synthesize_bmp(seed: str) -> bytes:
     info_header = struct.pack(
         "<IiiHHIIiiII", 40, w, h, 1, 24, 0, data_size, 2835, 2835, 0, 0
     )
-    if np is not None:
-        rgb = ((d[3] + np.arange(h * w * 3)) % 256).astype(np.uint8)
-        bgr = rgb.reshape(h, w, 3)[:, :, ::-1]  # BMP stores BGR
-        padded = np.zeros((h, stride), dtype=np.uint8)
-        padded[:, : 3 * w] = bgr.reshape(h, 3 * w)
-        return file_header + info_header + padded[::-1].tobytes()  # bottom-up
-    rows = []
-    for y_out in range(h - 1, -1, -1):  # bottom-up storage, top-down pattern
-        row = bytearray()
-        for x in range(w):
-            base = (y_out * w + x) * 3
-            r, g, b = ((d[3] + base + c) % 256 for c in range(3))
-            row += bytes((b, g, r))  # BMP stores BGR
-        row += b"\x00" * (stride - 3 * w)
-        rows.append(bytes(row))
-    return file_header + info_header + b"".join(rows)
+    rgb = ((d[3] + np.arange(h * w * 3)) % 256).astype(np.uint8)
+    bgr = rgb.reshape(h, w, 3)[:, :, ::-1]  # BMP stores BGR
+    padded = np.zeros((h, stride), dtype=np.uint8)
+    padded[:, : 3 * w] = bgr.reshape(h, 3 * w)
+    return file_header + info_header + padded[::-1].tobytes()  # bottom-up
 
 
 def synthesize_image(seed: str) -> bytes:
@@ -160,15 +141,8 @@ def synthesize_wav(seed: str) -> bytes:
     channels = 1 + d[6] % 2
     frames = 200 + (d[7] * 256 + d[8]) % 800
     amp = d[9] * 128
-    if np is not None:
-        vals = np.where(np.arange(frames) % 2 == 0, amp, -amp)
-        data = np.repeat(vals, channels).astype("<i2").tobytes()
-    else:
-        samples = array("h")
-        for i in range(frames):
-            v = amp if i % 2 == 0 else -amp
-            samples.extend([v] * channels)
-        data = samples.tobytes()
+    vals = np.where(np.arange(frames) % 2 == 0, amp, -amp)
+    data = np.repeat(vals, channels).astype("<i2").tobytes()
     return wav_wrap_pcm(rate, channels, data)
 
 
@@ -218,20 +192,12 @@ def synthesize_wav_tones(seed: str) -> bytes:
     frames = 512 + (d[7] * 256 + d[8]) % 512
     amps = [256 + d[(9 + s) % 16] * 16 for s in range(8)]
     pers = [1 << (d[(s * 2 + 3) % 16] % 4) for s in range(8)]
-    if np is not None:
-        i = np.arange(frames)
-        seg = i * 8 // frames
-        amp = np.asarray(amps, dtype=np.int64)[seg]
-        per = np.asarray(pers, dtype=np.int64)[seg]
-        vals = np.where((i // per) % 2 == 0, amp, -amp)
-        data = np.repeat(vals, channels).astype("<i2").tobytes()
-    else:
-        samples = array("h")
-        for i in range(frames):
-            s = i * 8 // frames
-            v = amps[s] if (i // pers[s]) % 2 == 0 else -amps[s]
-            samples.extend([v] * channels)
-        data = samples.tobytes()
+    i = np.arange(frames)
+    seg = i * 8 // frames
+    amp = np.asarray(amps, dtype=np.int64)[seg]
+    per = np.asarray(pers, dtype=np.int64)[seg]
+    vals = np.where((i // per) % 2 == 0, amp, -amp)
+    data = np.repeat(vals, channels).astype("<i2").tobytes()
     return wav_wrap_pcm(rate, channels, data)
 
 
@@ -253,46 +219,27 @@ def _png_filter_row(ftype: int, row: bytes, prev: bytes, bpp: int) -> bytes:
     Unlike the decoder's unfilter (whose Sub/Average/Paeth recurrences
     consume their own OUTPUT and are inherently sequential), the encoder
     predicts from raw neighbour bytes only, so every filter vectorizes:
-    the numpy path shifts the row/prev arrays and subtracts whole lanes.
+    shift the row/prev arrays and subtract whole lanes.
     """
     n = len(row)
     if ftype == 0:
         return bytes(row)
-    if np is not None:
-        x = np.frombuffer(row, dtype=np.uint8).astype(np.int16)
-        b = np.frombuffer(prev, dtype=np.uint8).astype(np.int16)
-        a = np.zeros(n, dtype=np.int16)
-        a[bpp:] = x[:-bpp]
-        if ftype == 1:  # Sub
-            pred = a
-        elif ftype == 2:  # Up
-            pred = b
-        elif ftype == 3:  # Average
-            pred = (a + b) // 2
-        else:  # Paeth
-            c = np.zeros(n, dtype=np.int16)
-            c[bpp:] = b[:-bpp]
-            pa, pb, pc = np.abs(b - c), np.abs(a - c), np.abs(a + b - 2 * c)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c)
-            )
-        return ((x - pred) & 0xFF).astype(np.uint8).tobytes()
-    out = bytearray(n)
-    for i in range(n):
-        a = row[i - bpp] if i >= bpp else 0
-        b = prev[i]
-        if ftype == 1:  # Sub
-            out[i] = (row[i] - a) & 0xFF
-        elif ftype == 2:  # Up
-            out[i] = (row[i] - b) & 0xFF
-        elif ftype == 3:  # Average
-            out[i] = (row[i] - (a + b) // 2) & 0xFF
-        else:  # Paeth
-            c = prev[i - bpp] if i >= bpp else 0
-            pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - c - c)
-            pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-            out[i] = (row[i] - pred) & 0xFF
-    return bytes(out)
+    x = np.frombuffer(row, dtype=np.uint8).astype(np.int16)
+    b = np.frombuffer(prev, dtype=np.uint8).astype(np.int16)
+    a = np.zeros(n, dtype=np.int16)
+    a[bpp:] = x[:-bpp]
+    if ftype == 1:  # Sub
+        pred = a
+    elif ftype == 2:  # Up
+        pred = b
+    elif ftype == 3:  # Average
+        pred = (a + b) // 2
+    else:  # Paeth
+        c = np.zeros(n, dtype=np.int16)
+        c[bpp:] = b[:-bpp]
+        pa, pb, pc = np.abs(b - c), np.abs(a - c), np.abs(a + b - 2 * c)
+        pred = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
+    return ((x - pred) & 0xFF).astype(np.uint8).tobytes()
 
 
 def synthesize_png(seed: str) -> bytes:
@@ -308,14 +255,8 @@ def synthesize_png(seed: str) -> bytes:
     w, h, d = _dims(seed)
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # RGB8, no interlace
     stride = 3 * w
-    if np is not None:
-        raw = ((d[3] + np.arange(h * stride)) % 256).astype(np.uint8)
-        rows = raw.reshape(h, stride)
-    else:
-        rows = [
-            bytes((d[3] + y * stride + i) % 256 for i in range(stride))
-            for y in range(h)
-        ]
+    raw = ((d[3] + np.arange(h * stride)) % 256).astype(np.uint8)
+    rows = raw.reshape(h, stride)
     filtered = bytearray()
     prev = bytes(stride)
     for y in range(h):
@@ -349,7 +290,7 @@ def _png_unfilter(raw: bytes, w: int, h: int, bpp: int) -> bytes | None:
         pos += 1 + stride
         # numpy pays off only on real-world-sized rows: at fixture widths
         # (<=192 bytes) array setup costs more than the byte loop saves
-        if np is not None and ftype in (1, 2) and stride >= 1024:
+        if ftype in (1, 2) and stride >= 1024:
             lv = np.frombuffer(bytes(line), dtype=np.uint8)
             if ftype == 1:
                 # Sub's left-neighbour recurrence is a per-lane running
@@ -471,17 +412,9 @@ def png_pixel_data(payload: bytes) -> tuple[int, int, bytes] | None:
     w, h, mode, bpp, pixels = decoded
     if mode == "RGB":
         return w, h, pixels
-    if np is not None:
-        px = np.frombuffer(pixels, dtype=np.uint8).reshape(-1, bpp)
-        rgb = np.repeat(px, 3, axis=1) if mode == "L" else px[:, :3]
-        return w, h, rgb.tobytes()
-    out = bytearray()
-    for i in range(0, len(pixels), bpp):
-        if mode == "L":
-            out += pixels[i : i + 1] * 3
-        else:
-            out += pixels[i : i + 3]
-    return w, h, bytes(out)
+    px = np.frombuffer(pixels, dtype=np.uint8).reshape(-1, bpp)
+    rgb = np.repeat(px, 3, axis=1) if mode == "L" else px[:, :3]
+    return w, h, rgb.tobytes()
 
 
 # --- parsing -------------------------------------------------------------
@@ -572,20 +505,10 @@ def resize_ppm_nearest(
         return None
     w, h, pixels = parsed
     header = b"P6\n" + f"{target_w} {target_h}\n".encode() + b"255\n"
-    if np is not None:
-        src = np.frombuffer(pixels, dtype=np.uint8)[: w * h * 3].reshape(h, w, 3)
-        sy = np.arange(target_h) * h // target_h
-        sx = np.arange(target_w) * w // target_w
-        return header + src[sy][:, sx].tobytes()
-    out = bytearray()
-    for y in range(target_h):
-        sy = y * h // target_h
-        row_base = sy * w
-        for x in range(target_w):
-            sx = x * w // target_w
-            base = (row_base + sx) * 3
-            out += pixels[base : base + 3]
-    return header + bytes(out)
+    src = np.frombuffer(pixels, dtype=np.uint8)[: w * h * 3].reshape(h, w, 3)
+    sy = np.arange(target_h) * h // target_h
+    sx = np.arange(target_w) * w // target_w
+    return header + src[sy][:, sx].tobytes()
 
 
 def wav_pcm_data(payload: bytes | None) -> tuple | None:
@@ -630,16 +553,10 @@ def parse_wav(payload: bytes | None) -> dict | None:
         return None
     rate, channels, data = parsed
     usable = len(data) - len(data) % 2
-    if np is not None:
-        samples = np.frombuffer(data[:usable], dtype="<i2").astype(np.int64)
-        n_samples = len(samples)
-        # int64 sum of s^2 is exact up to ~8.6e9 samples (>> any one payload)
-        mean_sq = float((samples * samples).sum()) / n_samples if n_samples else 0.0
-    else:
-        samples = array("h")
-        samples.frombytes(data[:usable])
-        n_samples = len(samples)
-        mean_sq = sum(s * s for s in samples) / n_samples if n_samples else 0.0
+    samples = np.frombuffer(data[:usable], dtype="<i2").astype(np.int64)
+    n_samples = len(samples)
+    # int64 sum of s^2 is exact up to ~8.6e9 samples (>> any one payload)
+    mean_sq = float((samples * samples).sum()) / n_samples if n_samples else 0.0
     n_frames = n_samples // channels if channels else 0
     duration_ms = n_frames * 1000 // rate if rate else 0
     if n_samples:
@@ -677,14 +594,9 @@ def synthesize_y4m(seed: str) -> bytes:
     frame_len = 3 * w * h
     for f in range(n_frames):
         parts.append(b"FRAME\n")
-        if np is not None:
-            parts.append(
-                ((d[3] + f + np.arange(frame_len)) % 256)
-                .astype(np.uint8)
-                .tobytes()
-            )
-        else:
-            parts.append(bytes((d[3] + f + j) % 256 for j in range(frame_len)))
+        parts.append(
+            ((d[3] + f + np.arange(frame_len)) % 256).astype(np.uint8).tobytes()
+        )
     return b"".join(parts)
 
 
@@ -765,8 +677,7 @@ def parse_y4m(payload: bytes | None) -> dict | None:
 def bmp_pixel_data(payload: bytes) -> tuple[int, int, bytes] | None:
     """24bpp BMP payload -> (width, height, top-down raw RGB bytes), or
     None for anything else. Handles bottom-up (positive height) and
-    top-down (negative height) storage and row-stride padding;
-    numpy-vectorized like the other codecs."""
+    top-down (negative height) storage and row-stride padding."""
     p = bytes(payload)
     if p[:2] != b"BM" or len(p) < 54:
         return None
@@ -781,22 +692,13 @@ def bmp_pixel_data(payload: bytes) -> tuple[int, int, bytes] | None:
     stride = (3 * w + 3) // 4 * 4
     if len(p) < off + stride * h:
         return None
-    if np is not None:
-        rows = np.frombuffer(
-            p, dtype=np.uint8, count=stride * h, offset=off
-        ).reshape(h, stride)
-        bgr = rows[:, : 3 * w].reshape(h, w, 3)
-        if not top_down:
-            bgr = bgr[::-1]
-        return w, h, bgr[:, :, ::-1].tobytes()
-    out = bytearray()
-    rng = range(h) if top_down else range(h - 1, -1, -1)
-    for y in rng:
-        base = off + y * stride
-        for x in range(w):
-            b0 = base + 3 * x
-            out += bytes((p[b0 + 2], p[b0 + 1], p[b0]))
-    return w, h, bytes(out)
+    rows = np.frombuffer(
+        p, dtype=np.uint8, count=stride * h, offset=off
+    ).reshape(h, stride)
+    bgr = rows[:, : 3 * w].reshape(h, w, 3)
+    if not top_down:
+        bgr = bgr[::-1]
+    return w, h, bgr[:, :, ::-1].tobytes()
 
 
 def image_pixel_data(payload: bytes | None) -> tuple[int, int, bytes] | None:
@@ -845,33 +747,19 @@ def ahash64_from_pixels(
     """:func:`ahash64` core over already-decoded top-down RGB bytes —
     lets single-pass audits hash without re-decoding the container."""
     n = grid * grid
-    if np is not None:
-        px = (
-            np.frombuffer(pixels, dtype=np.uint8)[: w * h * 3]
-            .astype(np.int64)
-            .reshape(h, w, 3)
-        )
-        sy = (np.arange(grid) * h) // grid
-        sx = (np.arange(grid) * w) // grid
-        s = px[sy][:, sx].sum(axis=2).flatten()
-        total = int(s.sum())
-        val = 0
-        for idx in range(n):
-            if int(s[idx]) * n > total:
-                val |= 1 << idx
-    else:
-        sums = []
-        for i in range(grid):
-            for j in range(grid):
-                base = ((i * h // grid) * w + (j * w // grid)) * 3
-                sums.append(
-                    pixels[base] + pixels[base + 1] + pixels[base + 2]
-                )
-        total = sum(sums)
-        val = 0
-        for idx, sv in enumerate(sums):
-            if sv * n > total:
-                val |= 1 << idx
+    px = (
+        np.frombuffer(pixels, dtype=np.uint8)[: w * h * 3]
+        .astype(np.int64)
+        .reshape(h, w, 3)
+    )
+    sy = (np.arange(grid) * h) // grid
+    sx = (np.arange(grid) * w) // grid
+    s = px[sy][:, sx].sum(axis=2).flatten()
+    total = int(s.sum())
+    val = 0
+    for idx in range(n):
+        if int(s[idx]) * n > total:
+            val |= 1 << idx
     return w, h, (val >> 32) & 0xFFFFFFFF, val & 0xFFFFFFFF
 
 
@@ -930,45 +818,17 @@ def phash64_from_pixels(
     keep each value in signed-64 range for engines without uint64."""
     g_n = _PHASH_GRID
     k = _PHASH_KEEP
-    if np is not None:
-        px = (
-            np.frombuffer(pixels, dtype=np.uint8)[: w * h * 3]
-            .astype(np.int64)
-            .reshape(h, w, 3)
-        )
-        sy = (np.arange(g_n) * h) // g_n
-        sx = (np.arange(g_n) * w) // g_n
-        g = px[sy][:, sx].sum(axis=2)  # 32x32 gray, int64
-        t = np.asarray(_PHASH_T, dtype=np.int64)  # 8x32
-        c = t @ g @ t.T  # 8x8 integer DCT block
-        coef = [[int(c[u, v]) for v in range(k)] for u in range(k)]
-    else:
-        g = [
-            [
-                sum(
-                    pixels[
-                        ((i * h // g_n) * w + (j * w // g_n)) * 3 + ch
-                    ]
-                    for ch in range(3)
-                )
-                for j in range(g_n)
-            ]
-            for i in range(g_n)
-        ]
-        r = [
-            [
-                sum(_PHASH_T[v][j] * g[i][j] for j in range(g_n))
-                for v in range(k)
-            ]
-            for i in range(g_n)
-        ]
-        coef = [
-            [
-                sum(_PHASH_T[u][i] * r[i][v] for i in range(g_n))
-                for v in range(k)
-            ]
-            for u in range(k)
-        ]
+    px = (
+        np.frombuffer(pixels, dtype=np.uint8)[: w * h * 3]
+        .astype(np.int64)
+        .reshape(h, w, 3)
+    )
+    sy = (np.arange(g_n) * h) // g_n
+    sx = (np.arange(g_n) * w) // g_n
+    g = px[sy][:, sx].sum(axis=2)  # 32x32 gray, int64
+    t = np.asarray(_PHASH_T, dtype=np.int64)  # 8x32
+    c = t @ g @ t.T  # 8x8 integer DCT block
+    coef = [[int(c[u, v]) for v in range(k)] for u in range(k)]
     total = sum(sum(row) for row in coef) - coef[0][0]
     val = 0
     for u in range(k):
@@ -992,8 +852,8 @@ def phash64(payload: bytes | None) -> tuple[int, int, int, int] | None:
 
 # --- JPEG baseline (ITU-T T.81 / ISO 10918-1) -----------------------------
 #
-# A pure-stdlib (numpy-accelerated) BASELINE sequential DCT codec — the
-# one compressed image class real multimodal corpora actually ship.
+# A numpy-vectorized BASELINE sequential DCT codec — the one compressed
+# image class real multimodal corpora actually ship.
 # Scope: 8-bit baseline (SOF0) AND progressive (SOF2, r16 — spectral
 # selection + successive approximation, T.81 Annex G), grayscale or
 # 3-component 4:4:4 (no chroma subsampling), standard JFIF color
@@ -1090,45 +950,6 @@ def _dct_basis():
 _DCT_M = _dct_basis()
 
 
-def _fdct8x8(block):
-    """Forward 2-D DCT of one 8x8 block (list of 64 level-shifted ints)."""
-    if np is not None:
-        m = np.asarray(_DCT_M)
-        f = np.asarray(block, dtype=np.float64).reshape(8, 8)
-        return (m @ f @ m.T).reshape(64).tolist()
-    out = [0.0] * 64
-    for u in range(8):
-        for v in range(8):
-            s = 0.0
-            for x in range(8):
-                for y in range(8):
-                    s += _DCT_M[u][x] * block[x * 8 + y] * _DCT_M[v][y]
-            out[u * 8 + v] = s
-    return out
-
-
-def _idct_blocks(coeffs):
-    """Inverse 2-D DCT of a stack of blocks -> float pixel values
-    (still level-shifted). ``coeffs``: list of 64-float lists."""
-    if np is not None:
-        m = np.asarray(_DCT_M)
-        f = np.asarray(coeffs, dtype=np.float64).reshape(-1, 8, 8)
-        # f_xy = sum_{u,v} M[u,x] * F[u,v] * M[v,y]  (= M^T F M)
-        return np.einsum("ux,nuv,vy->nxy", m, f, m)
-    out = []
-    for blk in coeffs:
-        px = [0.0] * 64
-        for x in range(8):
-            for y in range(8):
-                s = 0.0
-                for u in range(8):
-                    for v in range(8):
-                        s += _DCT_M[u][x] * blk[u * 8 + v] * _DCT_M[v][y]
-                px[x * 8 + y] = s
-        out.append(px)
-    return out
-
-
 class _JpegBitWriter:
     def __init__(self):
         self.buf = bytearray()
@@ -1162,87 +983,90 @@ def _magnitude(v: int) -> tuple[int, int]:
     return (s, v) if v > 0 else (s, v + (1 << s) - 1)
 
 
-def _rgb_to_ycbcr(r: float, g: float, b: float) -> tuple[float, float, float]:
-    """JFIF full-range color transform."""
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-    return y, cb, cr
-
-
 def _jpeg_coefficients(
     w: int, h: int, data: bytes, n_components: int, q: list
 ) -> tuple:
     """Shared front half of both JPEG encoders: plane extraction
     (level-shifted floats), edge-pad to 8-multiples, 2-D DCT, quantize,
     zigzag gather. Returns ``(zz_all, bw, bh)`` where ``zz_all[c]`` is
-    nblocks x 64 quantized zigzag ints in raster block order. The numpy
-    path batches everything; only entropy coding is bit-serial."""
+    nblocks x 64 quantized zigzag ints in raster block order. Everything
+    is batched; only entropy coding is bit-serial."""
     bw, bh = (w + 7) // 8, (h + 7) // 8
-    zz_all: list = [None] * n_components  # per comp: nblocks x 64 ints
-    if np is not None:
-        raw = np.frombuffer(bytes(data), dtype=np.uint8).astype(np.float64)
-        if n_components == 1:
-            chans = [raw.reshape(h, w)]
-        else:
-            rgb = raw.reshape(h, w, 3)
-            r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-            chans = [
-                0.299 * r + 0.587 * g + 0.114 * b,
-                128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
-                128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
-            ]
-        m = np.asarray(_DCT_M)
-        qnat = np.asarray(q, dtype=np.float64)
-        for c, ch in enumerate(chans):
-            plane = np.pad(
-                ch - 128.0, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge"
-            )
-            blocks = (
-                plane.reshape(bh, 8, bw, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(-1, 8, 8)
-            )
-            # F[u,v] = sum_{x,y} M[u,x] f[x,y] M[v,y]
-            coef = np.einsum("ux,nxy,vy->nuv", m, blocks, m).reshape(-1, 64)
-            quant = np.rint(coef / qnat).astype(np.int64)
-            zz_all[c] = quant[:, _JPEG_ZIGZAG].tolist()
-    else:
-        planes: list[list[float]] = [
-            [0.0] * (bw * 8 * bh * 8) for _ in range(n_components)
+    raw = np.frombuffer(bytes(data), dtype=np.uint8).astype(np.float64)
+    if n_components == 1:
+        chans = [raw.reshape(h, w)]
+    else:  # JFIF full-range color transform
+        rgb = raw.reshape(h, w, 3)
+        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
+        chans = [
+            0.299 * r + 0.587 * g + 0.114 * b,
+            128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b,
+            128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b,
         ]
-        for y in range(bh * 8):
-            sy = min(y, h - 1)
-            for x in range(bw * 8):
-                sx = min(x, w - 1)
-                if n_components == 1:
-                    planes[0][y * bw * 8 + x] = data[sy * w + sx] - 128.0
-                else:
-                    base = (sy * w + sx) * 3
-                    yy, cb, cr = _rgb_to_ycbcr(
-                        data[base], data[base + 1], data[base + 2]
-                    )
-                    planes[0][y * bw * 8 + x] = yy - 128.0
-                    planes[1][y * bw * 8 + x] = cb - 128.0
-                    planes[2][y * bw * 8 + x] = cr - 128.0
-        for c in range(n_components):
-            rows = []
-            for by in range(bh):
-                for bx in range(bw):
-                    block = [
-                        planes[c][(by * 8 + i) * bw * 8 + bx * 8 + j]
-                        for i in range(8)
-                        for j in range(8)
-                    ]
-                    coef = _fdct8x8(block)
-                    rows.append(
-                        [
-                            int(round(coef[_JPEG_ZIGZAG[i]] / q[_JPEG_ZIGZAG[i]]))
-                            for i in range(64)
-                        ]
-                    )
-            zz_all[c] = rows
+    m = np.asarray(_DCT_M)
+    qnat = np.asarray(q, dtype=np.float64)
+    zz_all = []  # per comp: nblocks x 64 ints
+    for ch in chans:
+        plane = np.pad(
+            ch - 128.0, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge"
+        )
+        blocks = (
+            plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
+        )
+        # F[u,v] = sum_{x,y} M[u,x] f[x,y] M[v,y]
+        coef = np.einsum("ux,nxy,vy->nuv", m, blocks, m).reshape(-1, 64)
+        quant = np.rint(coef / qnat).astype(np.int64)
+        zz_all.append(quant[:, _JPEG_ZIGZAG].tolist())
     return zz_all, bw, bh
+
+
+def _jpeg_encoder_args(
+    w: int, h: int, data: bytes, n_components: int, qtable: list[int] | None
+) -> list[int]:
+    """Validate the arguments both JPEG encoders share; returns the
+    natural-order quantization table (default all-16s)."""
+    if n_components not in (1, 3):
+        raise ValueError("n_components must be 1 or 3")
+    q = list(qtable) if qtable is not None else [16] * 64
+    if len(q) != 64 or any(not (1 <= int(x) <= 255) for x in q):
+        raise ValueError("qtable must be 64 values in [1, 255]")
+    if w < 1 or h < 1 or len(data) != w * h * n_components:
+        raise ValueError(
+            f"data length {len(data)} does not match dims {w}x{h} x "
+            f"{n_components} component(s)"
+        )
+    return q
+
+
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: ``FF marker``, 2-byte length, body."""
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+
+def _jpeg_header(
+    sof_marker: int, w: int, h: int, n_components: int, q: list[int]
+) -> bytearray:
+    """SOI, JFIF APP0, DQT id 0 (zigzag order), SOFn with every
+    component at 1x1 sampling on table 0, and the standard DC/AC DHT
+    pair — the stream prefix both encoders emit."""
+    comp_specs = b"".join(
+        struct.pack(">BBB", cid + 1, 0x11, 0) for cid in range(n_components)
+    )
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _jpeg_seg(
+        0xDB, bytes([0x00]) + bytes(q[_JPEG_ZIGZAG[i]] for i in range(64))
+    )
+    out += _jpeg_seg(
+        sof_marker, struct.pack(">BHHB", 8, h, w, n_components) + comp_specs
+    )
+    out += _jpeg_seg(
+        0xC4, bytes([0x00]) + bytes(_STD_DC_BITS) + bytes(_STD_DC_VALS)
+    )  # DHT DC id 0
+    out += _jpeg_seg(
+        0xC4, bytes([0x10]) + bytes(_STD_AC_BITS) + bytes(_STD_AC_VALS)
+    )  # DHT AC id 0
+    return out
 
 
 def encode_jpeg_baseline(
@@ -1261,19 +1085,8 @@ def encode_jpeg_baseline(
     compression ratio is not the point, exercising the REAL bit format
     is. Edge blocks replicate the last row/column (the standard pad).
     """
-    if n_components not in (1, 3):
-        raise ValueError("n_components must be 1 or 3")
-    q = list(qtable) if qtable is not None else [16] * 64
-    if len(q) != 64 or any(not (1 <= int(x) <= 255) for x in q):
-        raise ValueError("qtable must be 64 values in [1, 255]")
-    if w < 1 or h < 1 or len(data) != w * h * n_components:
-        raise ValueError(
-            f"data length {len(data)} does not match dims {w}x{h} x "
-            f"{n_components} component(s)"
-        )
-
+    q = _jpeg_encoder_args(w, h, data, n_components, qtable)
     zz_all, bw, bh = _jpeg_coefficients(w, h, data, n_components, q)
-
 
     dc_map = _huff_encode_map(_STD_DC_BITS, _STD_DC_VALS)
     ac_map = _huff_encode_map(_STD_AC_BITS, _STD_AC_VALS)
@@ -1319,36 +1132,13 @@ def encode_jpeg_baseline(
                     bw_writer.write(code, length)
     bw_writer.flush()
 
-    # --- segment assembly
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(
-        0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    )  # APP0
-    out += seg(
-        0xDB, bytes([0x00]) + bytes(q[_JPEG_ZIGZAG[i]] for i in range(64))
-    )  # DQT id 0, zigzag order
-    comp_specs = b"".join(
-        struct.pack(">BBB", cid + 1, 0x11, 0) for cid in range(n_components)
-    )
-    out += seg(
-        0xC0,
-        struct.pack(">BHHB", 8, h, w, n_components) + comp_specs,
-    )  # SOF0
-    out += seg(
-        0xC4, bytes([0x00]) + bytes(_STD_DC_BITS) + bytes(_STD_DC_VALS)
-    )  # DHT DC id 0
-    out += seg(
-        0xC4, bytes([0x10]) + bytes(_STD_AC_BITS) + bytes(_STD_AC_VALS)
-    )  # DHT AC id 0
+    out = _jpeg_header(0xC0, w, h, n_components, q)  # SOF0
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))  # DRI
+        out += _jpeg_seg(0xDD, struct.pack(">H", restart_interval))  # DRI
     scan_specs = b"".join(
         struct.pack(">BB", cid + 1, 0x00) for cid in range(n_components)
     )
-    out += seg(
+    out += _jpeg_seg(
         0xDA,
         bytes([n_components]) + scan_specs + b"\x00\x3f\x00",
     )  # SOS
@@ -1385,32 +1175,20 @@ def encode_jpeg_progressive(
     (EOBRUN=1), which the standard AC table covers. Deterministic,
     valid, universally decodable; compression ratio is not the point.
     """
-    if n_components not in (1, 3):
-        raise ValueError("n_components must be 1 or 3")
+    q = _jpeg_encoder_args(w, h, data, n_components, qtable)
     if not (0 <= al <= 10):
         raise ValueError("al must be in [0, 10]")
-    q = list(qtable) if qtable is not None else [16] * 64
-    if len(q) != 64 or any(not (1 <= int(x) <= 255) for x in q):
-        raise ValueError("qtable must be 64 values in [1, 255]")
-    if w < 1 or h < 1 or len(data) != w * h * n_components:
-        raise ValueError(
-            f"data length {len(data)} does not match dims {w}x{h} x "
-            f"{n_components} component(s)"
-        )
     zz_all, bw, bh = _jpeg_coefficients(w, h, data, n_components, q)
     nblocks = bw * bh
     dc_map = _huff_encode_map(_STD_DC_BITS, _STD_DC_VALS)
     ac_map = _huff_encode_map(_STD_AC_BITS, _STD_AC_VALS)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
     def sos(comp_ids: list[int], ss: int, se: int, ah: int, a_l: int,
             scan_bits: "_JpegBitWriter") -> bytes:
         specs = b"".join(
             struct.pack(">BB", cid + 1, 0x00) for cid in comp_ids
         )
-        hdr = seg(
+        hdr = _jpeg_seg(
             0xDA,
             bytes([len(comp_ids)]) + specs
             + bytes([ss, se, (ah << 4) | a_l]),
@@ -1519,24 +1297,7 @@ def encode_jpeg_progressive(
                 emit_corrections(pos, se - ss + 1)
         return sos([c], ss, se, a_l + 1, a_l, wtr)
 
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(
-        0xDB, bytes([0x00]) + bytes(q[_JPEG_ZIGZAG[i]] for i in range(64))
-    )
-    comp_specs = b"".join(
-        struct.pack(">BBB", cid + 1, 0x11, 0)
-        for cid in range(n_components)
-    )
-    out += seg(
-        0xC2, struct.pack(">BHHB", 8, h, w, n_components) + comp_specs
-    )  # SOF2
-    out += seg(
-        0xC4, bytes([0x00]) + bytes(_STD_DC_BITS) + bytes(_STD_DC_VALS)
-    )
-    out += seg(
-        0xC4, bytes([0x10]) + bytes(_STD_AC_BITS) + bytes(_STD_AC_VALS)
-    )
+    out = _jpeg_header(0xC2, w, h, n_components, q)  # SOF2
     bands = [(1, 5), (6, 63)]
     out += dc_first_scan(al)
     for c in range(n_components):
@@ -1551,6 +1312,15 @@ def encode_jpeg_progressive(
     return bytes(out)
 
 
+def _block_ramp(w8: int, h8: int, start: int) -> bytes:
+    """Grayscale ``8*w8 x 8*h8`` plane whose 8x8 block k (raster order)
+    is the constant luma ``(start + k) % 256`` — the DC-exact content of
+    every JPEG fixture."""
+    k = np.arange(h8 * w8).reshape(h8, w8)
+    blocks = ((start + k) % 256).astype(np.uint8)
+    return np.repeat(np.repeat(blocks, 8, axis=0), 8, axis=1).tobytes()
+
+
 def synthesize_jpeg(seed: str) -> bytes:
     """Deterministic DC-exact JPEG fixture (protocol in the section
     comment above): grayscale, 1..8 blocks per side, block k constant
@@ -1559,15 +1329,8 @@ def synthesize_jpeg(seed: str) -> bytes:
     bitstream path (Huffman, DPCM, dequantize, IDCT) runs for real."""
     d = hashlib.md5(seed.encode()).digest()
     w8, h8 = 1 + d[0] % 8, 1 + d[1] % 8
-    w, h = 8 * w8, 8 * h8
-    gray = bytearray(w * h)
-    for by in range(h8):
-        for bx in range(w8):
-            v = (d[3] + by * w8 + bx) % 256
-            for i in range(8):
-                row = (by * 8 + i) * w + bx * 8
-                gray[row : row + 8] = bytes([v]) * 8
-    return encode_jpeg_baseline(w, h, bytes(gray), 1, [8] * 64)
+    gray = _block_ramp(w8, h8, d[3])
+    return encode_jpeg_baseline(8 * w8, 8 * h8, gray, 1, [8] * 64)
 
 
 def synthesize_jpeg_progressive(seed: str) -> bytes:
@@ -1578,15 +1341,8 @@ def synthesize_jpeg_progressive(seed: str) -> bytes:
     path in :func:`decode_jpeg_progressive` runs for real."""
     d = hashlib.md5(seed.encode()).digest()
     w8, h8 = 1 + d[0] % 8, 1 + d[1] % 8
-    w, h = 8 * w8, 8 * h8
-    gray = bytearray(w * h)
-    for by in range(h8):
-        for bx in range(w8):
-            v = (d[3] + by * w8 + bx) % 256
-            for i in range(8):
-                row = (by * 8 + i) * w + bx * 8
-                gray[row : row + 8] = bytes([v]) * 8
-    return encode_jpeg_progressive(w, h, bytes(gray), 1, [8] * 64, al=1)
+    gray = _block_ramp(w8, h8, d[3])
+    return encode_jpeg_progressive(8 * w8, 8 * h8, gray, 1, [8] * 64, al=1)
 
 
 class _JpegBitReader:
@@ -1658,6 +1414,71 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
+def _jpeg_parse_dqt(body: bytes) -> dict[int, list[int]] | None:
+    """DQT segment body (possibly several tables, 8- or 16-bit) ->
+    ``{table_id: 64 values in zigzag order, as stored}``; None when a
+    table runs past the body."""
+    tables = {}
+    j = 0
+    while j < len(body):
+        prec, tid = body[j] >> 4, body[j] & 0x0F
+        j += 1
+        if prec == 0:
+            if j + 64 > len(body):
+                return None
+            tables[tid] = list(body[j : j + 64])
+            j += 64
+        else:
+            if j + 128 > len(body):
+                return None
+            tables[tid] = [
+                struct.unpack(">H", body[j + 2 * k : j + 2 * k + 2])[0]
+                for k in range(64)
+            ]
+            j += 128
+    return tables
+
+
+def _jpeg_parse_dht(body: bytes) -> dict[tuple[int, int], dict] | None:
+    """DHT segment body (possibly several tables) -> ``{(class, id):
+    decode map}``; None when a table's symbol list runs past the body.
+    A trailing fragment shorter than one table header is ignored."""
+    tables = {}
+    j = 0
+    while j + 17 <= len(body):
+        cls, tid = body[j] >> 4, body[j] & 0x0F
+        bits = list(body[j + 1 : j + 17])
+        n = sum(bits)
+        vals = list(body[j + 17 : j + 17 + n])
+        if len(vals) != n:
+            return None
+        tables[(cls, tid)] = _huff_decode_map(bits, vals)
+        j += 17 + n
+    return tables
+
+
+def _jpeg_parse_sof(body: bytes) -> tuple[int, int, list] | None:
+    """SOFn segment body -> ``(w, h, [(comp_id, qtable_id)])``; None for
+    a short body, zero dims, a component count other than 1 or 3, or
+    any sampling factor other than 1x1 (subsampling is unsupported, so
+    it fails closed)."""
+    if len(body) < 6:
+        return None
+    h, w = struct.unpack(">HH", body[1:5])
+    nc = body[5]
+    if nc not in (1, 3) or w == 0 or h == 0:
+        return None
+    if len(body) < 6 + 3 * nc:
+        return None
+    comps = []
+    for c in range(nc):
+        cid, samp, qid = body[6 + 3 * c : 9 + 3 * c]
+        if samp != 0x11:
+            return None
+        comps.append((cid, qid))
+    return w, h, comps
+
+
 def parse_jpeg(payload: bytes | None) -> dict | None:
     """Metadata-only JPEG walk: dims/components/process from the first
     SOFn. Returns ``{width, height, n_components, progressive}`` or
@@ -1725,9 +1546,6 @@ def decode_jpeg_progressive(
     restart_interval = 0
     coeffs: list[list[list[int]]] | None = None  # [comp][block][64] zigzag
     dc_done: set[int] = set()
-    dc_al: dict[int, int] = {}  # comp -> last DC Al decoded
-    ac_al: dict[tuple[int, int], int] = {}  # (comp, k) unused; band-level:
-    ac_band_al: dict[tuple[int, int, int], int] = {}  # (comp, ss, se) -> Al
     bw_ = bh_ = 0
     i = 2
     saw_scan = False
@@ -1747,55 +1565,25 @@ def decode_jpeg_progressive(
             return None
         body = p[i + 4 : i + 2 + ln]
         if m == 0xDB:
-            j = 0
-            while j < len(body):
-                prec, tid = body[j] >> 4, body[j] & 0x0F
-                j += 1
-                if prec == 0:
-                    if j + 64 > len(body):
-                        return None
-                    qtables[tid] = list(body[j : j + 64])
-                    j += 64
-                else:
-                    if j + 128 > len(body):
-                        return None
-                    qtables[tid] = [
-                        struct.unpack(
-                            ">H", body[j + 2 * k : j + 2 * k + 2]
-                        )[0]
-                        for k in range(64)
-                    ]
-                    j += 128
+            tables = _jpeg_parse_dqt(body)
+            if tables is None:
+                return None
+            qtables.update(tables)
         elif m == 0xC4:
-            j = 0
-            while j + 17 <= len(body):
-                cls, tid = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                vals = list(body[j + 17 : j + 17 + n])
-                if len(vals) != n:
-                    return None
-                huff[(cls, tid)] = _huff_decode_map(bits, vals)
-                j += 17 + n
+            tables = _jpeg_parse_dht(body)
+            if tables is None:
+                return None
+            huff.update(tables)
         elif m == 0xC2:
-            if sof is not None or len(body) < 6:
+            if sof is not None:
+                return None  # a second SOF
+            sof = _jpeg_parse_sof(body)
+            if sof is None:
                 return None
-            h_, w_ = struct.unpack(">HH", body[1:5])
-            nc = body[5]
-            if nc not in (1, 3) or w_ == 0 or h_ == 0:
-                return None
-            if len(body) < 6 + 3 * nc:
-                return None
-            comps = []
-            for c in range(nc):
-                cid, samp, qid = body[6 + 3 * c : 9 + 3 * c]
-                if samp != 0x11:
-                    return None  # subsampling unsupported, fail closed
-                comps.append((cid, qid))
-            sof = (w_, h_, comps)
+            w_, h_, comps = sof
             bw_, bh_ = (w_ + 7) // 8, (h_ + 7) // 8
             coeffs = [
-                [[0] * 64 for _ in range(bw_ * bh_)] for _ in range(nc)
+                [[0] * 64 for _ in range(bw_ * bh_)] for _ in comps
             ]
         elif m in (0xC0, 0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
                    0xCB, 0xCD, 0xCE, 0xCF):
@@ -1840,9 +1628,7 @@ def decode_jpeg_progressive(
                 )
                 if not ok:
                     return None
-                for c in scan_comps:
-                    dc_done.add(c)
-                    dc_al[c] = a_l
+                dc_done.update(scan_comps)
             else:  # AC scan: single component, DC first scan required
                 if ns != 1 or not (1 <= ss <= se <= 63):
                     return None
@@ -1859,7 +1645,6 @@ def decode_jpeg_progressive(
                 )
                 if not ok:
                     return None
-                ac_band_al[(c, ss, se)] = a_l
             saw_scan = True
             # resync: find the next true marker after the entropy data
             j = reader.pos
@@ -2051,80 +1836,34 @@ def _jpeg_reconstruct(
     (``qs[c]`` = zigzag-order table), inverse zigzag, batch 2-D IDCT,
     level shift, plane crop, JFIF color transform. ``blocks[c]`` =
     zigzag-order coefficient lists, raster block order."""
-    nc = len(blocks)
+    m = np.asarray(_DCT_M)
     planes = []
-    for c in range(nc):
-        q = qs[c]
-        if np is not None:
-            zzq = np.asarray(blocks[c], dtype=np.float64) * np.asarray(
-                q, dtype=np.float64
-            )
-            coef = np.empty_like(zzq)
-            coef[:, _JPEG_ZIGZAG] = zzq  # zigzag -> natural scatter
-            px = np.einsum(
-                "ux,nuv,vy->nxy",
-                np.asarray(_DCT_M),
-                coef.reshape(-1, 8, 8),
-                np.asarray(_DCT_M),
-            )
-            plane = (
-                px.reshape(bh_, bw_, 8, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(bh_ * 8, bw_ * 8)
-            )
-            planes.append(plane[:h, :w] + 128.0)
-        else:
-            coefs = []
-            for zz in blocks[c]:
-                coef_l = [0.0] * 64
-                for idx in range(64):
-                    coef_l[_JPEG_ZIGZAG[idx]] = zz[idx] * q[idx]
-                coefs.append(coef_l)
-            px = _idct_blocks(coefs)
-            plane_l = [[0.0] * (bw_ * 8) for _ in range(bh_ * 8)]
-            for b_i, blk in enumerate(px):
-                by, bx = divmod(b_i, bw_)
-                for r_ in range(8):
-                    for c_ in range(8):
-                        plane_l[by * 8 + r_][bx * 8 + c_] = (
-                            blk[r_ * 8 + c_] + 128.0
-                        )
-            planes.append([row[:w] for row in plane_l[:h]])
+    for zz, q in zip(blocks, qs):
+        zzq = np.asarray(zz, dtype=np.float64) * np.asarray(q, dtype=np.float64)
+        coef = np.empty_like(zzq)
+        coef[:, _JPEG_ZIGZAG] = zzq  # zigzag -> natural scatter
+        # f_xy = sum_{u,v} M[u,x] * F[u,v] * M[v,y]  (= M^T F M)
+        px = np.einsum("ux,nuv,vy->nxy", m, coef.reshape(-1, 8, 8), m)
+        plane = (
+            px.reshape(bh_, bw_, 8, 8)
+            .transpose(0, 2, 1, 3)
+            .reshape(bh_ * 8, bw_ * 8)
+        )
+        planes.append(plane[:h, :w] + 128.0)
 
-    if np is not None:
-        if nc == 1:
-            g = np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8)
-            rgb = np.repeat(g[:, :, None], 3, axis=2)
-        else:
-            y, cb, cr = planes
-            r = y + 1.402 * (cr - 128.0)
-            g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-            b = y + 1.772 * (cb - 128.0)
-            rgb = np.stack(
-                [
-                    np.clip(np.rint(ch), 0, 255).astype(np.uint8)
-                    for ch in (r, g, b)
-                ],
-                axis=2,
-            )
-        return w, h, rgb.tobytes()
-    out = bytearray()
-    for yy in range(h):
-        for xx in range(w):
-            if nc == 1:
-                v = int(min(255, max(0, round(planes[0][yy][xx]))))
-                out += bytes((v, v, v))
-            else:
-                yv = planes[0][yy][xx]
-                cb = planes[1][yy][xx] - 128.0
-                cr = planes[2][yy][xx] - 128.0
-                r = yv + 1.402 * cr
-                g = yv - 0.344136 * cb - 0.714136 * cr
-                b = yv + 1.772 * cb
-                out += bytes(
-                    int(min(255, max(0, round(ch)))) for ch in (r, g, b)
-                )
-    return w, h, bytes(out)
+    if len(planes) == 1:
+        g = np.clip(np.rint(planes[0]), 0, 255).astype(np.uint8)
+        rgb = np.repeat(g[:, :, None], 3, axis=2)
+    else:
+        y, cb, cr = planes
+        r = y + 1.402 * (cr - 128.0)
+        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+        b = y + 1.772 * (cb - 128.0)
+        rgb = np.stack(
+            [np.clip(np.rint(ch), 0, 255).astype(np.uint8) for ch in (r, g, b)],
+            axis=2,
+        )
+    return w, h, rgb.tobytes()
 
 
 def decode_jpeg_baseline(payload: bytes | None) -> tuple[int, int, bytes] | None:
@@ -2163,52 +1902,20 @@ def decode_jpeg_baseline(payload: bytes | None) -> tuple[int, int, bytes] | None
         if ln < 2 or i + 2 + ln > len(p):
             return None  # truncated segment: structural corruption
         body = p[i + 4 : i + 2 + ln]
-        if m == 0xDB:  # DQT (possibly several tables)
-            j = 0
-            while j < len(body):
-                prec, tid = body[j] >> 4, body[j] & 0x0F
-                j += 1
-                if prec == 0:
-                    if j + 64 > len(body):
-                        return None
-                    zz = list(body[j : j + 64])
-                    j += 64
-                else:
-                    if j + 128 > len(body):
-                        return None
-                    zz = [
-                        struct.unpack(">H", body[j + 2 * k : j + 2 * k + 2])[0]
-                        for k in range(64)
-                    ]
-                    j += 128
-                qtables[tid] = zz  # zigzag order, as stored
-        elif m == 0xC4:  # DHT (possibly several tables)
-            j = 0
-            while j + 17 <= len(body):
-                cls, tid = body[j] >> 4, body[j] & 0x0F
-                bits = list(body[j + 1 : j + 17])
-                n = sum(bits)
-                vals = list(body[j + 17 : j + 17 + n])
-                if len(vals) != n:
-                    return None
-                huff[(cls, tid)] = _huff_decode_map(bits, vals)
-                j += 17 + n
+        if m == 0xDB:  # DQT
+            tables = _jpeg_parse_dqt(body)
+            if tables is None:
+                return None
+            qtables.update(tables)
+        elif m == 0xC4:  # DHT
+            tables = _jpeg_parse_dht(body)
+            if tables is None:
+                return None
+            huff.update(tables)
         elif m in (0xC0, 0xC1):  # baseline / extended sequential Huffman
-            if len(body) < 6:
+            sof = _jpeg_parse_sof(body)
+            if sof is None:
                 return None
-            h, w = struct.unpack(">HH", body[1:5])
-            nc = body[5]
-            if nc not in (1, 3) or w == 0 or h == 0:
-                return None
-            if len(body) < 6 + 3 * nc:
-                return None
-            comps = []
-            for c in range(nc):
-                cid, samp, qid = body[6 + 3 * c : 9 + 3 * c]
-                if samp != 0x11:
-                    return None  # subsampling unsupported, fail closed
-                comps.append((cid, qid))
-            sof = (w, h, comps)
         elif m in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
             return None  # progressive/lossless/arithmetic: unsupported
         elif m == 0xDD:  # DRI
@@ -2322,16 +2029,10 @@ def synthesize_mjpeg_avi(seed: str) -> bytes:
     fps = Y4M_RATES[d[4] % len(Y4M_RATES)]
     n_frames = 1 + d[10] % 6
 
-    frames = []
-    for f in range(n_frames):
-        gray = bytearray(w * h)
-        for by in range(h8):
-            for bx in range(w8):
-                v = (d[3] + f + by * w8 + bx) % 256
-                for i in range(8):
-                    row = (by * 8 + i) * w + bx * 8
-                    gray[row : row + 8] = bytes([v]) * 8
-        frames.append(encode_jpeg_baseline(w, h, bytes(gray), 1, [8] * 64))
+    frames = [
+        encode_jpeg_baseline(w, h, _block_ramp(w8, h8, d[3] + f), 1, [8] * 64)
+        for f in range(n_frames)
+    ]
 
     def chunk(fourcc: bytes, body: bytes) -> bytes:
         pad = b"\x00" if len(body) % 2 else b""  # RIFF chunks are even-sized
@@ -2477,48 +2178,21 @@ def audio_phash56_from_pcm(
     nf, nb = AUD_PHASH_FRAMES, AUD_PHASH_BANDS
     if channels < 1:
         return None
-    if np is not None:
-        samples = np.frombuffer(data[:usable], dtype="<i2").astype(np.int64)
-        n = len(samples) // channels
-        if n < nf:
-            return None
-        mono = samples[: n * channels].reshape(n, channels).sum(axis=1)
-        idx = np.arange(n)
-        # segment of sample i is i * nf // n; the reduceat boundary is
-        # therefore ceil(k * n / nf) — NOT floor, which disagrees with
-        # the per-sample formula at fractional boundaries
-        bounds = [(k * n + nf - 1) // nf for k in range(nf)]
-        s_fb = [
-            [
-                int(v)
-                for v in np.add.reduceat(
-                    mono * (1 - 2 * ((idx >> b) & 1)), bounds
-                )
-            ]
-            for b in range(nb)
-        ]
-        energy = [[s_fb[b][f] ** 2 for b in range(nb)] for f in range(nf)]
-    else:
-        samples = array("h")
-        samples.frombytes(data[:usable])
-        n = len(samples) // channels
-        if n < nf:
-            return None
-        mono = [
-            sum(samples[i * channels + c] for c in range(channels))
-            for i in range(n)
-        ]
-        energy = []
-        for f in range(nf):
-            lo = (f * n + nf - 1) // nf
-            hi = ((f + 1) * n + nf - 1) // nf
-            row = []
-            for b in range(nb):
-                s = sum(
-                    mono[i] * (1 - 2 * ((i >> b) & 1)) for i in range(lo, hi)
-                )
-                row.append(s * s)
-            energy.append(row)
+    samples = np.frombuffer(data[:usable], dtype="<i2").astype(np.int64)
+    n = len(samples) // channels
+    if n < nf:
+        return None
+    mono = samples[: n * channels].reshape(n, channels).sum(axis=1)
+    idx = np.arange(n)
+    # segment of sample i is i * nf // n; the reduceat boundary is
+    # therefore ceil(k * n / nf) — NOT floor, which disagrees with
+    # the per-sample formula at fractional boundaries
+    bounds = [(k * n + nf - 1) // nf for k in range(nf)]
+    s_fb = [
+        [int(v) for v in np.add.reduceat(mono * (1 - 2 * ((idx >> b) & 1)), bounds)]
+        for b in range(nb)
+    ]
+    energy = [[s_fb[b][f] ** 2 for b in range(nb)] for f in range(nf)]
     val = 0
     for f in range(1, nf):
         for b in range(nb - 1):

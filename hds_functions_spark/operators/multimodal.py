@@ -5,7 +5,7 @@ Extension layer (SURVEY.md §7). Image/audio/video payloads are carried as
 (schemas, Arrow-batched ``mapInPandas`` signatures, partition-safe batch
 processing) is real and tested.
 
-Decoding: ``decoder='real'`` runs the pure-stdlib codecs in
+Decoding: ``decoder='real'`` runs the numpy-vectorized codecs in
 :mod:`media_codecs` — PPM/BMP image parse, nearest-neighbour PPM resize,
 PCM WAV parse — with unparseable payloads emitted as null rows (corrupt
 payloads are a fact of corpus-scale data; a decode stage must not abort the
@@ -23,6 +23,7 @@ from __future__ import annotations
 import hashlib
 from typing import Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -47,17 +48,10 @@ from .media_codecs import (
     synthesize_y4m,
 )
 
-try:
-    import numpy as np
-except ImportError:  # pragma: no cover - numpy is present in any pyspark env
-    np = None
-
 
 def _byte_sum(b: bytes) -> int:
-    """Sum of byte values; numpy-vectorized (uint64 accumulate) when available."""
-    if np is not None:
-        return int(np.frombuffer(b, dtype=np.uint8).sum(dtype=np.uint64))
-    return sum(b)
+    """Sum of byte values (numpy uint64 accumulate)."""
+    return int(np.frombuffer(b, dtype=np.uint8).sum(dtype=np.uint64))
 
 __all__ = [
     "attach_binary_payload",
@@ -211,7 +205,7 @@ def decode_image_features(
     """Arrow-batched image decode via ``mapInPandas``.
 
     ``decoder='real'`` (default) parses PPM (P6/P3) and BMP headers with the
-    pure-stdlib codecs in :mod:`media_codecs`; payloads that are not a
+    codecs in :mod:`media_codecs`; payloads that are not a
     supported image decode to a null-featured row rather than failing the
     stage. ``decoder='fake'`` emits deterministic md5-derived
     pseudo-features for arbitrary payload bytes.

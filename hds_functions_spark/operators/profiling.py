@@ -8,7 +8,7 @@ aggregates — no UDFs, no driver collects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -542,50 +542,19 @@ def zipf_fit(
     )
 
 
-def kn_trigram_logprob_scores(
+def _kn_scored_trigrams(
     train_docs: DataFrame,
     score_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    discount: float = 0.75,
-    round_digits: int = 4,
-) -> DataFrame:
-    """Per-document average trigram log-likelihood under an interpolated
-    Kneser-Ney model (Chen & Goodman 1999, the smoothing inside
-    KenLM-style perplexity filters a la CCNet) fitted on ``train_docs``
-    — the principled upgrade of :func:`bigram_logprob_scores`: instead
-    of unsmoothed MLE over the scored corpus itself, a held-out-trained
-    model with absolute discounting and CONTINUATION-count backoff, so
-    "francisco" (frequent but only ever after "san") stops looking like
-    a plausible continuation everywhere.
-
-    The exact chain, per scored trigram (u, v, w):
-
-    - ``p1(w) = N1+(..w) / N1+(...)`` — unigram CONTINUATION probability
-      (how many distinct bigram types end in w), never raw frequency;
-    - ``p2(w|v) = max(N1+(.vw) - D, 0)/N1+(.v.) + D*T2(v)/N1+(.v.) * p1(w)``
-      with ``T2(v)`` the distinct continuations of v;
-    - ``p3(w|uv) = max(c(uvw) - D, 0)/c(uv.) + D*T3(uv)/c(uv.) * p2(w|v)``
-      with ``c(uv.) = sum_w c(uvw)`` and ``T3(uv)`` distinct w after uv.
-
-    Score-time novelty degrades gracefully and deterministically:
-    an unseen trigram context (u, v) backs off to ``p2``; an unseen
-    bigram context v backs off to ``p1``; a w never seen as a
-    continuation is OOV — it cannot receive KN mass — so its trigrams
-    are excluded and reported via ``n_scored``/``coverage`` instead of
-    poisoning the average (the oracle replicates the exclusion
-    exactly). Output: ``(doc_id, n_trigrams, n_scored, coverage,
-    avg_logprob)`` for score docs with >= 1 scoreable trigram.
-
-    Plan shape (the bigram_logprob_scores shape, one level deeper): one
-    trigram explode per side; FIVE stat tables (c3, (c3ctx, T3), n2,
-    (ctx2, T2), n1) — all gram-keyed hash aggregates, all
-    vocabulary-bounded, far smaller than the corpus; equi-joins back on
-    the gram keys with no fanout (one stats row per key — hot grams are
-    probe traffic, not row explosion); one per-doc aggregate. The n1
-    total rides a 1-row broadcast crossJoin. Nothing corpus-sized is
-    broadcast or collected.
-    """
+    id_col: str,
+    text_col: str,
+    discount: float,
+) -> tuple[DataFrame, Column, Column]:
+    """The interpolated Kneser-Ney chain shared by
+    :func:`kn_trigram_logprob_scores` and :func:`kn_context_gain_scores`:
+    the ``(doc_id, u, v, w)`` trigrams of ``score_docs`` joined to the
+    five stat tables fitted on ``train_docs``, plus the bigram ``p2``
+    and trigram ``p3`` probability Columns over that frame. ``_n1`` is
+    null exactly when ``w`` is OOV (never seen as a continuation)."""
     if not 0 < discount < 1:
         raise ValueError(f"discount must be in (0, 1) (got {discount})")
     D = float(discount)
@@ -643,6 +612,56 @@ def kn_trigram_logprob_scores(
         / F.col("_c3ctx")
         + D * F.col("_t3") / F.col("_c3ctx") * p2,
     ).otherwise(p2)
+    return scored, p2, p3
+
+
+def kn_trigram_logprob_scores(
+    train_docs: DataFrame,
+    score_docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    discount: float = 0.75,
+    round_digits: int = 4,
+) -> DataFrame:
+    """Per-document average trigram log-likelihood under an interpolated
+    Kneser-Ney model (Chen & Goodman 1999, the smoothing inside
+    KenLM-style perplexity filters a la CCNet) fitted on ``train_docs``
+    — the principled upgrade of :func:`bigram_logprob_scores`: instead
+    of unsmoothed MLE over the scored corpus itself, a held-out-trained
+    model with absolute discounting and CONTINUATION-count backoff, so
+    "francisco" (frequent but only ever after "san") stops looking like
+    a plausible continuation everywhere.
+
+    The exact chain, per scored trigram (u, v, w):
+
+    - ``p1(w) = N1+(..w) / N1+(...)`` — unigram CONTINUATION probability
+      (how many distinct bigram types end in w), never raw frequency;
+    - ``p2(w|v) = max(N1+(.vw) - D, 0)/N1+(.v.) + D*T2(v)/N1+(.v.) * p1(w)``
+      with ``T2(v)`` the distinct continuations of v;
+    - ``p3(w|uv) = max(c(uvw) - D, 0)/c(uv.) + D*T3(uv)/c(uv.) * p2(w|v)``
+      with ``c(uv.) = sum_w c(uvw)`` and ``T3(uv)`` distinct w after uv.
+
+    Score-time novelty degrades gracefully and deterministically:
+    an unseen trigram context (u, v) backs off to ``p2``; an unseen
+    bigram context v backs off to ``p1``; a w never seen as a
+    continuation is OOV — it cannot receive KN mass — so its trigrams
+    are excluded and reported via ``n_scored``/``coverage`` instead of
+    poisoning the average (the oracle replicates the exclusion
+    exactly). Output: ``(doc_id, n_trigrams, n_scored, coverage,
+    avg_logprob)`` for score docs with >= 1 scoreable trigram.
+
+    Plan shape (the bigram_logprob_scores shape, one level deeper): one
+    trigram explode per side; FIVE stat tables (c3, (c3ctx, T3), n2,
+    (ctx2, T2), n1) — all gram-keyed hash aggregates, all
+    vocabulary-bounded, far smaller than the corpus; equi-joins back on
+    the gram keys with no fanout (one stats row per key — hot grams are
+    probe traffic, not row explosion); one per-doc aggregate. The n1
+    total rides a 1-row broadcast crossJoin. Nothing corpus-sized is
+    broadcast or collected.
+    """
+    scored, _, p3 = _kn_scored_trigrams(
+        train_docs, score_docs, id_col, text_col, discount
+    )
     lp = F.when(F.col("_n1").isNotNull(), F.log(p3))  # OOV w -> null, excluded
     return (
         scored.groupBy("doc_id")
@@ -765,63 +784,9 @@ def kn_context_gain_scores(
     averages). High gain = trigram context strongly predicts the doc
     (natural, well-formed text); near-zero gain = context-free noise.
     """
-    if not 0 < discount < 1:
-        raise ValueError(f"discount must be in (0, 1) (got {discount})")
-    D = float(discount)
-
-    def trigrams(docs: DataFrame) -> DataFrame:
-        toks = docs.select(
-            F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("_t")
-        ).filter(F.size("_t") >= 3)
-        return toks.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(_t) - 3), "
-                    "i -> struct(_t[i] AS u, _t[i + 1] AS v, _t[i + 2] AS w))"
-                )
-            ).alias("_tg"),
-        ).select(
-            "doc_id",
-            F.col("_tg.u").alias("u"),
-            F.col("_tg.v").alias("v"),
-            F.col("_tg.w").alias("w"),
-        )
-
-    tri = trigrams(train_docs)
-    c3 = tri.groupBy("u", "v", "w").agg(F.count("*").alias("_c3"))
-    ctx3 = c3.groupBy("u", "v").agg(
-        F.sum("_c3").alias("_c3ctx"), F.count("*").alias("_t3")
+    scored, p2, p3 = _kn_scored_trigrams(
+        train_docs, score_docs, id_col, text_col, discount
     )
-    n2 = c3.groupBy("v", "w").agg(F.count("*").alias("_n2"))
-    ctx2 = n2.groupBy("v").agg(
-        F.sum("_n2").alias("_ctx2"), F.count("*").alias("_t2")
-    )
-    n1 = n2.groupBy("w").agg(F.count("*").alias("_n1"))
-    total1 = n1.agg(F.sum("_n1").alias("_tot1"))
-
-    scored = (
-        trigrams(score_docs)
-        .join(c3, on=["u", "v", "w"], how="left")
-        .join(ctx3, on=["u", "v"], how="left")
-        .join(n2, on=["v", "w"], how="left")
-        .join(ctx2, on="v", how="left")
-        .join(n1, on="w", how="left")
-        .crossJoin(F.broadcast(total1))
-    )
-    p1 = F.col("_n1") / F.col("_tot1")
-    p2 = F.when(
-        F.col("_ctx2").isNotNull(),
-        F.greatest(F.coalesce(F.col("_n2"), F.lit(0)) - D, F.lit(0.0))
-        / F.col("_ctx2")
-        + D * F.col("_t2") / F.col("_ctx2") * p1,
-    ).otherwise(p1)
-    p3 = F.when(
-        F.col("_c3ctx").isNotNull(),
-        F.greatest(F.coalesce(F.col("_c3"), F.lit(0)) - D, F.lit(0.0))
-        / F.col("_c3ctx")
-        + D * F.col("_t3") / F.col("_c3ctx") * p2,
-    ).otherwise(p2)
     seen = F.col("_n1").isNotNull()
     lp3 = F.when(seen, F.log(p3))
     lp2 = F.when(seen, F.log(p2))

@@ -1162,7 +1162,7 @@ FROM b
 def multimodal_features(spark, sf_dir):
     """REAL codec path: synthesize deterministic PPM/BMP binaries (format
     sniff-mixed by md5 byte 2) worker-side, then parse them with the
-    pure-stdlib image codecs — the oracle predicts dimensions, container
+    image codecs — the oracle predicts dimensions, container
     and exact byte size from the seed text, so any header/parse drift
     hash-mismatches."""
     docs = synthesize_media_payloads(
@@ -1227,7 +1227,7 @@ FROM fr
 )
 def multimodal_video_real(spark, sf_dir):
     """REAL video path: synthesize deterministic uncompressed YUV4MPEG2
-    clips worker-side, parse them with the pure-stdlib y4m codec, and
+    clips worker-side, parse them with the y4m codec, and
     sample every frame (clips cap at 6 frames < max_frames=8). The oracle
     predicts dimensions, fps-derived timestamps, frame counts AND each
     frame's raw byte sum via an O(1) closed form over the synthesis
@@ -2450,7 +2450,7 @@ FROM documents
 def multimodal_audio(spark, sf_dir):
     """REAL codec path: synthesize deterministic PCM16 WAV binaries
     worker-side (alternating +A/-A samples so true RMS == A exactly), then
-    RIFF-walk and parse them with the pure-stdlib WAV codec — rate /
+    RIFF-walk and parse them with the WAV codec — rate /
     channels / integer duration / quantised RMS all predicted by the
     oracle from the seed text."""
     from .operators.multimodal import decode_audio_features, synthesize_media_payloads

@@ -8,7 +8,7 @@ capstone:
 **pipeline_image_curation** — the image twin of pipeline_web_curation:
 a mixed-container image corpus (PNG / baseline-JPEG / PPM, with
 protocol re-encodes playing the duplicate class) decoded ONCE through
-the real pure-stdlib codecs, exact-deduped on the decoded-pixel md5
+the real codecs, exact-deduped on the decoded-pixel md5
 (container-independent, the audio tier's pcm_md5 applied to images),
 near-deduped on the perceptual DCT hash, and rolled into a per-source
 curated-image card. The oracle replays every stage closed-form from
@@ -210,7 +210,7 @@ def pipeline_image_curation(spark, sf_dir):
     the registered families the way pipeline_web_curation does for
     text: a mixed-container corpus (PNG / baseline-JPEG / PPM by
     doc_id % 3, plus png<->ppm protocol RE-ENCODES as the exact-dup
-    class) is decoded ONCE through the real pure-stdlib codec walk
+    class) is decoded ONCE through the real codec walk
     (operators/multimodal.py:image_signatures — inflate + filter
     reconstruction for PNG, Huffman + IDCT for JPEG), exact-deduped on
     the decoded-pixel md5 (container-independent), near-deduped on the

@@ -8,7 +8,7 @@ remaining extension gaps:
 **pipeline_video_curation** — the video twin of
 ``pipeline_image_curation`` (registry_ext12): an MJPEG AVI corpus is
 container-walked and every frame decoded ONCE through the real
-pure-stdlib baseline-JPEG codec, exact-deduped on the decoded-pixel
+baseline-JPEG codec, exact-deduped on the decoded-pixel
 md5 (frame granularity — duplicated footage across clips), near-deduped
 on the perceptual DCT hash over the surviving canonicals, and rolled
 into a per-source curated-footage card. The oracle replays every stage
@@ -203,7 +203,7 @@ def pipeline_video_curation(spark, sf_dir):
     """Video curation END TO END — the r14 verdict's missing capstone,
     composing the registered video families the way registry_ext12's
     pipeline does for images: an MJPEG AVI corpus is container-walked
-    and every frame decoded ONCE through the real pure-stdlib baseline
+    and every frame decoded ONCE through the real baseline
     JPEG codec (operators/multimodal.py:video_frame_signatures — RIFF
     '00dc' chunk walk, Huffman + dequantize + IDCT per frame),
     exact-deduped on the decoded-pixel md5 at FRAME granularity

@@ -1072,7 +1072,7 @@ def multimodal_image_png(spark, sf_dir):
     """REAL compressed-image path: synthesize deterministic PNGs
     worker-side (zlib-compressed scanlines whose filter types cycle
     through all five of None/Sub/Up/Average/Paeth), then run the FULL
-    pure-stdlib decode — signature + CRC walk, inflate, filter
+    decode — signature + CRC walk, inflate, filter
     reconstruction — and emit dims, the exact sum of every decoded RGB
     byte, and the perceptual hash. The pixel pattern matches the PPM/BMP
     synthesis, so the oracle predicts the post-DECOMPRESSION content

@@ -1230,7 +1230,7 @@ def multimodal_image_jpeg(spark, sf_dir):
     """REAL lossy-codec path: synthesize deterministic baseline JPEGs
     worker-side (grayscale, constant 8x8 blocks, all-8s quantization —
     the protocol that makes the DC path LOSSLESS), then run the FULL
-    pure-stdlib baseline decode — marker walk, DHT canonical Huffman,
+    baseline decode — marker walk, DHT canonical Huffman,
     DPCM + run-length entropy decode, dequantize, 2-D IDCT, level
     shift — and emit dims plus the exact sum of every decoded RGB
     byte. A wrong Huffman code, DC predictor, zigzag position,

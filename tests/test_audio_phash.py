@@ -117,19 +117,6 @@ def test_degenerate_fixture_carries_no_content():
     assert len(set(hashes)) < len(hashes)  # distinct content collides
 
 
-def test_pure_python_parity():
-    import hds_functions_spark.operators.media_codecs as mc
-
-    expected = [audio_phash56(synthesize_wav_tones(s)) for s in SEEDS[:5]]
-    saved = mc.np
-    mc.np = None
-    try:
-        got = [audio_phash56(synthesize_wav_tones(s)) for s in SEEDS[:5]]
-    finally:
-        mc.np = saved
-    assert got == expected
-
-
 def test_spark_operator_and_planted_duplicate(spark):
     """audio_phash through mapInPandas: a planted re-encoded duplicate
     lands within the Hamming ball of its leader while the corrupt row

@@ -1,6 +1,6 @@
 """Multimodal plumbing tests: binary payloads, metadata, real + fake decode.
 
-The real decode paths run the pure-stdlib codecs in
+The real decode paths run the codecs in
 ``operators/media_codecs.py`` (PPM/BMP image parse, nearest-neighbour PPM
 resize, PCM WAV parse); the fake paths remain for arbitrary-bytes payloads.
 """
@@ -922,17 +922,23 @@ def test_codec_truncation_fuzz_never_raises():
     size-field corruption of the JPEG and AVI fixtures must fail
     CLOSED (None / partial metadata / skipped frames) — one torn
     payload must never abort a Spark task with struct.error,
-    IndexError, or ValueError."""
+    IndexError, or ValueError. The progressive fixture goes through
+    both its own decoder and the dispatching one, since their marker
+    walks share the DQT/DHT/SOF body parsers."""
     from hds_functions_spark.operators.media_codecs import (
         avi_jpeg_frames,
+        decode_jpeg,
         decode_jpeg_baseline,
+        decode_jpeg_progressive,
         parse_avi,
         parse_jpeg,
         synthesize_jpeg,
+        synthesize_jpeg_progressive,
         synthesize_mjpeg_avi,
     )
 
     jpg = synthesize_jpeg("fuzz-seed")
+    prog = synthesize_jpeg_progressive("fuzz-seed")
     avi = synthesize_mjpeg_avi("fuzz-seed")
     for cut in range(len(jpg)):
         parse_jpeg(jpg[:cut])
@@ -952,8 +958,18 @@ def test_codec_truncation_fuzz_never_raises():
         mut[pos] = 0xFF
         parse_jpeg(bytes(mut))
         decode_jpeg_baseline(bytes(mut))
+    for cut in range(len(prog)):
+        decode_jpeg_progressive(prog[:cut])
+        decode_jpeg(prog[:cut])
+    for pos in range(len(prog)):
+        mut = bytearray(prog)
+        mut[pos] = 0xFF
+        decode_jpeg_progressive(bytes(mut))
+        decode_jpeg(bytes(mut))
     # intact fixtures still decode after the guard tightening
     assert decode_jpeg_baseline(jpg) is not None
+    decoded = decode_jpeg_progressive(prog)
+    assert decoded is not None and decode_jpeg(prog) == decoded
     assert parse_avi(avi)["handler"] == "MJPG"
     assert len(avi_jpeg_frames(avi)) == parse_avi(avi)["n_frames"]
 

@@ -14,6 +14,9 @@ and any list/array-typed output column is an immediate FAIL — the driver
 harness errors on those, so they must be flattened to scalars in the
 registry view.
 
+Each PASS/FAIL line also carries the query's Spark seconds (build +
+collect) and DuckDB seconds (execute + fetch).
+
 Usage: python tools/compare_oracle.py [--exact] [sf_dir] [query ...]
 """
 
@@ -21,6 +24,7 @@ from __future__ import annotations
 
 import math
 import sys
+import time
 
 sys.path.insert(0, ".")
 
@@ -104,6 +108,7 @@ def main():
     for name, fn in queries.items():
         if only and name not in only:
             continue
+        t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -114,22 +119,33 @@ def main():
             release_operator_caches()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {str(e)[:300]}")
+            secs = f"spark={time.perf_counter() - t0:.2f}s"
+            print(f"FAIL {name}: {secs} spark error: {str(e)[:300]}")
             continue
+        s_secs = time.perf_counter() - t0
         if name not in oracles:
-            print(f"ok?  {name}: rows={len(s_rows)} (no oracle, rows-only)")
+            print(
+                f"ok?  {name}: spark={s_secs:.2f}s rows={len(s_rows)} "
+                "(no oracle, rows-only)"
+            )
             continue
+        t0 = time.perf_counter()
         try:
             res = con.execute(oracles[name])
             d_cols = [d[0] for d in res.description]
             d_rows = res.fetchall()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
+            secs = f"spark={s_secs:.2f}s duck={time.perf_counter() - t0:.2f}s"
+            print(f"FAIL {name}: {secs} duckdb error: {str(e)[:300]}")
             continue
+        secs = f"spark={s_secs:.2f}s duck={time.perf_counter() - t0:.2f}s"
         if sorted(s_cols) != sorted(d_cols):
             failures.append(name)
-            print(f"FAIL {name}: columns differ spark={sorted(s_cols)} duck={sorted(d_cols)}")
+            print(
+                f"FAIL {name}: {secs} columns differ "
+                f"spark={sorted(s_cols)} duck={sorted(d_cols)}"
+            )
             continue
         # surface type-CLASS drift the value normalisation would mask
         # (date vs str, int vs float): the driver's hasher may not mask it
@@ -157,18 +173,21 @@ def main():
             dn, _ = norm_rows(d_cols, d_rows)
         except ListCell as e:
             failures.append(name)
-            print(f"FAIL {name}: {e}")
+            print(f"FAIL {name}: {secs} {e}")
             continue
         if len(sn) != len(dn):
             failures.append(name)
-            print(f"FAIL {name}: rowcount spark={len(sn)} duck={len(dn)}")
+            print(f"FAIL {name}: {secs} rowcount spark={len(sn)} duck={len(dn)}")
             continue
         if sn != dn:
             failures.append(name)
             bad = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-            print(f"FAIL {name}: values differ; cols={cols}; first diffs: {bad}")
+            print(
+                f"FAIL {name}: {secs} values differ; cols={cols}; "
+                f"first diffs: {bad}"
+            )
             continue
-        print(f"PASS {name}: rows={len(sn)}")
+        print(f"PASS {name}: {secs} rows={len(sn)}")
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL PASS")
     sys.exit(1 if failures else 0)
 
