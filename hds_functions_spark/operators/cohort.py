@@ -22,6 +22,15 @@ criterion (map-side partial aggregation applies), then a single-row global
 reduce — shuffle volume is O(#persons * #criteria) tiny ints, independent of
 row count, with no row explosion. The tests keep the reference's unpivot
 plan as the oracle the two-level counts are compared against.
+
+Nothing is cached, as in the reference. With a flowchart the flagged plan
+is consumed twice: the flowchart aggregation scans only ``person_id`` and
+the columns the criteria reference (column pruning), and the final filter
+re-reads the input in the job that writes the result. A columnar cache of
+the whole flagged cohort (every input column plus 2N+2 helper columns) was
+measured as a loss on perfbench's ``cohort_sdc`` workload: the flowchart's
+aggregation waited on the stage that encoded every column into the cache.
+At scale, too, a full in-memory copy is a worse plan than two pruned scans.
 """
 
 from __future__ import annotations
@@ -149,25 +158,26 @@ def _flowchart_counts_two_level(
     exchange on ``person_id`` (with map-side combine), no unpivot row
     explosion, no ``Expand`` from multiple count-distincts.
     """
+    # Aggregates are written as SQL text: one py4j call per aggregate
+    # instead of one per Column method, which dominated this plan's build
+    # time.
+    pid = "`" + person_id_col.replace("`", "``") + "`"
     per_person = cohort_flagged.groupBy(person_id_col).agg(
         *[
-            F.sum(F.when(F.col(c), 1).otherwise(0)).alias(f"_hds_rows_{i}")
+            F.expr(f"sum(CASE WHEN {c} THEN 1 ELSE 0 END) AS _hds_rows_{i}")
             for i, c in enumerate(criteria_columns)
         ]
     )
     totals = per_person.agg(
         *[
-            F.sum(F.col(f"_hds_rows_{i}")).alias(f"_hds_n_row_{i}")
+            F.expr(f"sum(_hds_rows_{i}) AS _hds_n_row_{i}")
             for i in range(len(criteria_columns))
         ],
         *[
-            F.count(
-                F.when(
-                    F.col(person_id_col).isNotNull()
-                    & (F.col(f"_hds_rows_{i}") > 0),
-                    1,
-                )
-            ).alias(f"_hds_n_id_{i}")
+            F.expr(
+                f"count(CASE WHEN {pid} IS NOT NULL AND _hds_rows_{i} > 0 "
+                f"THEN 1 END) AS _hds_n_id_{i}"
+            )
             for i in range(len(criteria_columns))
         ],
     )
@@ -196,11 +206,24 @@ def create_inclusion_flowchart(
     ``n_distinct_id`` long, ``excluded_rows`` / ``excluded_ids`` int (null on
     the ``criteria_0`` row — no lag predecessor). Parity: reference
     ``cohort_construction.py:131-217``, counted with the two-level plan
-    (module docstring). ``row_id_col`` is accepted for signature parity;
-    the counts need only ``person_id_col``.
+    (module docstring).
+
+    ``cohort_flagged`` must hold ``criteria_0..N`` (as added by
+    :func:`create_inclusion_columns`) and ``person_id_col``; a ValueError
+    names any that is missing. ``row_id_col`` is validation-only: the counts
+    never read it, :func:`apply_inclusion_criteria` checks that it exists,
+    and it is kept so the reference's signature still binds.
     """
     spark = cohort_flagged.sparkSession
     criteria_columns = [f"criteria_{i}" for i in range(len(inclusion_criteria) + 1)]
+    present = set(cohort_flagged.columns)
+    missing = [c for c in criteria_columns + [person_id_col] if c not in present]
+    if missing:
+        raise ValueError(
+            "The flagged cohort DataFrame is missing required columns: "
+            + ", ".join(missing)
+            + " (add the criteria columns with create_inclusion_columns)"
+        )
 
     counts = _flowchart_counts_two_level(
         cohort_flagged, criteria_columns, person_id_col
@@ -243,13 +266,14 @@ def apply_inclusion_criteria(
     ``drop_inclusion_flags`` the dropped set is exactly
     ``criteria_0..N`` + the criteria key columns + ``include``.
 
-    Improvements over the reference (semantics unchanged): when a flowchart
-    is requested the flagged plan is consumed twice (flowchart aggregation +
-    final filter), so it is cached across the two actions instead of
-    recomputed (a tracked persist, so
-    :func:`~hds_functions_spark.caching.release_operator_caches` frees
-    it once the result is written); ``table_directory`` is forwarded to
-    :func:`~hds_functions_spark.sources.tables.save_table`.
+    Lazy without ``flowchart_table``. With it the call is EAGER: it writes
+    the flowchart (via :func:`~hds_functions_spark.sources.tables.save_table`,
+    ``table_directory`` forwarded) before returning. The input plan is then
+    evaluated twice, once by the flowchart aggregation (a scan pruned to
+    ``person_id_col`` and the columns the criteria reference) and once by
+    whatever consumes the returned filter; nothing is cached between the
+    two. A caller whose cohort is expensive to compute or nondeterministic
+    should write or persist it first, so both evaluations see the same rows.
     """
     validate_inclusion_criteria(cohort, inclusion_criteria)
     validate_cohort_columns(cohort, inclusion_criteria, row_id_col, person_id_col)
@@ -259,15 +283,6 @@ def apply_inclusion_criteria(
     if flowchart_table:
         from ..sources.tables import save_table
 
-        # tracked (released by release_operator_caches) at the level
-        # .cache() uses
-        from pyspark.storagelevel import StorageLevel
-
-        from ..caching import tracked_persist
-
-        cohort_flagged = tracked_persist(
-            cohort_flagged, StorageLevel.MEMORY_AND_DISK_DESER
-        )
         flowchart = create_inclusion_flowchart(
             cohort_flagged, inclusion_criteria, row_id_col, person_id_col
         )

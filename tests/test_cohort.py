@@ -127,26 +127,40 @@ def test_flowchart_saved_via_table_directory(cohort, tmp_path):
     assert saved.count() == 3
 
 
-def test_flowchart_cache_released(cohort, tmp_path):
-    """The flagged frame cached for the flowchart is tracked: once the
-    result is written, release_operator_caches() leaves no persisted
-    RDD behind."""
-    from hds_functions_spark.caching import release_operator_caches
+def test_flowchart_persists_nothing(cohort, tmp_path):
+    """Writing the flowchart and then the result caches nothing: no
+    persisted RDD appears and no frame is tracked, before any release.
+    The flowchart aggregation and the final filter each run their own
+    plan over the input."""
+    from hds_functions_spark.caching import tracked_count
 
     jsc = cohort.sparkSession.sparkContext._jsc
 
     def persisted():
         return set(jsc.getPersistentRDDs().keySet())
 
-    before = persisted()
+    before, tracked_before = persisted(), tracked_count()
     directory = {"fc": {"path": str(tmp_path / "fc"), "format": "parquet"}}
     out = apply_inclusion_criteria(
         cohort, CRITERIA, flowchart_table="fc", table_directory=directory
     )
     out.write.parquet(str(tmp_path / "out"))
-    assert persisted() - before  # the flowchart pass filled the cache
-    release_operator_caches()
     assert not persisted() - before
+    assert tracked_count() == tracked_before
+
+
+def test_flowchart_missing_columns_named(cohort):
+    """The flowchart's preconditions are checked up front: a ValueError
+    names every missing criteria column and the person id column."""
+    with pytest.raises(ValueError, match="criteria_0, criteria_1, criteria_2"):
+        create_inclusion_flowchart(cohort, CRITERIA)
+    flagged = create_inclusion_columns(cohort, CRITERIA)
+    with pytest.raises(ValueError, match=r"columns: criteria_2 \("):
+        create_inclusion_flowchart(flagged.drop("criteria_2"), CRITERIA)
+    with pytest.raises(ValueError, match="pid"):
+        create_inclusion_flowchart(flagged, CRITERIA, person_id_col="pid")
+    # row_id_col is validation-only: the counts do not need it
+    assert create_inclusion_flowchart(flagged.drop("row_id"), CRITERIA).count() == 3
 
 
 def test_validate_inclusion_criteria_errors(cohort):

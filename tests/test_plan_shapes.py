@@ -558,3 +558,35 @@ def test_batch_pair_operator_is_a_plain_self_join(docs, emb, family):
     flag = re.compile(r"\b(cross_batch|_new)#")
     assert "Union" not in plans[0] and not flag.search(plans[0]), plans[0]
     assert "Union" in plans[1] and flag.search(plans[1])
+
+
+def test_cohort_flowchart_reads_pruned_input_uncached(spark, tmp_path, monkeypatch):
+    """The flowchart that ``apply_inclusion_criteria`` saves is a plain
+    plan over the input: no cached relation, and its parquet scan reads
+    only the person id and the columns the criteria reference."""
+    import re
+
+    from hds_functions_spark.operators.cohort import apply_inclusion_criteria
+    from hds_functions_spark.sources import tables
+
+    path = str(tmp_path / "cohort")
+    spark.createDataFrame(
+        [(i, i % 7, 20 + i % 60, "FM"[i % 2], f"note {i}", i * 0.5) for i in range(50)],
+        "row_id: long, person_id: long, age: int, sex: string, note: string, "
+        "score: double",
+    ).write.parquet(path)
+    saved = []
+    monkeypatch.setattr(tables, "save_table", lambda df, **kw: saved.append(df))
+
+    apply_inclusion_criteria(
+        spark.read.parquet(path),
+        {"adult": "age >= 18", "young": "age < 65", "female": "sex = 'F'"},
+        flowchart_table="fc",
+    )
+    (flowchart,) = saved
+    qe = flowchart._jdf.queryExecution()
+    assert "InMemoryRelation" not in qe.optimizedPlan().toString()
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", qe.executedPlan().toString())
+    assert len(schemas) == 1, schemas
+    fields = {f.split(":")[0] for f in schemas[0].split(",")}
+    assert fields == {"person_id", "age", "sex"}, schemas[0]
