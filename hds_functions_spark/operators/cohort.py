@@ -5,23 +5,31 @@ Parity target: ``/root/reference`` ``cohort_construction.py:25-297``.
 A *criteria program* is an ordered ``dict[str, str]`` mapping flag-column
 names to Spark SQL boolean expressions. Applying it:
 
-1. evaluates every expression (``F.expr`` -> Catalyst-parsed),
-2. nulls count as FAIL (``fillna(False)`` on the flag columns),
-3. builds a cumulative conjunction chain ``criteria_0=true``,
-   ``criteria_i = criteria_{i-1} AND flag_i``, ``include = criteria_N``,
-4. optionally materialises an attrition "flowchart" table (rows/distinct
+1. evaluates every expression (``F.expr``, each parsed from its own string)
+   with nulls counting as FAIL (``coalesce(flag, false)``),
+2. builds a cumulative conjunction chain ``criteria_0=true``,
+   ``criteria_i = criteria_{i-1} AND flag_i``, ``include = criteria_N``
+   (flags and chain are two projections),
+3. optionally materialises an attrition "flowchart" table (rows/distinct
    persons surviving each step, with per-step exclusion deltas),
-5. filters to ``include`` and drops the helper columns.
+4. filters to ``include`` and drops the helper columns.
 
 Scale design: the reference computes the flowchart by unpivoting the flagged
 table to ``(N_criteria+1) x n_rows`` rows and running
-``countDistinct(when(...))`` — at 100 TB that explodes the shuffle by the
-number of criteria. This implementation aggregates in two levels instead:
-one shuffle keyed by ``person_id`` computing per-person pass-counts for every
-criterion (map-side partial aggregation applies), then a single-row global
-reduce — shuffle volume is O(#persons * #criteria) tiny ints, independent of
-row count, with no row explosion. The tests keep the reference's unpivot
-plan as the oracle the two-level counts are compared against.
+``countDistinct(when(...))``, then joins a driver-built description table
+and takes the deltas with a ``lag`` window and a sort. At 100 TB the unpivot
+explodes the shuffle by the number of criteria, and on small inputs the join,
+window and sort are extra jobs for N+1 output rows. This implementation
+counts in two levels instead: one shuffle keyed by ``person_id`` computing
+per-person pass-counts for every criterion (map-side partial aggregation
+applies), then a global reduce to a single totals row. Shuffle volume is
+O(#persons * #criteria) tiny ints, independent of row count, with no row
+explosion. One ``stack`` generator turns the totals row into the N+1
+flowchart rows: names, descriptions and expressions are literals, each
+delta is the difference of two adjacent totals, and the rows come out in
+step order, so there is no join, window or sort. The tests keep the
+reference's unpivot plan as the oracle the two-level counts are compared
+against.
 
 Nothing is cached, as in the reference. With a flowchart the flagged plan
 is consumed twice: the flowchart aggregation scans only ``person_id`` and
@@ -36,7 +44,7 @@ At scale, too, a full in-memory copy is a worse plan than two pruned scans.
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
@@ -105,91 +113,86 @@ def validate_cohort_columns(
         )
 
 
+def _quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(text: str) -> str:
+    """A SQL expression for the string ``text``: its UTF-8 bytes as a hex
+    binary literal, cast to string. It reads back byte-identical whatever
+    characters ``text`` holds (quotes, backslashes, ``--``, non-ASCII) and
+    whatever ``spark.sql.parser.escapedStringLiterals`` is set to."""
+    return f"CAST(X'{text.encode('utf-8').hex()}' AS STRING)"
+
+
 def create_inclusion_columns(
     cohort: DataFrame, inclusion_criteria: dict[str, str]
 ) -> DataFrame:
     """Add per-criterion flags + cumulative AND chain + ``include``.
 
-    Null flag values become False BEFORE the conjunction (missing data fails
-    the criterion). Chain order is dict insertion order. Parity: reference
-    ``cohort_construction.py:92-128``; plan-shape improvement: the flags and
-    the whole chain are added in two projection nodes (``withColumns``)
-    instead of ~2N chained ``withColumn`` nodes, keeping analysis cost flat
-    for large criteria programs.
+    Each flag is its criterion, parsed on its own by ``F.expr``, wrapped in
+    ``coalesce(flag, false)``: missing data fails the criterion before the
+    conjunction. A criterion that is not boolean raises AnalysisException.
+    Chain order is dict insertion order. Parity: reference
+    ``cohort_construction.py:92-128``, which nulls the flags in a separate
+    ``fillna``; here the flags and the whole chain are two projection nodes
+    (``withColumns``), keeping analysis cost flat for large criteria
+    programs.
     """
-    flag_names = list(inclusion_criteria.keys())
+    false = F.lit(False)
     cohort = cohort.withColumns(
-        {name: F.expr(sql) for name, sql in inclusion_criteria.items()}
+        {
+            name: F.coalesce(F.expr(sql), false)
+            for name, sql in inclusion_criteria.items()
+        }
     )
-    # Missing does not meet criteria: nulls -> False (boolean columns only,
-    # matching DataFrame.fillna semantics).
-    cohort = cohort.fillna(False, flag_names)
 
     chain_cols: dict[str, F.Column] = {"criteria_0": F.lit(True)}
     running = F.lit(True)
-    for i, name in enumerate(flag_names, start=1):
-        running = running & F.col(name)
+    for i, name in enumerate(inclusion_criteria, start=1):
+        running = running & F.col(_quote(name))
         chain_cols[f"criteria_{i}"] = running
-    chain_cols["include"] = running if flag_names else F.lit(True)
+    chain_cols["include"] = running
     return cohort.withColumns(chain_cols)
 
 
-def _criteria_description_df(spark, inclusion_criteria: dict[str, str]) -> DataFrame:
-    """Tiny driver-side table (criteria, description, expression) — row 0 is
-    the 'Original table' sentinel (reference ``cohort_construction.py:154-161``)."""
-    rows = [("criteria_0", "Original table", "")] + [
-        (f"criteria_{i + 1}", name, expr)
-        for i, (name, expr) in enumerate(inclusion_criteria.items())
-    ]
-    return spark.createDataFrame(rows, ["criteria", "description", "expression"])
-
-
-def _flowchart_counts_two_level(
+def _flowchart_totals(
     cohort_flagged: DataFrame,
     criteria_columns: list[str],
     person_id_col: str,
 ) -> DataFrame:
-    """Scalable counts: per-person partial sums, then a single-row reduce.
+    """One row of survival totals, ``_hds_n_row_i`` and ``_hds_n_id_i`` for
+    every ``criteria_i``: per-person partial sums, then a global reduce.
 
     Equivalent to ``count(when(passed,1))`` / ``countDistinct(when(passed,
     person_id))`` per criterion: a person passes criterion i iff any of their
     rows does; rows with null person_id contribute to ``n_row`` (they group
-    under the null key) but never to ``n_distinct_id``. One hash-partition
-    exchange on ``person_id`` (with map-side combine), no unpivot row
-    explosion, no ``Expand`` from multiple count-distincts.
+    under the null key) but never to ``n_distinct_id``. Both totals are 0,
+    not null, for an empty cohort. One hash-partition exchange on
+    ``person_id`` (with map-side combine), no unpivot row explosion, no
+    ``Expand`` from multiple count-distincts.
     """
     # Aggregates are written as SQL text: one py4j call per aggregate
-    # instead of one per Column method, which dominated this plan's build
-    # time.
-    pid = "`" + person_id_col.replace("`", "``") + "`"
+    # (the totals: one for all of them) instead of one per Column method,
+    # which dominated this plan's build time.
     per_person = cohort_flagged.groupBy(person_id_col).agg(
         *[
             F.expr(f"sum(CASE WHEN {c} THEN 1 ELSE 0 END) AS _hds_rows_{i}")
             for i, c in enumerate(criteria_columns)
         ]
     )
-    totals = per_person.agg(
+    pid = _quote(person_id_col)
+    return per_person.selectExpr(
         *[
-            F.expr(f"sum(_hds_rows_{i}) AS _hds_n_row_{i}")
+            f"coalesce(sum(_hds_rows_{i}), 0) AS _hds_n_row_{i}"
             for i in range(len(criteria_columns))
         ],
         *[
-            F.expr(
-                f"count(CASE WHEN {pid} IS NOT NULL AND _hds_rows_{i} > 0 "
-                f"THEN 1 END) AS _hds_n_id_{i}"
-            )
+            f"count(CASE WHEN {pid} IS NOT NULL AND _hds_rows_{i} > 0 "
+            f"THEN 1 END) AS _hds_n_id_{i}"
             for i in range(len(criteria_columns))
         ],
-    )
-    # Reshape the single row to (criteria, n_row, n_distinct_id) via stack —
-    # executor-side, stays a lazy DataFrame (row count == len(criteria_columns)).
-    stack_args = ", ".join(
-        f"'{c}', _hds_n_row_{i}, _hds_n_id_{i}"
-        for i, c in enumerate(criteria_columns)
-    )
-    return totals.selectExpr(
-        f"stack({len(criteria_columns)}, {stack_args}) "
-        "as (criteria, n_row, n_distinct_id)"
     )
 
 
@@ -201,12 +204,18 @@ def create_inclusion_flowchart(
 ) -> DataFrame:
     """Attrition table: one row per criteria step with survival counts.
 
-    Output schema (ordered by ``criteria_index``): ``criteria_index`` int,
-    ``criteria``/``description``/``expression`` strings, ``n_row`` /
-    ``n_distinct_id`` long, ``excluded_rows`` / ``excluded_ids`` int (null on
-    the ``criteria_0`` row — no lag predecessor). Parity: reference
-    ``cohort_construction.py:131-217``, counted with the two-level plan
-    (module docstring).
+    Output schema (rows in ``criteria_index`` order): ``criteria_index``
+    int, ``criteria``/``description``/``expression`` strings, ``n_row`` /
+    ``n_distinct_id`` long, ``excluded_rows`` / ``excluded_ids`` int (null
+    on the ``criteria_0`` row, which has no predecessor). Row 0 is the
+    ``Original table`` step with an empty expression; row i carries the
+    i-th criterion's name and expression unchanged. An empty cohort counts
+    0 rows and 0 persons at every step. Parity: reference
+    ``cohort_construction.py:131-217``.
+
+    The plan is the two-level count (module docstring), which ends in one
+    totals row, and one ``stack`` generator over it that emits the N+1
+    rows: labels as literals, deltas as differences of adjacent totals.
 
     ``cohort_flagged`` must hold ``criteria_0..N`` (as added by
     :func:`create_inclusion_columns`) and ``person_id_col``; a ValueError
@@ -214,7 +223,6 @@ def create_inclusion_flowchart(
     never read it, :func:`apply_inclusion_criteria` checks that it exists,
     and it is kept so the reference's signature still binds.
     """
-    spark = cohort_flagged.sparkSession
     criteria_columns = [f"criteria_{i}" for i in range(len(inclusion_criteria) + 1)]
     present = set(cohort_flagged.columns)
     missing = [c for c in criteria_columns + [person_id_col] if c not in present]
@@ -225,29 +233,24 @@ def create_inclusion_flowchart(
             + " (add the criteria columns with create_inclusion_columns)"
         )
 
-    counts = _flowchart_counts_two_level(
-        cohort_flagged, criteria_columns, person_id_col
+    totals = _flowchart_totals(cohort_flagged, criteria_columns, person_id_col)
+    labels = [("Original table", "")] + list(inclusion_criteria.items())
+    rows = []
+    for i, (description, expression) in enumerate(labels):
+        excluded = (
+            f"CAST(_hds_n_row_{i - 1} - _hds_n_row_{i} AS INT), "
+            f"CAST(_hds_n_id_{i - 1} - _hds_n_id_{i} AS INT)"
+            if i
+            else "CAST(NULL AS INT), CAST(NULL AS INT)"
+        )
+        rows.append(
+            f"{i}, 'criteria_{i}', {_sql_string(description)}, "
+            f"{_sql_string(expression)}, _hds_n_row_{i}, _hds_n_id_{i}, {excluded}"
+        )
+    return totals.selectExpr(
+        f"stack({len(rows)}, {', '.join(rows)}) "
+        f"AS ({', '.join(_FLOWCHART_COLUMNS)})"
     )
-
-    described = counts.join(
-        F.broadcast(_criteria_description_df(spark, inclusion_criteria)),
-        on="criteria",
-        how="left",
-    ).withColumn(
-        "criteria_index", F.regexp_extract("criteria", r"\d+", 0).cast("int")
-    )
-
-    # The flowchart has <= N_criteria+1 rows: an unpartitioned lag window is
-    # deliberate and harmless here.
-    step = Window.orderBy("criteria_index")
-    deltas = described.withColumn(
-        "excluded_rows",
-        (F.lag("n_row", 1).over(step) - F.col("n_row")).cast("int"),
-    ).withColumn(
-        "excluded_ids",
-        (F.lag("n_distinct_id", 1).over(step) - F.col("n_distinct_id")).cast("int"),
-    )
-    return deltas.select(*_FLOWCHART_COLUMNS).orderBy("criteria_index")
 
 
 def apply_inclusion_criteria(

@@ -58,10 +58,12 @@ def test_cumulative_chain_order(cohort):
     assert rows[3]["criteria_1"] is False and rows[3]["criteria_2"] is False
 
 
-def _unpivot_counts(cohort_flagged, criteria_columns, person_id_col):
+def _unpivot_totals(cohort_flagged, criteria_columns, person_id_col):
     """The reference's counting plan (``cohort_construction.py:163-180``):
     unpivot to one row per (row, criterion), then a conditional
-    aggregate. The oracle the library's two-level counts must match."""
+    aggregate. The oracle the library's two-level counts must match,
+    pivoted here to the one totals row (``_hds_n_row_i``, ``_hds_n_id_i``)
+    the library assembles its flowchart from."""
     ids = ["row_id", person_id_col]
     unpivoted = cohort_flagged.select(ids + criteria_columns).unpivot(
         ids=ids,
@@ -69,23 +71,37 @@ def _unpivot_counts(cohort_flagged, criteria_columns, person_id_col):
         variableColumnName="criteria",
         valueColumnName="passed",
     )
-    return unpivoted.groupBy("criteria").agg(
+    counts = unpivoted.groupBy("criteria").agg(
         F.count(F.when(F.col("passed"), 1)).alias("n_row"),
         F.count_distinct(
             F.when(F.col("passed"), F.col(person_id_col))
         ).alias("n_distinct_id"),
     )
+    got = {r["criteria"]: r for r in counts.collect()}
+    n = len(criteria_columns)
+    names = [f"_hds_n_row_{i}" for i in range(n)] + [f"_hds_n_id_{i}" for i in range(n)]
+    values = [got[c]["n_row"] for c in criteria_columns] + [
+        got[c]["n_distinct_id"] for c in criteria_columns
+    ]
+    return cohort_flagged.sparkSession.createDataFrame(
+        [values], ", ".join(f"{name}: long" for name in names)
+    )
 
 
-def _flowchart(flagged, counts, monkeypatch):
-    """The library flowchart, its counts from the two-level plan or, for
-    ``counts='unpivot'``, from the reference plan above."""
+def _flowchart(flagged, counts, monkeypatch, criteria=CRITERIA):
+    """The library flowchart, its totals from the two-level plan or, for
+    ``counts='unpivot'``, from the reference plan above; the reference
+    must actually have been called."""
+    calls = []
     if counts == "unpivot":
-        monkeypatch.setattr(
-            cohort_ops, "_flowchart_counts_two_level", _unpivot_counts
-        )
-    fc = create_inclusion_flowchart(flagged, CRITERIA)
+        def reference(*args):
+            calls.append(args)
+            return _unpivot_totals(*args)
+
+        monkeypatch.setattr(cohort_ops, "_flowchart_totals", reference)
+    fc = create_inclusion_flowchart(flagged, criteria)
     monkeypatch.undo()
+    assert len(calls) == (counts == "unpivot")
     return fc
 
 
@@ -103,7 +119,7 @@ def test_flowchart_counts(cohort, counts, monkeypatch):
     assert [r["n_row"] for r in rows] == [5, 4, 2]
     # distinct ids: 3 non-null -> 3 -> 1 (id_001 only)
     assert [r["n_distinct_id"] for r in rows] == [3, 3, 1]
-    # deltas: null for criteria_0 (no lag predecessor)
+    # deltas: null for criteria_0 (no predecessor)
     assert rows[0]["excluded_rows"] is None and rows[0]["excluded_ids"] is None
     assert [r["excluded_rows"] for r in rows[1:]] == [1, 2]
     assert [r["excluded_ids"] for r in rows[1:]] == [0, 2]
@@ -114,6 +130,54 @@ def test_flowchart_strategies_equivalent(cohort, monkeypatch):
     a = _flowchart(flagged, "two_level", monkeypatch).collect()
     b = _flowchart(flagged, "unpivot", monkeypatch).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+
+
+SPECIAL = {
+    "under 65": "age < 65 -- a trailing comment",
+    "back`tick": "person_id <> \"it's\" AND person_id <> 'id_\\001'",
+    "nön-ascii ✓": "person_id <> 'id_ø' -- ünïcode ✓",
+}
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_flowchart_special_characters_round_trip(cohort, escaped, monkeypatch):
+    """Criteria names and expressions reach the flowchart byte for byte,
+    whatever characters they hold and whatever
+    ``spark.sql.parser.escapedStringLiterals`` says; the counts match the
+    unpivot reference."""
+    spark = cohort.sparkSession
+    key = "spark.sql.parser.escapedStringLiterals"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, escaped)
+    try:
+        flagged = create_inclusion_columns(cohort, SPECIAL)
+        got = create_inclusion_flowchart(flagged, SPECIAL).collect()
+        ref = _flowchart(flagged, "unpivot", monkeypatch, SPECIAL).collect()
+        filtered = apply_inclusion_criteria(cohort, SPECIAL)
+        assert filtered.columns == cohort.columns
+    finally:
+        spark.conf.set(key, previous)
+    assert [r["description"].encode() for r in got] == [
+        s.encode() for s in ["Original table", *SPECIAL]
+    ]
+    assert [r["expression"].encode() for r in got] == [
+        s.encode() for s in ["", *SPECIAL.values()]
+    ]
+    assert [tuple(r) for r in got] == [tuple(r) for r in ref]
+    # age < 65 drops rows 2 and 5 whatever the string escapes mean
+    assert got[1]["n_row"] == 3
+
+
+def test_flowchart_empty_cohort_counts_zero(cohort):
+    """An empty cohort counts 0 rows and 0 persons at every step, and
+    excludes 0 of each after the first."""
+    flagged = create_inclusion_columns(cohort.filter("false"), CRITERIA)
+    rows = create_inclusion_flowchart(flagged, CRITERIA).collect()
+    assert [r["n_row"] for r in rows] == [0, 0, 0]
+    assert [r["n_distinct_id"] for r in rows] == [0, 0, 0]
+    assert rows[0]["excluded_rows"] is None and rows[0]["excluded_ids"] is None
+    assert [r["excluded_rows"] for r in rows[1:]] == [0, 0]
+    assert [r["excluded_ids"] for r in rows[1:]] == [0, 0]
 
 
 def test_flowchart_saved_via_table_directory(cohort, tmp_path):

@@ -590,3 +590,41 @@ def test_cohort_flowchart_reads_pruned_input_uncached(spark, tmp_path, monkeypat
     assert len(schemas) == 1, schemas
     fields = {f.split(":")[0] for f in schemas[0].split(",")}
     assert fields == {"person_id", "age", "sex"}, schemas[0]
+
+
+def _logical_node_names(plan) -> list[str]:
+    names = []
+
+    def walk(node):
+        names.append(node.nodeName())
+        for i in range(node.children().length()):
+            walk(node.children().apply(i))
+
+    walk(plan)
+    return names
+
+
+def test_cohort_flowchart_one_aggregate_and_generator(spark, tmp_path):
+    """The flowchart is the two-level count and one generator over its
+    totals row: no join with a description table, no window, no sort and
+    no driver-built relation. The flags and the chain are two projections,
+    with no separate null-filling one."""
+    from hds_functions_spark.operators.cohort import (
+        create_inclusion_columns,
+        create_inclusion_flowchart,
+    )
+
+    path = str(tmp_path / "cohort")
+    spark.createDataFrame(
+        [(i, i % 7, 20 + i % 60, "FM"[i % 2]) for i in range(50)],
+        "row_id: long, person_id: long, age: int, sex: string",
+    ).write.parquet(path)
+    criteria = {"adult": "age >= 18", "young": "age < 65", "female": "sex = 'F'"}
+    flagged = create_inclusion_columns(spark.read.parquet(path), criteria)
+    flowchart = create_inclusion_flowchart(flagged, criteria)
+
+    nodes = _logical_node_names(flowchart._jdf.queryExecution().optimizedPlan())
+    assert not {"Join", "Window", "Sort", "LocalRelation"} & set(nodes), nodes
+    assert nodes.count("Generate") == 1 and nodes.count("Aggregate") == 2, nodes
+    analyzed = _logical_node_names(flagged._jdf.queryExecution().analyzed())
+    assert analyzed.count("Project") == 2, analyzed
