@@ -275,7 +275,6 @@ def bloom_decontam(
     n_hashes: int = 3,
     method: str = "auto",
     prebuilt_bloom: DataFrame | None = None,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """Bloom-filtered n-gram decontamination: flag corpus docs whose
     word ``ngram``-grams collide with the eval set's gram bitmap.
@@ -304,16 +303,12 @@ def bloom_decontam(
     # bitmap probe run ENTIRELY pre-shuffle (the whole point of the
     # bloom leg is zero corpus exchange), so on a single-split input
     # every probe ran on one core (measured: one 1.7 s 1-task stage at
-    # sf0.1). No-op on already-parallel inputs; ``widen_inputs=False``
-    # for callers passing deep already-widened plans (the partition
-    # probe forces a throwaway physical plan — see ngram_contamination).
-    if widen_inputs:
-        docs = ensure_min_partitions(docs)
+    # sf0.1)
+    docs = ensure_min_partitions(docs)
     if prebuilt_bloom is not None:
         bloom = prebuilt_bloom
     else:
-        if widen_inputs:
-            eval_df = ensure_min_partitions(eval_df)
+        eval_df = ensure_min_partitions(eval_df)
         eval_grams = _doc_grams(
             eval_df, eval_id_col, eval_text_col, ngram
         ).select(F.col("_gram").alias("key")).distinct()
@@ -341,7 +336,6 @@ def bloom_fp_audit(
     n_bits: int = 1 << 16,
     n_hashes: int = 3,
     method: str = "auto",
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """The realised false-positive audit of :func:`bloom_decontam`:
     corpus grams that PASS the bloom, split by whether they truly occur
@@ -354,9 +348,8 @@ def bloom_fp_audit(
     # same single-split widening as bloom_decontam (the audit probes
     # every corpus gram pre-shuffle); eval grams feed the bitmap build
     # AND the truth join, sharing one exchange when widened
-    if widen_inputs:
-        docs = ensure_min_partitions(docs)
-        eval_df = ensure_min_partitions(eval_df)
+    docs = ensure_min_partitions(docs)
+    eval_df = ensure_min_partitions(eval_df)
     eval_grams = _doc_grams(
         eval_df, eval_id_col, eval_text_col, ngram
     ).select(F.col("_gram").alias("key")).distinct()

@@ -41,7 +41,6 @@ def ngram_contamination(
     ngram: int = 3,
     min_shared: int = 1,
     max_eval_df: int | None = None,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """Per-document contamination report against an eval set.
 
@@ -81,14 +80,9 @@ def ngram_contamination(
         )
 
     # widen thin inputs: the tokenise+ngram projection is the expensive part
-    # and must not run on one input split (no-op on already-parallel inputs).
-    # ``widen_inputs=False`` is for callers passing DEEP plans they have
-    # already widened at the source: the partition probe (`df.rdd`) forces a
-    # full physical plan of the input subtree that is then thrown away —
-    # measured ~1.5 s of pure driver time per probe on the pipeline_* spines.
-    if widen_inputs:
-        docs = ensure_min_partitions(docs)
-        eval_df = ensure_min_partitions(eval_df)
+    # and must not run on one input split
+    docs = ensure_min_partitions(docs)
+    eval_df = ensure_min_partitions(eval_df)
     doc_grams = grams(docs, id_col, text_col, "_doc_id")
     eval_grams = grams(eval_df, eval_id_col, eval_text_col, "_eval_id")
     if max_eval_df is not None:

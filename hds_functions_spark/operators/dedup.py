@@ -408,8 +408,7 @@ def _minhash_pairs(
         # simply cannot be near-duplicates under this measure.
         df = df.filter(F.length(F.col(text_col)) >= shingle_size)
         # widen thin inputs: the shingle hashing is the expensive part and
-        # must not run on one input split (ensure_min_partitions is a
-        # no-op on already-parallel inputs). Persisted: the band join and
+        # must not run on one input split. Persisted: the band join and
         # the re-attach joins all read it, so the shingle work runs once.
         # MEMORY_AND_DISK: ~num_hashes longs per doc, tiny next to the
         # corpus, and spills rather than OOM. Tracked:
@@ -947,7 +946,6 @@ def _capped_gram_pair_counts(df, id_col, text_col, ngram, max_doc_freq):
     if max_doc_freq is not None and max_doc_freq < 2:
         raise ValueError(f"max_doc_freq must be >= 2 (got {max_doc_freq})")
     toks = tokens(F.col(text_col))
-    df = ensure_min_partitions(df)  # parallelise the n-gram explode
     shingled = df.select(
         F.col(id_col).alias("_id"),
         F.explode(F.array_distinct(word_ngrams(toks, ngram))).alias("_gram"),
@@ -1224,12 +1222,11 @@ def _embedding_pairs(
     rows_per_band = n_planes // bands
 
     def signatures(df):
-        # widened: parallelise the per-plane dot products. Persisted: the
-        # band join and the vector re-attach both read it, so the dot
-        # products run once (tracked: release_operator_caches() reclaims
-        # it post-materialise)
+        # persisted: the band join and the vector re-attach both read it,
+        # so the dot products run once (tracked: release_operator_caches()
+        # reclaims it post-materialise)
         return tracked_persist(
-            ensure_min_partitions(df).select(
+            df.select(
                 F.col(id_col).alias("_id"),
                 F.col(vec_col).alias("_vec"),
                 *[
@@ -1567,7 +1564,6 @@ def exact_substring_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = 30,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring spans, the Lee et al. operator
     ("Deduplicating Training Data Makes Language Models Better",
@@ -1640,8 +1636,7 @@ def exact_substring_spans(
     # stage at sf0.1). No-op on already-parallel inputs; the candidate
     # re-join reads the SAME widened base, so the text side of the
     # collision scrub parallelises with it.
-    if widen_inputs:
-        docs = ensure_min_partitions(docs)
+    docs = ensure_min_partitions(docs)
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text"))
     grams = _span_gram_explode(base, min_len)
     # two consumers (the frequency agg + the candidate re-join) — without
@@ -1731,7 +1726,6 @@ def exact_substring_spans_incremental(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = 30,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """Exact duplicated-substring spans for a NEW BATCH against an
     existing corpus — the continuous-ingest mode of
@@ -1770,9 +1764,8 @@ def exact_substring_spans_incremental(
 
     # same single-split widening as exact_substring_spans: both sides'
     # per-position explodes are the expensive pre-shuffle projections
-    if widen_inputs:
-        batch_docs = ensure_min_partitions(batch_docs)
-        corpus_docs = ensure_min_partitions(corpus_docs)
+    batch_docs = ensure_min_partitions(batch_docs)
+    corpus_docs = ensure_min_partitions(corpus_docs)
     b_base = batch_docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("_text")
     )

@@ -32,6 +32,15 @@ from pyspark.sql import functions as F
 __all__ = ["pagerank", "triangle_count", "label_propagation", "k_core"]
 
 
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage for an iterative loop: a reliable checkpoint
+    when the session has a checkpoint dir (cluster mode: survives
+    executor loss), executor-local blocks otherwise."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
+
+
 def pagerank(
     edges: DataFrame,
     src_col: str = "src",
@@ -147,17 +156,9 @@ def pagerank(
     has_dangling = n_iter > 0 and not nodes.join(
         has_out, on="node", how="left_anti"
     ).isEmpty()
-    # reliable checkpoint when the session has a checkpoint dir (cluster
-    # mode: survives executor loss), executor-local blocks otherwise
-    sc = edges.sparkSession.sparkContext
-    _reliable = sc.getCheckpointDir() is not None
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if _reliable else df.localCheckpoint()
-
     for i in range(n_iter):
         if i % checkpoint_every == 0:
-            ranks = _truncate(ranks)
+            ranks = _checkpoint(ranks)
         contrib = (
             ranks.join(norm_edges, ranks["node"] == norm_edges["src"])
             .groupBy(F.col("dst").alias("node"))
@@ -330,18 +331,12 @@ def label_propagation(
     )
     labels = nodes.select("node", F.col("node").alias("community"))
 
-    sc = edges.sparkSession.sparkContext
-    _reliable = sc.getCheckpointDir() is not None
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if _reliable else df.localCheckpoint()
-
     w = Window.partitionBy("node").orderBy(
         F.col("_c").desc(), F.col("community").asc()
     )
     for i in range(n_iter):
         if i % checkpoint_every == 0:
-            labels = _truncate(labels)
+            labels = _checkpoint(labels)
         votes = (
             e.join(labels, e["src"] == labels["node"])
             .groupBy(F.col("dst").alias("node"), "community")
@@ -418,12 +413,6 @@ def k_core(
         .distinct()
     )
 
-    sc = edges.sparkSession.sparkContext
-    _reliable = sc.getCheckpointDir() is not None
-
-    def _truncate(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if _reliable else df.localCheckpoint()
-
     def _alive_degrees(alive_df: DataFrame) -> DataFrame:
         kept = e.join(
             alive_df.select(F.col("node").alias("src")), on="src"
@@ -432,7 +421,7 @@ def k_core(
 
     for i in range(n_iter):
         if i % checkpoint_every == 0:
-            alive = _truncate(alive)
+            alive = _checkpoint(alive)
         alive = (
             _alive_degrees(alive)
             .filter(F.col("_d") >= k)

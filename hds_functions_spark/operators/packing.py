@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.partitioning import ensure_min_partitions
 from ..functions.text import token_count, tokens
 from .sampling import split_bucket
 
@@ -65,10 +64,8 @@ def chunk_documents(
         F.sequence(F.lit(0), n_chunks - 1),
         lambda i: F.slice(toks, i * stride + 1, chunk_tokens),
     )
-    # widen thin inputs: the slice/join projection must not run on one
-    # input split (no-op on already-parallel inputs)
     return (
-        ensure_min_partitions(df.filter(n >= 1))
+        df.filter(n >= 1)
         .select(
             F.col(id_col),
             F.posexplode(chunks).alias("chunk_id", "_chunk"),

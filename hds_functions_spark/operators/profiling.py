@@ -64,7 +64,7 @@ def profile_columns(
         raise ValueError(f"columns not in DataFrame: {missing}")
 
     if approx_distinct:
-        wide = ensure_min_partitions(df.select(*cols)).agg(
+        wide = df.select(*cols).agg(
             F.count("*").alias("_n"),
             *[F.count(F.when(F.col(c).isNull(), 1)).alias(f"_nn_{c}")
               for c in cols],
@@ -87,7 +87,7 @@ def profile_columns(
 
     def branch(c: str) -> DataFrame:
         per_val = (
-            ensure_min_partitions(df.select(c))
+            df.select(c)
             .groupBy(c)
             .agg(F.count("*").alias("_cnt"))
         )
@@ -681,7 +681,6 @@ def ngram_novelty(
     text_col: str = "text",
     ngram: int = 5,
     round_digits: int = 6,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """Per-document n-gram NOVELTY against everything ingested before
     it: the fraction of the document's distinct word ``ngram``-shingles
@@ -711,13 +710,9 @@ def ngram_novelty(
     # part and the gram frame is consumed TWICE (min-combine + join
     # back), so on a single-split input it ran serially — twice — on one
     # core (measured: two back-to-back 1-task 1.3-1.4 s stages at
-    # sf0.1). The repartition is a no-op on already-parallel inputs and
-    # both consumers hang off the same exchange (ReusedExchange), so the
-    # explode also computes once. ``widen_inputs=False`` for callers
-    # passing deep already-widened plans (the partition probe forces a
-    # throwaway physical plan of the subtree — see ngram_contamination).
-    if widen_inputs:
-        docs = ensure_min_partitions(docs)
+    # sf0.1). Both consumers hang off the same exchange (ReusedExchange),
+    # so the explode also computes once.
+    docs = ensure_min_partitions(docs)
     toks = F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))
     grams = (
         docs.select(
@@ -811,7 +806,6 @@ def ngram_novelty_incremental(
     text_col: str = "text",
     ngram: int = 5,
     round_digits: int = 6,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """:func:`ngram_novelty` for a NEW BATCH against an existing corpus
     — the continuous-ingest mode (the design move shared with
@@ -837,10 +831,9 @@ def ngram_novelty_incremental(
     # same single-split hazard as ngram_novelty: the batch gram frame
     # is consumed twice (first-in-batch combine + join back) and the
     # corpus side pays its one distinct-gram scan — widen both so the
-    # explodes parallelise (no-op on already-parallel inputs)
-    if widen_inputs:
-        batch_docs = ensure_min_partitions(batch_docs)
-        corpus_docs = ensure_min_partitions(corpus_docs)
+    # explodes parallelise
+    batch_docs = ensure_min_partitions(batch_docs)
+    corpus_docs = ensure_min_partitions(corpus_docs)
 
     def grams(docs):
         toks = F.transform(tokens(F.col(text_col)), lambda t: F.lower(t))

@@ -77,7 +77,6 @@ def hashed_ngram_buckets(
     text_col: str = "text",
     buckets: int = 10_000,
     max_ngram: int = 2,
-    widen_inputs: bool = True,
 ) -> DataFrame:
     """``(doc_id, bucket, cnt)`` hashed bag-of-ngram features: word
     unigrams..``max_ngram``-grams of the lowercased text, each hashed
@@ -89,10 +88,8 @@ def hashed_ngram_buckets(
     if max_ngram < 1:
         raise ValueError(f"max_ngram must be >= 1 (got {max_ngram})")
     # the explode + per-gram md5 is the expensive pre-shuffle projection
-    # — widen single-split inputs so it parallelises (no-op otherwise;
-    # see ngram_contamination for the widen_inputs contract)
-    if widen_inputs:
-        docs = ensure_min_partitions(docs)
+    # — widen single-split inputs so it parallelises
+    docs = ensure_min_partitions(docs)
     return (
         docs.select(
             F.col(id_col).alias("doc_id"),

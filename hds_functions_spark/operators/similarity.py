@@ -327,7 +327,7 @@ def lsh_cosine_topk(
         F.col(vec_col).alias("_qvec"),
         plane_signature(vec_col, planes).alias("_bucket"),
     )
-    c = ensure_min_partitions(corpus).select(
+    c = corpus.select(
         F.col(corpus_id).alias("_cid"),
         F.col(vec_col).alias("_cvec"),
         plane_signature(vec_col, planes).alias("_bucket"),
@@ -396,7 +396,6 @@ def lsh_banded_cosine_topk(
             F.col(ident), F.posexplode(F.array(*sigs)).alias("_band", "_bits")
         )
 
-    corpus = ensure_min_partitions(corpus)
     c_banded = banded(corpus.select(F.col(corpus_id).alias("_cid"), vec_col), "_cid")
     q_banded = banded(queries.select(F.col(query_id).alias("_qid"), vec_col), "_qid")
     cand = (
@@ -1251,7 +1250,7 @@ def lsh_multiprobe_cosine_topk(
         F.col(vec_col).alias("_qvec"),
         F.explode(probes).alias("_bucket"),
     )
-    c = ensure_min_partitions(corpus).select(
+    c = corpus.select(
         F.col(corpus_id).alias("_cid"),
         F.col(vec_col).alias("_cvec"),
         plane_signature(vec_col, planes).alias("_bucket"),

@@ -3555,16 +3555,9 @@ def pipeline_pretrain_prep(spark, sf_dir):
     columns through all five stages."""
     from .operators.contamination import ngram_contamination
     from .operators.dedup import duplicated_ngram_stats
-    from .functions.partitioning import ensure_min_partitions
     from .functions.text import token_count
 
-    # widen ONCE at the source scan (cheap probe on a leaf plan); the
-    # kept/evals frames below inherit the parallelism, so the
-    # contamination operator can skip its own probes (each would force a
-    # full physical plan of the deep kept-subtree, ~1.5 s driver time)
-    docs = ensure_min_partitions(
-        _t(spark, sf_dir, "documents").select("doc_id", "text")
-    )
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # `kept` is consumed three times and carries the gram-explode dup
     # subtree with it, but a matched r16 A/B measured persisting the
     # narrow dup frame SLOWER (4.35 s vs 2.96 s): the duplicate branches
@@ -3588,7 +3581,7 @@ def pipeline_pretrain_prep(spark, sf_dir):
         F.col("doc_id").alias("eval_id"), "text"
     )
     contaminated = ngram_contamination(
-        kept, evals, ngram=_PP_NGRAM, min_shared=1, widen_inputs=False
+        kept, evals, ngram=_PP_NGRAM, min_shared=1
     ).select("doc_id")
     clean = kept.join(contaminated, on="doc_id", how="left_anti").filter(
         F.col("doc_id") % _PP_EVAL_MOD != 0

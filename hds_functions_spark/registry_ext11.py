@@ -458,14 +458,7 @@ def pipeline_web_curation(spark, sf_dir):
         & (F.col("quality_score") >= _WC_QUALITY_MIN)
         & (bucket >= _BLOOM_CUT)
     )
-    from .operators.dedup import ensure_min_partitions
-
-    # widen INTO the persist: the staged frame otherwise inherits the
-    # WARC read's 8 archive splits, capping every downstream consumer
-    # (the KN train/score legs, the bloom probe, the ranked attach) at
-    # 8-way parallelism on the cached data — profiled r17: ~12 KN-leg
-    # stages of 8 tasks each, avg 7 of 32 cores busy across the query
-    stagedw = ensure_min_partitions(
+    staged = tracked_persist(
         processed.select(
             "is_corrupt",
             keep.alias("_keep"),
@@ -474,7 +467,6 @@ def pipeline_web_curation(spark, sf_dir):
             F.when(keep, F.col("lang_pred")).alias("lang_pred"),
         )
     )
-    staged = tracked_persist(stagedw)
     stats = staged.agg(
         F.count(F.when(F.col("is_corrupt"), 1)).alias("c"),
         F.count(F.when(~F.col("is_corrupt"), 1)).alias("n"),
@@ -507,10 +499,6 @@ def pipeline_web_curation(spark, sf_dir):
         corpus.select("doc_id", "text"), eval_df,
         ngram=_BLOOM_NGRAM, n_bits=_wc_bloom_bits(n_keys),
         n_hashes=_BLOOM_HASHES,
-        # corpus is the persisted post-gate frame (8 WARC-file splits,
-        # already parallel) — the partition probe on that deep subtree
-        # costs ~1.5s of driver time for a guaranteed no-op repartition
-        widen_inputs=False,
     ).select("doc_id")
     decon = corpus.join(flagged, on="doc_id", how="left_anti")
     kn = kn_trigram_logprob_scores(

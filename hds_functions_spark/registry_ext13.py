@@ -53,6 +53,7 @@ from .registry_ext12 import (  # noqa: E402
     _duck_image_sig_ctes,
     _image_corpus,
     _image_corpus_of,
+    _seed_coalesce_target,
 )
 
 
@@ -577,19 +578,6 @@ _AC_DOWNMIX_MOD = 5
 _AC_AUD_STRIDE = 2
 
 
-def _audio_coalesce_target(docs) -> int:
-    """Partition target for the base+downmix union's coalesce: the
-    image-corpus rule (``max(defaultParallelism, seed splits)``). The
-    floor keeps a production seed that already arrives in thousands of
-    splits at its own granularity — a bare ``defaultParallelism`` would
-    cap the expensive Python parse stage at core count and inflate
-    per-task memory (r16 verdict item 2 / ADVICE). Locally the seed is
-    1 split, so the target stays defaultParallelism, identical to the
-    r16 behaviour."""
-    sc = docs.sparkSession.sparkContext
-    return max(sc.defaultParallelism, docs.rdd.getNumPartitions())
-
-
 def _duck_audio_curation_sql() -> str:
     """The per-source audio curation card closed-form: PCM content is a
     pure function of the wav_tones protocol (registry_ext11's machinery)
@@ -754,13 +742,8 @@ def pipeline_audio_curation(spark, sf_dir):
             )
         )
         # undo the 2-way union partition blow-up before the signature
-        # crossing (the image-corpus coalesce rule; narrow, no shuffle).
-        # The target carries the seed's own split count as a FLOOR
-        # (max(), exactly like _image_corpus_of): a production corpus
-        # arriving in thousands of splits keeps its granularity through
-        # the expensive Python parse instead of being capped at
-        # defaultParallelism tasks (r16 verdict item 2).
-        .coalesce(_audio_coalesce_target(docs))
+        # crossing (the image-corpus coalesce rule; narrow, no shuffle)
+        .coalesce(_seed_coalesce_target(docs))
     )
     sig = tracked_persist(audio_curation_signatures(corpus))
     ex = sig.groupBy("sample_rate", "n_channels", "pcm_md5").agg(
@@ -884,8 +867,7 @@ def streaming_image_ingest(spark, sf_dir):
 
     # seed docs only — do NOT call _image_corpus here: its second return
     # value (the full corpus) would be discarded unexecuted, but building
-    # it still pays the widen probe (a throwaway physical-plan compile of
-    # the whole subtree) on the driver (ADVICE r16)
+    # it still pays its plan construction on the driver (ADVICE r16)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
 
     def _is_batch_img(img_id):
@@ -1063,8 +1045,7 @@ def multimodal_audio_dedup_incremental(spark, sf_dir):
         dn.select(
             (F.col("doc_id") * _AC_AUD_STRIDE + 1).alias("aud_id"), "payload"
         )
-    ).coalesce(_audio_coalesce_target(docs))  # seed-split floor, see
-    # _audio_coalesce_target: never below the input's own granularity
+    ).coalesce(_seed_coalesce_target(docs))
     sig = tracked_persist(
         audio_curation_signatures(corpus).select(
             "aud_id",

@@ -140,7 +140,7 @@ def dedup_span_removal(spark, sf_dir):
     # runs on the DOCS partitioning (the text column never exchanges by
     # design), so a single-file scan pinned the whole reconstruction on
     # one core (profiled: a 2.9 s 1-task stage at sf0.1); the span
-    # detector's internal widen probes become no-ops on the same exchange
+    # detector's own widen passes the widened frame through
     docs = ensure_min_partitions(
         _t(spark, sf_dir, "documents").select("doc_id", "text")
     )
@@ -219,10 +219,9 @@ def pipeline_exact_dedup_prep(spark, sf_dir):
     from .caching import tracked_persist
     from .functions.partitioning import ensure_min_partitions
 
-    # widen ONCE at the source scan (cheap probe on a leaf plan); the
-    # persisted cleaned frame inherits the parallelism, so the
-    # contamination operator skips its own probes (each would force a
-    # full physical plan of the deep cleaned-subtree, ~3 s driver time)
+    # widen ONCE at the source scan; the persisted cleaned frame
+    # inherits the parallelism, and the operators' own widens pass the
+    # widened and persisted frames through
     docs = ensure_min_partitions(
         _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
@@ -243,7 +242,6 @@ def pipeline_exact_dedup_prep(spark, sf_dir):
         ngram=_XP_NGRAM,
         min_shared=1,
         max_eval_df=_XP_MAX_EVAL_DF,
-        widen_inputs=False,
     ).select("doc_id")
     final = (
         corpus.join(contaminated, on="doc_id", how="left_anti")

@@ -18,6 +18,10 @@ Extensions over the reference (documented, semantics preserved):
 
 from __future__ import annotations
 
+import contextlib
+import datetime
+import os
+import shutil
 from dataclasses import dataclass, field
 from typing import List, Optional
 
@@ -54,58 +58,97 @@ class ConcurrentWriterError(RuntimeError):
     """Another (or a crashed) writer holds a table's directory-swap lock."""
 
 
-def _swap_write_lock(path: str):
-    """Single-writer lock for the temp-write + directory-swap protocol.
+def _local_table(table: str, table_directory, op: str, txn: str):
+    """``(path, format)`` of the path-configured local table ``op``
+    rewrites; ``txn`` names the transactional-format statement
+    (``MERGE``/``DELETE``) the error messages point to instead.
 
-    The swap in :func:`upsert_table` / :func:`tombstone_delete` is NOT
-    safe under concurrent writers: two merges that both read the same
-    ``path`` then rename over it lose one writer's rows silently (and
-    can collide on the shared ``._*_tmp`` / ``._*_old`` sibling dirs).
-    This guard makes the failure loud instead of silent: an exclusive
-    ``O_CREAT | O_EXCL`` lock file beside the table (works on any POSIX
-    local filesystem — which is the only place these helpers run; the
-    callers already reject remote schemes). The file records pid +
-    wall-clock so a human can adjudicate a stale lock after a crash;
-    remediation is deleting the lock file once no writer is alive.
-    Real multi-writer coordination is a transactional table format's
-    job (Delta/Iceberg MERGE/DELETE) — documented in both callers.
+    The rewrite is gated on local-filesystem existence checks and
+    renames; on a remote filesystem (hdfs://, s3a://, ...) exists()
+    would be False and the call would silently overwrite — so remote
+    schemes fail loudly, and ``file://`` is stripped to the bare path."""
+    from urllib.parse import urlparse
+
+    entry = _entry(table, _load_directory(table_directory))
+    if "path" not in entry:
+        raise ValueError(
+            f"{op} supports path-configured tables only; metastore "
+            f"tables need a transactional format (Delta/Iceberg {txn})."
+        )
+    path = entry["path"]
+    scheme = urlparse(path).scheme
+    if scheme not in ("", "file"):
+        raise ValueError(
+            f"{op} is local-filesystem only (got scheme "
+            f"'{scheme}://'); use a transactional table format "
+            f"(Delta/Iceberg {txn}) for object-store or cluster paths."
+        )
+    if scheme == "file":
+        path = urlparse(path).path
+    return path, entry.get("format", "parquet")
+
+
+@contextlib.contextmanager
+def _directory_swap(path: str, fmt: str, tag: str):
+    """Single-writer temp-write + directory swap of the table at ``path``.
+
+    Yields ``(existing, swap)``: the current table and a function that
+    writes a frame to a sibling temp dir, renames it over ``path`` (the
+    old dir is parked beside it, then dropped — a path is never
+    overwritten while it is read) and returns the re-read table.
+
+    The swap is NOT safe under concurrent writers: two rewrites that both
+    read the same ``path`` then rename over it lose one writer's rows
+    silently (and can collide on the shared ``._*_tmp`` / ``._*_old``
+    sibling dirs). An exclusive ``O_CREAT | O_EXCL`` lock file beside the
+    table (works on any POSIX local filesystem — the only place these
+    helpers run) makes that failure loud: a held lock raises
+    :class:`ConcurrentWriterError`. The file records pid + wall-clock so a
+    human can adjudicate a stale lock after a crash; remediation is
+    deleting the lock file once no writer is alive. Real multi-writer
+    coordination is a transactional table format's job (Delta/Iceberg
+    MERGE/DELETE) — documented in both callers.
     """
-    import contextlib
-    import datetime
-    import os
-
-    @contextlib.contextmanager
-    def guard():
-        lock = path + "._write_lock"
+    lock = path + "._write_lock"
+    try:
+        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
         try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            try:
-                with open(lock) as fh:
-                    holder = fh.read().strip()
-            except OSError:
-                holder = "<unreadable>"
-            raise ConcurrentWriterError(
-                f"directory-swap lock already held for '{path}' "
-                f"(holder: {holder}). Another upsert_table/"
-                "tombstone_delete is running, or a previous writer "
-                f"crashed mid-swap; if no writer is alive, delete "
-                f"'{lock}' and re-run."
-            ) from None
-        try:
-            with os.fdopen(fd, "w") as fh:
-                fh.write(
-                    f"pid={os.getpid()} "
-                    f"at={datetime.datetime.now().isoformat()}"
-                )
-            yield
-        finally:
-            try:
-                os.remove(lock)
-            except OSError:
-                pass
+            with open(lock) as fh:
+                holder = fh.read().strip()
+        except OSError:
+            holder = "<unreadable>"
+        raise ConcurrentWriterError(
+            f"directory-swap lock already held for '{path}' "
+            f"(holder: {holder}). Another upsert_table/"
+            "tombstone_delete is running, or a previous writer "
+            f"crashed mid-swap; if no writer is alive, delete "
+            f"'{lock}' and re-run."
+        ) from None
 
-    return guard()
+    def swap(new: DataFrame) -> DataFrame:
+        tmp, backup = f"{path}._{tag}_tmp", f"{path}._{tag}_old"
+        shutil.rmtree(tmp, ignore_errors=True)
+        new.write.mode("overwrite").format(fmt).save(tmp)
+        shutil.rmtree(backup, ignore_errors=True)
+        os.rename(path, backup)
+        os.rename(tmp, path)
+        shutil.rmtree(backup, ignore_errors=True)
+        return spark.read.format(fmt).load(path)
+
+    try:
+        with os.fdopen(fd, "w") as fh:
+            fh.write(
+                f"pid={os.getpid()} "
+                f"at={datetime.datetime.now().isoformat()}"
+            )
+        spark = get_spark_session()
+        yield spark.read.format(fmt).load(path), swap
+    finally:
+        try:
+            os.remove(lock)
+        except OSError:
+            pass
 
 
 def _load_directory(table_directory) -> dict:
@@ -307,57 +350,24 @@ def upsert_table(
     SINGLE-WRITER ONLY: concurrent upserts into the same table would
     silently lose one writer's rows (both read the same base, last
     rename wins). A lock file beside the table
-    (:func:`_swap_write_lock`) turns that race into a loud
+    (:func:`_directory_swap`) turns that race into a loud
     :class:`ConcurrentWriterError`; concurrent readers are fine (the
     swap never overwrites a path in place). Multi-writer coordination
     is out of scope — use Delta/Iceberg MERGE.
     """
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    directory = _load_directory(table_directory)
-    entry = _entry(table, directory)
-    if "path" not in entry:
-        raise ValueError(
-            "upsert_table supports path-configured tables only; metastore "
-            "tables need a transactional format (Delta/Iceberg MERGE)."
-        )
+    path, fmt = _local_table(table, table_directory, "upsert_table", "MERGE")
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     for c in key_cols:
         if c not in df.columns:
             raise ValueError(f"Key column '{c}' missing from DataFrame")
-    path = entry["path"]
-    # The merge is gated on local-filesystem existence checks and renames;
-    # on a remote filesystem (hdfs://, s3a://, ...) exists() would be False
-    # and the call would silently overwrite — fail loudly instead.
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"upsert_table is local-filesystem only (got scheme "
-            f"'{scheme}://'); use a transactional table format "
-            "(Delta/Iceberg MERGE) for object-store or cluster paths."
-        )
-    if scheme == "file":
-        path = urlparse(path).path  # local fs ops need the bare path
-    fmt = entry.get("format", "parquet")
     if not os.path.exists(path):
         save_table(df, table, table_directory=table_directory)
         return
-    with _swap_write_lock(path):
-        spark = get_spark_session()
-        existing = spark.read.format(fmt).load(path)
+    with _directory_swap(path, fmt, "upsert") as (existing, swap):
         survivors = existing.join(
             df.select(*key_cols).distinct(), on=key_cols, how="left_anti"
         )
-        merged = survivors.unionByName(df)
-        tmp, backup = path + "._upsert_tmp", path + "._upsert_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        merged.write.mode("overwrite").format(fmt).save(tmp)
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(path, backup)
-        os.rename(tmp, path)
-        shutil.rmtree(backup, ignore_errors=True)
+        swap(survivors.unionByName(df))
 
 
 def get_archive_versions(df: DataFrame, version_column: str = "archived_on") -> List[str]:
@@ -718,50 +728,19 @@ def tombstone_delete(
     (broadcast-sized for any realistic erasure batch); the rewrite is
     one scan of the table.
     """
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
-    directory = _load_directory(table_directory)
-    entry = _entry(table, directory)
-    if "path" not in entry:
-        raise ValueError(
-            "tombstone_delete supports path-configured tables only; "
-            "metastore tables need a transactional format "
-            "(Delta/Iceberg DELETE)."
-        )
+    path, fmt = _local_table(table, table_directory, "tombstone_delete", "DELETE")
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     for c in key_cols:
         if c not in tombstones.columns:
             raise ValueError(f"Key column '{c}' missing from tombstones")
-    path = entry["path"]
-    scheme = urlparse(path).scheme
-    if scheme not in ("", "file"):
-        raise ValueError(
-            f"tombstone_delete is local-filesystem only (got scheme "
-            f"'{scheme}://'); use a transactional table format for "
-            "object-store or cluster paths."
-        )
-    if scheme == "file":
-        path = urlparse(path).path
-    fmt = entry.get("format", "parquet")
     if not os.path.exists(path):
         raise ValueError(f"table '{table}' does not exist at {path}")
-    spark = get_spark_session()
-    with _swap_write_lock(path):
-        existing = spark.read.format(fmt).load(path)
+    with _directory_swap(path, fmt, "delete") as (existing, swap):
         keys = tombstones.select(*key_cols).distinct()
         n_before = existing.count()
         n_tomb = keys.count()
-        survivors = existing.join(keys, on=key_cols, how="left_anti")
-        tmp, backup = path + "._delete_tmp", path + "._delete_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        survivors.write.mode("overwrite").format(fmt).save(tmp)
-        shutil.rmtree(backup, ignore_errors=True)
-        os.rename(path, backup)
-        os.rename(tmp, path)
-        shutil.rmtree(backup, ignore_errors=True)
-        n_after = spark.read.format(fmt).load(path).count()
+        n_after = swap(existing.join(keys, on=key_cols, how="left_anti")).count()
+    spark = get_spark_session()
     return spark.createDataFrame(
         [(n_before, n_tomb, n_before - n_after, n_after)],
         "n_before long, n_tombstones long, n_deleted long, n_after long",

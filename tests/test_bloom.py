@@ -258,39 +258,3 @@ def test_decontam_prebuilt_bloom_path(spark):
         ).collect()
     )
     assert direct == via_prebuilt
-
-
-def test_bloom_widen_inputs_identity(spark):
-    """Probe-side widening (repartition before the gram explode) must
-    not change flags or counts — bitmap membership is per-row."""
-    from hds_functions_spark.operators.bloom import (
-        bloom_decontam,
-        bloom_fp_audit,
-    )
-    from pyspark.sql import functions as F
-
-    docs = spark.createDataFrame(
-        [(i, f"w{i % 5} w{(i + 1) % 5} w{(i + 2) % 5} w{(i + 3) % 5} z{i}")
-         for i in range(30)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    ev = docs.filter(F.col("doc_id") % 6 == 0).withColumnRenamed(
-        "doc_id", "eval_id"
-    )
-    cp = docs.filter(F.col("doc_id") % 6 != 0)
-    a = sorted(map(tuple, bloom_decontam(cp, ev, ngram=4).collect()))
-    b = sorted(
-        map(
-            tuple,
-            bloom_decontam(cp, ev, ngram=4, widen_inputs=False).collect(),
-        )
-    )
-    assert a == b and a
-    a = [tuple(r) for r in bloom_fp_audit(cp, ev, ngram=4).collect()]
-    b = [
-        tuple(r)
-        for r in bloom_fp_audit(
-            cp, ev, ngram=4, widen_inputs=False
-        ).collect()
-    ]
-    assert a == b

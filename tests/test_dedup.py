@@ -829,54 +829,6 @@ def test_dedup_paragraph_pairs_classes_reachable(spark):
     assert (out.doc_a < out.doc_b).all()
 
 
-def test_exact_spans_widen_inputs_identity(spark):
-    """Single-split widening before the per-position gram explode must
-    not change any span — spans are pure functions of the corpus text."""
-    from pyspark.sql import functions as F
-
-    from hds_functions_spark.operators.dedup import (
-        exact_substring_spans,
-        exact_substring_spans_incremental,
-    )
-
-    dup = "the quick brown fox jumps over the lazy dog again and again"
-    docs = spark.createDataFrame(
-        [(i, f"doc {i} prefix {dup} suffix {i % 3}") for i in range(12)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    a = sorted(
-        map(tuple, exact_substring_spans(docs, min_len=30).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            exact_substring_spans(
-                docs, min_len=30, widen_inputs=False
-            ).collect(),
-        )
-    )
-    assert a == b and a
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    a = sorted(
-        map(
-            tuple,
-            exact_substring_spans_incremental(
-                batch, corpus, min_len=30
-            ).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            exact_substring_spans_incremental(
-                batch, corpus, min_len=30, widen_inputs=False
-            ).collect(),
-        )
-    )
-    assert a == b and a
-
-
 class TestHotBucketGrid:
     """r17 skew guard: hot LSH buckets split into an S x S cell grid
     (dedup._LSH_BUCKET_CHUNK). The pair set must be IDENTICAL with the

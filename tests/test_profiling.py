@@ -35,43 +35,3 @@ def test_profile_version_drift_contract(spark):
     assert e["n_rows_b"] == 0 and e["null_frac_b"] is None
     assert e["distinct_ratio"] == 0.0
     assert e["min_changed"] is True  # value -> NULL is a range change
-
-
-def test_ngram_novelty_widen_inputs_identity(spark):
-    """The single-split widening (round-robin repartition before the
-    shingle explode) must not change any output row — novelty is a pure
-    aggregate of (doc, gram) sets, independent of partitioning."""
-    from hds_functions_spark.operators.profiling import (
-        ngram_novelty,
-        ngram_novelty_incremental,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"a b c d e f g h{i % 3} i{i % 2} j k") for i in range(20)],
-        "doc_id long, text string",
-    ).coalesce(1)  # force the single-split shape the widen targets
-    a = sorted(map(tuple, ngram_novelty(docs, ngram=5).collect()))
-    b = sorted(
-        map(
-            tuple,
-            ngram_novelty(docs, ngram=5, widen_inputs=False).collect(),
-        )
-    )
-    assert a == b and len(a) == 20
-
-    from pyspark.sql import functions as F
-
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    a = sorted(
-        map(tuple, ngram_novelty_incremental(batch, corpus).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            ngram_novelty_incremental(
-                batch, corpus, widen_inputs=False
-            ).collect(),
-        )
-    )
-    assert a == b and len(a) == 5

@@ -264,23 +264,3 @@ def test_bootstrap_ci_drops_zero_weight_resamples(spark):
     assert row.ci_hi == pytest.approx(42.0)
     lo_rank = int(math.floor(alpha / 2 * surviving)) + 1
     assert lo_rank <= surviving
-
-
-def test_hashed_ngram_buckets_widen_inputs_identity(spark):
-    """Single-split widening before the gram explode must not change
-    any (doc, bucket, cnt) row — features are pure per-doc functions."""
-    from hds_functions_spark.operators.selection import hashed_ngram_buckets
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta w{i % 4} w{(i + 1) % 4}")
-         for i in range(15)],
-        "doc_id long, text string",
-    ).coalesce(1)
-    a = sorted(map(tuple, hashed_ngram_buckets(docs).collect()))
-    b = sorted(
-        map(
-            tuple,
-            hashed_ngram_buckets(docs, widen_inputs=False).collect(),
-        )
-    )
-    assert a == b and a
